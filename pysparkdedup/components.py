@@ -149,6 +149,15 @@ def value_component_labels(value_edges: DataFrame, vals: DataFrame,
         F.concat(F.lit("cc:"), F.col("_gmin")).alias("cluster_key"))
 
 
+def materialize(df: DataFrame, reliable: bool = False) -> DataFrame:
+    """Eagerly materialize ``df`` and truncate its lineage: cluster-durable
+    ``checkpoint()`` when ``reliable``, executor-local
+    ``localCheckpoint()`` otherwise."""
+    if reliable:
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)
+
+
 def connected_components(edges: DataFrame, a_col: str = "a", b_col: str = "b",
                          max_iter: int = 25,
                          on_nonconverged: str = "raise",
@@ -181,11 +190,6 @@ def connected_components(edges: DataFrame, a_col: str = "a", b_col: str = "b",
     if max_iter < 1:
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
 
-    def materialize(df: DataFrame) -> DataFrame:
-        if reliable:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-
     # Materialize the edge input once: the symmetric union references it
     # twice, and Spark recomputes shared subtrees (no DAG-level CSE) — for
     # LSH edges that would mean running candidate generation + verification
@@ -201,7 +205,8 @@ def connected_components(edges: DataFrame, a_col: str = "a", b_col: str = "b",
         # graphs — the checkpoint must exist anyway to survive executor
         # loss mid-fixpoint.
         obs_n = Observation(f"cc_n_edges_{uuid.uuid4().hex[:8]}")
-        edges = materialize(slim.observe(obs_n, F.count(F.lit(1)).alias("n")))
+        edges = materialize(
+            slim.observe(obs_n, F.count(F.lit(1)).alias("n")), reliable)
         n_edges = obs_n.get["n"] or 0
         if small_graph_edges > 0 and n_edges <= small_graph_edges:
             sample = edges.collect()
@@ -227,7 +232,7 @@ def connected_components(edges: DataFrame, a_col: str = "a", b_col: str = "b",
             # (iteration plans reference the edges twice per step; without
             # the checkpoint each re-plan re-optimizes the full candidate
             # lineage). Reads through the probe's partial cache.
-            edges = materialize(edges)
+            edges = materialize(edges, reliable)
 
     if sample is not None:
         url_type = edges.schema["a"].dataType
@@ -257,7 +262,8 @@ def connected_components(edges: DataFrame, a_col: str = "a", b_col: str = "b",
         .select(
             F.col("dst").alias("url"),
             F.least(F.col("dst"), F.col("nmin")).alias("label"),
-        )
+        ),
+        reliable,
     )
 
     def propagate(lbl: DataFrame) -> DataFrame:
@@ -289,7 +295,8 @@ def connected_components(edges: DataFrame, a_col: str = "a", b_col: str = "b",
             .observe(obs, F.sum(
                 (F.col("new_label") != F.col("label")).cast("long")
             ).alias("changed"))
-            .select("url", F.col("new_label").alias("label"))
+            .select("url", F.col("new_label").alias("label")),
+            reliable,
         )
         changed = obs.get["changed"] or 0  # None on an empty frame
         if changed == 0:

@@ -318,22 +318,78 @@ def _auto_n_bits(n_vectors: int, occupancy: int = TARGET_BUCKET_OCCUPANCY,
     return max(lo, min(hi, round(math.log2(n_vectors / occupancy))))
 
 
+# Pairs folded per kernel step: bounds the kernel's float64 working set to
+# O(slice x dim) however many buckets one Arrow batch carries.
+_SCORE_SLICE = 65536
+
+
+def _score_buckets(batches):
+    """mapInArrow kernel: batches of one ``list<struct<_i, _e>>`` column,
+    one id-sorted bucket per row -> (a, b, cosine) for every within-bucket
+    pair with a != b, in slices of at most _SCORE_SLICE pairs."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    for batch in batches:
+        ms = batch.column(0)
+        members = ms.flatten()
+        if not len(members):
+            continue
+        offs = np.asarray(ms.offsets, dtype=np.int64)
+        lens = np.diff(offs)
+        starts = offs[:-1] - offs[0]  # offsets are absolute on slices
+        ids, embs = members.field(0), members.field(1)
+        elens = pc.list_value_length(embs).fill_null(0).to_numpy()
+        counts = np.bincount(elens)
+        counts[0] = 0  # null and empty vectors never set the batch's dim
+        dim = int(counts.argmax())
+        bad = np.flatnonzero((elens != dim) | (elens == 0))
+        if len(bad):
+            # A null or ragged vector would fold to a NaN cosine that the
+            # threshold filter then drops without a trace.
+            raise ValueError(
+                f"embedding of id {ids[int(bad[0])]} is null, empty or not "
+                f"{dim}-dimensional like the rest of its batch")
+        mat = np.asarray(embs.flatten()).reshape(
+            len(members), dim).astype(np.float64)
+        ai_all, bi_all = [], []
+        for m in np.unique(lens[lens >= 2]):
+            ti, tj = np.triu_indices(int(m), 1)
+            bstarts = starts[lens == m]
+            ai_all.append((bstarts[:, None] + ti[None, :]).ravel())
+            bi_all.append((bstarts[:, None] + tj[None, :]).ravel())
+        if not ai_all:
+            continue
+        ai_all, bi_all = np.concatenate(ai_all), np.concatenate(bi_all)
+        for lo in range(0, len(ai_all), _SCORE_SLICE):
+            ai = ai_all[lo:lo + _SCORE_SLICE]
+            bi = bi_all[lo:lo + _SCORE_SLICE]
+            # A duplicated id pairs with itself: never an edge.
+            keep = pc.not_equal(ids.take(ai), ids.take(bi)).to_numpy(
+                zero_copy_only=False)
+            ai, bi = ai[keep], bi[keep]
+            yield pa.RecordBatch.from_arrays(
+                [ids.take(ai), ids.take(bi),
+                 pa.array(_fold_mats(mat[ai], mat[bi]))],
+                names=["a", "b", "cosine"])
+
+
 def _bucket_scored_edges(members: DataFrame, id_col: str,
                          emb_col: str) -> DataFrame:
     """(a, b, cosine) for every within-bucket pair of ``members``
     (id, emb, table_id, bucket) — pairing and exact-cosine scoring fused
     into ONE aggregation + mapInArrow, so the embedding payload crosses
     the Python boundary once per BUCKET MEMBER instead of twice per
-    CANDIDATE PAIR (the former pairs -> join(ea) -> join(eb) chain ships
-    each vector once per pair it appears in; at the target occupancy of
-    ~32 that is ~16 ships per vector per table vs exactly 1 here).
+    CANDIDATE PAIR (the pairs -> join(ea) -> join(eb) chain of
+    ``cosine_pairs_exact`` ships each vector once per pair it appears in;
+    at the target occupancy of ~32 that is ~16 ships per vector per table
+    vs exactly 1 here).
 
-    Members are sorted by id inside the bucket (JVM sort_array; ids are
-    unique so the embedding tiebreak is never reached), giving a < b pair
-    order — identical pair canonicalization to pairs.bucket_pairs. The
-    cosine is the same ordered per-dimension left fold as
-    ``cosine_pairs_exact`` (_fold_mats over float64 upcasts of the same
-    float32 values), so scores are bit-identical to the join path."""
+    Members are sorted by id inside the bucket (JVM sort_array), giving
+    a < b pair order — identical pair canonicalization to
+    pairs.bucket_pairs. The cosine is the same ordered per-dimension left
+    fold as ``cosine_pairs_exact`` (_fold_mats over float64 upcasts of the
+    same float32 values), so scores are bit-identical to the join path."""
     st = F.struct(F.col(id_col).alias("_i"), F.col(emb_col).alias("_e"))
     grouped = (
         members.groupBy("table_id", "bucket")
@@ -346,58 +402,7 @@ def _bucket_scored_edges(members: DataFrame, id_col: str,
         T.StructField("b", id_type, True),
         T.StructField("cosine", T.DoubleType(), True),
     ])
-
-    def score(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            ms = batch.column(0)
-            if isinstance(ms, pa.ChunkedArray):  # defensive; batches are flat
-                ms = ms.combine_chunks()
-            import pyarrow.compute as pc
-
-            offs = np.asarray(ms.offsets, dtype=np.int64)
-            lens = np.diff(offs)
-            starts = offs[:-1] - offs[0]  # offsets are absolute on slices
-            st_arr = ms.flatten()
-            ids = st_arr.field(0)
-            embs = st_arr.field(1)
-            if len(st_arr) == 0:
-                continue
-            elens = np.asarray(pc.list_value_length(embs))
-            dim = int(elens[0]) if len(elens) else 0
-            if embs.null_count == 0 and dim > 0 and (elens == dim).all():
-                mat = np.asarray(embs.flatten()).reshape(
-                    len(st_arr), dim).astype(np.float64)
-            else:
-                # Dirty vectors cannot occur via hyperplane_buckets (its
-                # vstack would have failed first); null-pad defensively so
-                # one bad row errors per-bucket, not per-task.
-                mat = np.zeros((len(st_arr), max(dim, 1)), np.float64)
-                for i, v in enumerate(embs.to_pylist()):
-                    if v is not None and len(v) == mat.shape[1]:
-                        mat[i] = v
-            ai_all, bi_all = [], []
-            for m in np.unique(lens):
-                if m < 2:
-                    continue
-                ti, tj = np.triu_indices(int(m), 1)
-                bstarts = starts[lens == m]
-                ai_all.append((bstarts[:, None] + ti[None, :]).ravel())
-                bi_all.append((bstarts[:, None] + tj[None, :]).ravel())
-            if not ai_all:
-                continue
-            ai = np.concatenate(ai_all)
-            bi = np.concatenate(bi_all)
-            cos = _fold_mats(mat[ai], mat[bi])
-            yield pa.RecordBatch.from_arrays(
-                [ids.take(pa.array(ai)), ids.take(pa.array(bi)),
-                 pa.array(cos)],
-                names=["a", "b", "cosine"])
-
-    return grouped.mapInArrow(score, schema=schema)
+    return grouped.mapInArrow(_score_buckets, schema=schema)
 
 
 def embedding_dup_edges(emb: DataFrame, threshold: float = 0.95,
@@ -415,65 +420,41 @@ def embedding_dup_edges(emb: DataFrame, threshold: float = 0.95,
     stay deterministic; pass an explicit ``n_bits`` to pin the layout
     (the oracle queries do — their DuckDB replay embeds it).
 
-    Sign-LSH buckets generate candidates (skew-aware via pairs.bucket_pairs),
-    exact double-precision cosine verifies. Feed components.connected_components
-    for embedding-level dup clusters — the vector analog of MinHash-LSH.
+    Sign-LSH buckets generate candidates, exact double-precision cosine
+    verifies. Feed components.connected_components for embedding-level dup
+    clusters — the vector analog of MinHash-LSH.
 
-    The scored frame is persisted BEFORE the threshold filter: the cosine
-    is THREE aggregate-over-zip_with higher-order expressions (dot + two
-    norms — CodegenFallback, interpreted), and filtering directly on it
-    inlines all of them into the predicate next to the projected column —
-    2x evaluation per candidate pair (same mechanism as minhash_edges /
-    the curate pass). The persist boundary evaluates once into a slim
-    (a, b, cosine) cache."""
+    Skew is gated per bucket by pairs.split_buckets: every cold bucket
+    (<= ``max_bucket`` members) is paired and scored by the fused per-bucket
+    kernel (decide with small rows, move heavy bytes once); only
+    the hot buckets' salted-star pairs take the id-keyed embedding joins of
+    ``cosine_pairs_exact``. Both score with the same fold, so a pair is
+    bit-identical whichever branch emits it."""
     from pyspark import StorageLevel
 
     from .cache import track
-    from .pairs import bucket_pairs
+    from .pairs import split_buckets
 
     if n_bits is None:
         n_bits = _auto_n_bits(emb.select(id_col).count())
     # Slim (id, table, bucket) rows persisted once: they feed the size
-    # aggregation, the hot-bucket probe AND the member join below, so the
-    # Python bucketing kernel runs exactly once (it used to run twice —
-    # once for the probe, once for candidate generation).
+    # aggregation, the hot-bucket probe AND both branches below, so the
+    # Python bucketing kernel runs exactly once.
     buckets = track(
         hyperplane_buckets(emb, n_tables, n_bits, seed=seed,
                            id_col=id_col, emb_col=emb_col)
         .persist(StorageLevel.MEMORY_AND_DISK))
-    sizes = track(
-        buckets.groupBy("table_id", "bucket")
-        .agg(F.count(F.lit(1)).alias("_bsize"))
-        .filter(F.col("_bsize") >= 2)
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    hot_exists = sizes.filter(F.col("_bsize") > max_bucket).limit(1).count() > 0
-    if hot_exists:
-        # Pathological value-skew (a bucket past the cap): fall back to the
-        # salted-star machinery wholesale — rare by construction (auto
-        # banding targets ~32 per bucket), and the star pairs need the
-        # id-keyed embedding join anyway. Result-identical to the fused
-        # path on the cold buckets.
-        cand = bucket_pairs(
-            buckets.select("table_id", "bucket", F.col(id_col).alias("url")),
-            ["table_id", "bucket"], id_col="url", cap=max_bucket,
-        ).dropDuplicates(["a", "b"])
-        scored = track(
-            cosine_pairs_exact(cand, emb, id_col=id_col, emb_col=emb_col)
-            .persist(StorageLevel.MEMORY_AND_DISK))
-        return scored.filter(F.col("cosine") >= threshold)
-    # Fused path (guide §8: decide with small rows, move heavy bytes once):
-    # drop singleton buckets on the SLIM rows, attach each vector once by
-    # id (AQE broadcasts the embedding frame when it fits; SHJ otherwise),
-    # then pair + exact-cosine inside one per-bucket aggregation. A pair
-    # colliding in several tables is scored per collision (identical fold,
-    # identical value) and canonicalized by dropDuplicates — same contract
-    # as the join path, minus two per-pair embedding joins and the
-    # candidate-pair exchange.
-    members = buckets.join(
-        sizes.drop("_bsize").hint("shuffle_hash"),
-        on=["table_id", "bucket"], how="inner",
-    ).join(emb.select(id_col, emb_col), id_col)
-    scored = _bucket_scored_edges(members, id_col, emb_col)
+    cold_rows, star_pairs = split_buckets(
+        buckets, ["table_id", "bucket"], id_col, cap=max_bucket)
+    # Attach each cold member's vector once by id (AQE broadcasts the
+    # embedding frame when it fits; SHJ otherwise). A pair colliding in
+    # several tables is scored per collision (identical fold, identical
+    # value) and canonicalized by dropDuplicates.
+    scored = _bucket_scored_edges(
+        cold_rows.join(emb.select(id_col, emb_col), id_col), id_col, emb_col)
+    if star_pairs is not None:
+        scored = scored.unionByName(cosine_pairs_exact(
+            star_pairs, emb, id_col=id_col, emb_col=emb_col))
     # Threshold BEFORE the (a, b) canonicalization: a pair colliding in k
     # tables carries k identical fold values, so filtering first is
     # result-identical and the dedup exchange moves only the survivors

@@ -49,6 +49,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .components import materialize
 from .config import DedupConfig
 
 TIER_EXACT = "exact"
@@ -170,11 +171,6 @@ def tiered_dedup(
 
     cfg = cfg or DedupConfig()
 
-    def materialize(df: DataFrame) -> DataFrame:
-        if reliable:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-
     def stage(name: str) -> None:
         if on_stage is not None:
             on_stage(name)
@@ -184,13 +180,14 @@ def tiered_dedup(
                           if c not in (id_col, text_col)])
 
     # Tier 1: exact. Losers leave the pool before any shingle is hashed.
-    l_exact = materialize(_exact_losers(pages, cfg, id_col, text_col))
+    l_exact = materialize(
+        _exact_losers(pages, cfg, id_col, text_col), reliable)
     stage(TIER_EXACT)
     surv1 = base.join(l_exact.select("url"), "url", "left_anti")
 
     # Tier 2: near-dup over exact survivors only.
     near_clusters = minhash_clusters(surv1, cfg)
-    l_near = materialize(_cluster_losers(near_clusters))
+    l_near = materialize(_cluster_losers(near_clusters), reliable)
     stage(TIER_NEAR)
     surv2 = surv1.join(l_near.select("url"), "url", "left_anti")
 
@@ -212,11 +209,11 @@ def tiered_dedup(
         # frame is slim: id + vector, ~1-2% of corpus bytes at web scale.
         sub = emb.withColumn("url", F.col(emb_id_col).cast("string")).join(
             surv2.select("url"), "url").drop("url")
-        sub = (materialize(sub) if reliable
+        sub = (materialize(sub, reliable=True) if reliable
                else sub.persist(StorageLevel.MEMORY_AND_DISK))
         sem_clusters = embedding_dup_clusters(
             sub, emb_threshold, id_col=emb_id_col, **(emb_kwargs or {}))
-        l_sem = materialize(_cluster_losers(sem_clusters))
+        l_sem = materialize(_cluster_losers(sem_clusters), reliable)
         if not reliable:
             # l_sem is materialized; nothing lazy reads sub any more.
             sub.unpersist(blocking=False)

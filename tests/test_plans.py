@@ -97,6 +97,21 @@ def test_hot_bucket_broadcast(spark):
     assert "BroadcastExchange" in plan
 
 
+def test_embedding_dup_edges_cold_single_fused_scorer(spark):
+    """With every bucket under max_bucket, embedding_dup_edges scores all
+    pairs in ONE fused mapInArrow node: no second Python scorer and no
+    cosine_pairs_exact embedding join."""
+    from pysparkdedup.cache import cache_scope
+    from pysparkdedup.similarity import embedding_dup_edges
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    with cache_scope():
+        plan = plan_of(embedding_dup_edges(emb, n_tables=6, n_bits=4))
+    tree = plan.split("\n\n")[0]
+    assert tree.count("MapInArrow") == 1, plan
+    assert "_ea" not in plan, plan
+
+
 def test_containment_no_cartesian(spark, pages_factory):
     """containment_edges candidates come from the anchor equi-join — the plan
     must contain no cartesian/nested-loop join in either verify mode."""

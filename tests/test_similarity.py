@@ -290,41 +290,52 @@ def test_cosine_pairs_exact_tolerates_dirty_embeddings(spark, emb):
 
 
 def test_fused_bucket_scoring_matches_join_path(spark, emb):
-    """The r8 fused cold path (per-bucket pairing + mapInArrow cosine) must
-    emit exactly the pairs and bit-identical cosines of the former
-    bucket_pairs -> dropDuplicates -> cosine_pairs_exact join path."""
+    """The per-bucket gate (cold buckets through the fused mapInArrow
+    scorer, hot buckets' star pairs through cosine_pairs_exact) must emit
+    exactly the pairs and bit-identical cosines of the reference
+    bucket_pairs -> dropDuplicates -> cosine_pairs_exact join path — with
+    every bucket cold, with a mix of hot and cold buckets, and with every
+    bucket hot."""
     from pysparkdedup.cache import cache_scope
     from pysparkdedup.pairs import bucket_pairs
     from pysparkdedup.similarity import (
         embedding_dup_edges, hyperplane_buckets)
 
-    with cache_scope():
-        got = {
-            (r["a"], r["b"]): r["cosine"]
-            for r in embedding_dup_edges(
-                emb, threshold=-1.0, n_tables=6, n_bits=4).collect()
-        }
-    with cache_scope():
-        buckets = hyperplane_buckets(emb, 6, 4)
-        cand = bucket_pairs(
-            buckets.select("table_id", "bucket",
-                           F.col("vec_id").alias("url")),
-            ["table_id", "bucket"], id_col="url", cap=256,
-        ).dropDuplicates(["a", "b"])
-        want = {
-            (r["a"], r["b"]): r["cosine"]
-            for r in cosine_pairs_exact(cand, emb).collect()
-        }
-    assert set(got) == set(want)
-    assert got  # non-trivial corpus: buckets must collide
-    for k in want:
-        assert got[k] == want[k]  # bit-identical fold
+    # (n_tables, n_bits, max_bucket); buckets hold 17-44 vectors at n_bits=4
+    cases = {"cold": (6, 4, 256), "mixed": (6, 4, 32), "hot": (2, 1, 4)}
+    for kind, (n_tables, n_bits, cap) in cases.items():
+        with cache_scope():
+            got = {
+                (r["a"], r["b"]): r["cosine"]
+                for r in embedding_dup_edges(
+                    emb, threshold=-1.0, n_tables=n_tables, n_bits=n_bits,
+                    max_bucket=cap).collect()
+            }
+        with cache_scope():
+            buckets = hyperplane_buckets(emb, n_tables, n_bits)
+            hot = [r["count"] > cap for r in
+                   buckets.groupBy("table_id", "bucket").count().collect()]
+            assert {"cold": not any(hot), "mixed": 0 < sum(hot) < len(hot),
+                    "hot": all(hot)}[kind], (kind, hot)
+            cand = bucket_pairs(
+                buckets.select("table_id", "bucket",
+                               F.col("vec_id").alias("url")),
+                ["table_id", "bucket"], id_col="url", cap=cap,
+            ).dropDuplicates(["a", "b"])
+            want = {
+                (r["a"], r["b"]): r["cosine"]
+                for r in cosine_pairs_exact(cand, emb).collect()
+            }
+        assert set(got) == set(want), kind
+        assert got  # non-trivial corpus: buckets must collide
+        for k in want:
+            assert got[k] == want[k], kind  # bit-identical fold
 
 
 def test_fused_bucket_scoring_hot_fallback_consistent(spark, emb):
-    """With a cap small enough to force the hot fallback, the edge set must
-    still be the salted-star degrade of bucket_pairs (pinned behavior) and
-    every emitted cosine must stay the exact fold value."""
+    """With a cap small enough that every bucket is hot, the edges are the
+    salted-star pairs of pairs.split_buckets scored by cosine_pairs_exact,
+    and every emitted cosine must stay the exact fold value."""
     from pysparkdedup.cache import cache_scope
     from pysparkdedup.similarity import embedding_dup_edges
 
@@ -341,3 +352,80 @@ def test_fused_bucket_scoring_hot_fallback_consistent(spark, emb):
         for d in range(len(a)):  # same ordered fold
             dot += a[d] * b[d]; na += a[d] * a[d]; nb += b[d] * b[d]
         assert r["cosine"] == dot / (na ** 0.5 * nb ** 0.5)
+
+
+def test_bucket_kernel_scores_in_bounded_slices():
+    """One Arrow batch holding more pairs than one kernel slice: every
+    yielded batch stays within _SCORE_SLICE pairs (the kernel's memory is
+    bounded by the slice, not by the batch's buckets x occupancy^2), and
+    the slices together equal one unsliced _fold_mats pass."""
+    import pyarrow as pa
+
+    from pysparkdedup.similarity import (
+        _SCORE_SLICE, _fold_mats, _score_buckets)
+
+    sizes = [300, 1, 200, 250]  # 95,875 pairs
+    n, dim = sum(sizes), 8
+    vecs = np.random.default_rng(7).standard_normal((n, dim)).astype(
+        np.float32)
+    members = pa.StructArray.from_arrays(
+        [pa.array(np.arange(n, dtype=np.int64)),
+         pa.ListArray.from_arrays(
+             pa.array(np.arange(0, n * dim + 1, dim, dtype=np.int32)),
+             pa.array(vecs.ravel()))],
+        names=["_i", "_e"])
+    offsets = np.concatenate([[0], np.cumsum(sizes)]).astype(np.int32)
+    batch = pa.RecordBatch.from_arrays(
+        [pa.ListArray.from_arrays(pa.array(offsets), members)],
+        names=["_ms"])
+
+    out = list(_score_buckets(iter([batch])))
+    assert len(out) > 1
+    assert all(b.num_rows <= _SCORE_SLICE for b in out)
+    got = pa.Table.from_batches(out).to_pydict()
+
+    ai, bi = [], []
+    for start, m in zip(offsets[:-1], sizes):
+        ti, tj = np.triu_indices(m, 1)
+        ai.append(start + ti)
+        bi.append(start + tj)
+    ai, bi = np.concatenate(ai), np.concatenate(bi)
+    mat = vecs.astype(np.float64)
+    want = dict(zip(zip(ai.tolist(), bi.tolist()),
+                    _fold_mats(mat[ai], mat[bi]).tolist()))
+    assert len(got["a"]) == len(want)
+    assert dict(zip(zip(got["a"], got["b"]), got["cosine"])) == want
+
+
+def test_embedding_dup_edges_rejects_short_vector(spark, emb):
+    """A vector shorter than the rest, alone in its hyperplane_buckets batch
+    (so that kernel's vstack cannot catch it), must fail the fused scorer
+    loudly: zero-padding it would fold to NaN cosines that the threshold
+    filter drops without a trace."""
+    from pyspark.errors import PythonException
+
+    from pysparkdedup.cache import cache_scope
+    from pysparkdedup.similarity import embedding_dup_edges
+
+    short = spark.createDataFrame(
+        [(9001, [1.0, 2.0, 3.0])], "vec_id long, embedding array<float>")
+    dirty = emb.select("vec_id", "embedding").unionByName(short)
+    with cache_scope(), pytest.raises(PythonException,
+                                      match="embedding of id 9001"):
+        embedding_dup_edges(dirty, threshold=-1.0, n_tables=2, n_bits=2,
+                            max_bucket=1000).collect()
+
+
+def test_embedding_dup_edges_duplicate_id_no_self_edge(spark, emb):
+    """A vec_id present twice meets itself in its buckets; the kernel must
+    not emit that (x, x) self-edge."""
+    from pysparkdedup.cache import cache_scope
+    from pysparkdedup.similarity import embedding_dup_edges
+
+    slim = emb.select("vec_id", "embedding")
+    dup = slim.unionByName(slim.filter(F.col("vec_id") == 0))
+    with cache_scope():
+        rows = embedding_dup_edges(dup, threshold=-1.0, n_tables=2,
+                                   n_bits=4).collect()
+    assert rows
+    assert all(r["a"] != r["b"] for r in rows)

@@ -109,17 +109,17 @@ def job_image(spark, sf_dir):
 
 
 def job_tiered(spark, sf_dir):
-    """Semantic-tier internals: survivor-emb join / buckets+pairs / cosine
-    verify / components / losers."""
+    """Semantic-tier internals: survivor-emb join / embedding dup edges /
+    components / losers."""
     from pyspark import StorageLevel
     from pyspark.sql import functions as F
 
     from __spark_entry__ import _docs_as_pages
+    from pysparkdedup.cache import cache_scope
     from pysparkdedup.components import connected_components
     from pysparkdedup.config import DedupConfig
     from pysparkdedup.minhash import minhash_clusters
-    from pysparkdedup.pairs import bucket_pairs
-    from pysparkdedup.similarity import cosine_pairs_exact, hyperplane_buckets
+    from pysparkdedup.similarity import embedding_dup_edges
     from pysparkdedup.tiers import _cluster_losers, _exact_losers
 
     cfg = DedupConfig(strategies=("select-newest", "select-one"))
@@ -139,25 +139,18 @@ def job_tiered(spark, sf_dir):
     sub = emb.withColumn("url", F.col("vec_id").cast("string")).join(
         surv2.select("url"), "url").drop("url").localCheckpoint(eager=True)
     lap("emb_join_ckpt")
-    buckets = hyperplane_buckets(sub, 16, 6, id_col="vec_id")
-    cand = bucket_pairs(
-        buckets.select("table_id", "bucket", F.col("vec_id").alias("url")),
-        ["table_id", "bucket"], id_col="url", cap=256,
-    ).dropDuplicates(["a", "b"]).persist(StorageLevel.MEMORY_AND_DISK)
-    cand.count()
-    lap("sem_buckets_pairs")
-    scored = cosine_pairs_exact(cand, sub, id_col="vec_id").persist(
-        StorageLevel.MEMORY_AND_DISK)
-    scored.count()
-    lap("sem_cosine")
-    edges = scored.filter(F.col("cosine") >= 0.35).select(
-        F.col("a").cast("string").alias("a"),
-        F.col("b").cast("string").alias("b"))
+    with cache_scope():
+        scored = embedding_dup_edges(
+            sub, 0.35, n_tables=16, n_bits=6, id_col="vec_id",
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+        scored.count()
+    lap("sem_edges")
+    edges = scored.select(F.col("a").cast("string").alias("a"),
+                          F.col("b").cast("string").alias("b"))
     sem = connected_components(edges)
-    l_sem = _cluster_losers(sem).localCheckpoint(eager=True)
+    _cluster_losers(sem).localCheckpoint(eager=True)
     lap("sem_components_losers")
-    for df in (cand, scored):
-        df.unpersist()
+    scored.unpersist()
     pages.unpersist()
     return st
 

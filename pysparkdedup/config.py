@@ -4,14 +4,14 @@ Mirrors the reference's ``Config`` TypedDict (ref cli.py:571-638) and the cache
 settings-fingerprint that invalidates stale signatures when dedup semantics
 change (ref cache.py:55-61, 103-109): for us the fingerprint covers exactly the
 settings that change signatures — normalization flags, shingle size, MinHash
-permutations/bands, SimHash bits.
+permutations/bands (SimHash is fixed at 64 bits).
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import dataclass, field, asdict
+from dataclasses import dataclass, asdict
 
 
 # Body/content hashing modes, mirroring BodyHasher (ref deduplicate.py:164-178):
@@ -67,8 +67,7 @@ class DedupConfig:
     # the scale analog of the reference's set-level short-circuit
     # (deduplicate.py:292-301): mega-clusters cost O(n), never O(n^2).
 
-    # --- near-dup: SimHash -------------------------------------------------
-    simhash_bits: int = 64
+    # --- near-dup: SimHash (fixed at 64 bits) -----------------------------
     hamming_threshold: int = 3  # max Hamming distance for candidates
 
     # --- misc --------------------------------------------------------------
@@ -96,7 +95,6 @@ class DedupConfig:
             "hash_bits": self.hash_bits,
             "shingle_size": self.shingle_size,
             "num_perm": self.num_perm,
-            "simhash_bits": self.simhash_bits,
             "seed": self.seed,
             "min_text_chars": self.min_text_chars,
             # stale-key semantics: either change makes old (url, stale_key)

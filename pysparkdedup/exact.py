@@ -57,17 +57,3 @@ def with_cluster_key(df: DataFrame, key_col: str = "content_hash") -> DataFrame:
         ),
     )
 
-
-def exact_group_sizes(df: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """(content_hash, n_docs, min/max n_bytes) per group — the reference's
-    per-set extremes (ref deduplicate.py:222-268) as one hash aggregation."""
-    ann = annotate(df, cfg)
-    return (
-        ann.filter(~F.col("rejected"))
-        .groupBy("content_hash")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.min("n_bytes").alias("min_bytes"),
-            F.max("n_bytes").alias("max_bytes"),
-        )
-    )

@@ -32,7 +32,6 @@ from __future__ import annotations
 
 from difflib import unified_diff
 from itertools import combinations
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame

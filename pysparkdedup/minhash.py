@@ -28,7 +28,6 @@ exact in uint64 arithmetic.
 from __future__ import annotations
 
 from collections.abc import Iterator
-from hashlib import blake2b
 
 import numpy as np
 import pandas as pd

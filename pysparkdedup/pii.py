@@ -22,7 +22,7 @@ redaction add zero shuffles; ``pii_summary`` is a single partial-aggregated
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # Ordered: redaction applies patterns in THIS order (an oracle replaying the
@@ -41,15 +41,6 @@ PII_PATTERNS: dict[str, str] = {
     "phone": r"\+\d{1,3}[ -]\d(?:[\d ()-]{5,12}\d)",
     "card": r"\b\d{4}(?:[ -]\d{4}){3}\b",
 }
-
-
-def pii_count(kind: str, text_col: str = "text") -> Column:
-    """Raw match count of ONE PII kind over the unredacted text (JVM
-    regexp_count). NOTE: raw per-kind counts may overlap on pathological
-    inputs (see PII_PATTERNS); for audit numbers that equal what redact_pii
-    actually replaces, use with_pii_counts."""
-    return F.regexp_count(
-        F.coalesce(F.col(text_col), F.lit("")), F.lit(PII_PATTERNS[kind]))
 
 
 def with_pii_counts(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -49,20 +49,6 @@ def tokens_expr(text_col: str = "text") -> Column:
     )
 
 
-def grams_expr(tokens: Column, n: int) -> Column:
-    """All (overlapping) word n-grams of a token array, space-joined.
-
-    Guarded for short docs: ``sequence(1, 0)`` in Spark DESCENDS ([1, 0]),
-    so the <n-token case must return an empty array explicitly."""
-    return F.when(
-        F.size(tokens) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(tokens) - F.lit(n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(tokens, i, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def with_chunk_lines(
     df: DataFrame,
     tokens_per_line: int = 10,

@@ -14,7 +14,6 @@ hashing (memoized blake2b), per-doc unpacked-bit vote accumulation in numpy.
 from __future__ import annotations
 
 from collections.abc import Iterator
-from hashlib import blake2b
 
 import numpy as np
 import pandas as pd
@@ -39,17 +38,6 @@ def _le64(arr: np.ndarray) -> np.ndarray:
     import sys
 
     return arr if sys.byteorder == "little" else arr.byteswap()
-
-
-def _simhash_of_tokens(tok_hashes: np.ndarray, counts: np.ndarray) -> int:
-    bits = np.unpackbits(_le64(tok_hashes).view(np.uint8).reshape(-1, 8),
-                         axis=1,
-                         bitorder="little")  # (t, 64), bit j of each uint64
-    votes = ((bits.astype(np.int64) * 2 - 1) * counts[:, None]).sum(axis=0)
-    out_bits = (votes > 0).astype(np.uint8)
-    packed = _le64(
-        np.packbits(out_bits, bitorder="little").view(np.uint64))[0]
-    return int(packed.astype(np.int64))  # two's-complement into Spark LongType
 
 
 def simhash_signatures(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -14,9 +14,9 @@ Two paths over an ``array<float>`` embedding column:
   centroids (``ivf_centroids``), queries probe ``nprobe`` lists; recall is
   tunable with n_list/nprobe and candidates are bounded by list sizes.
 
-Also ``cosine_pairs_exact`` — column-algebra cosine between explicit id pairs
-(used by the embedding near-dup detector and the DuckDB oracle: deterministic
-left-fold sum, double precision end to end).
+Also ``cosine_pairs_exact`` — exact cosine between explicit id pairs (used by
+the embedding near-dup detector and the DuckDB oracle: deterministic left-fold
+sum, double precision end to end).
 """
 
 from __future__ import annotations
@@ -63,6 +63,47 @@ def _fold_mats(ea: np.ndarray, eb: np.ndarray) -> np.ndarray:
     return dot / (np.sqrt(na) * np.sqrt(nb))
 
 
+def _vectors(ids, embs) -> np.ndarray:
+    """(n, dim) float64 matrix of an Arrow ``list<float>`` column whose rows
+    belong to ``ids``; dim is the column's most common non-zero length.
+
+    A null, empty or ragged vector would fold to a NaN cosine that the
+    threshold filter then drops without a trace, so it raises ValueError
+    naming its id instead. A clean list column is one contiguous values
+    buffer, so it reshapes without per-row work."""
+    import pyarrow.compute as pc
+
+    elens = pc.list_value_length(embs).fill_null(0).to_numpy()
+    counts = np.bincount(elens, minlength=1)
+    counts[0] = 0  # null and empty vectors never set the dim
+    dim = int(counts.argmax())
+    bad = np.flatnonzero((elens != dim) | (elens == 0))
+    if len(bad):
+        raise ValueError(
+            f"embedding of id {ids[int(bad[0])]} is null, empty or not "
+            f"{dim}-dimensional like the rest of its batch")
+    return np.asarray(embs.flatten()).reshape(
+        len(embs), dim).astype(np.float64)
+
+
+def _score_pairs(batches):
+    """mapInArrow kernel: (a, b, a's vector, b's vector) rows ->
+    (a, b, cosine)."""
+    import pyarrow as pa
+
+    for batch in batches:
+        if not batch.num_rows:
+            continue
+        a, b = batch.column(0), batch.column(1)
+        ea, eb = _vectors(a, batch.column(2)), _vectors(b, batch.column(3))
+        if ea.shape != eb.shape:
+            raise ValueError(
+                f"embedding of id {b[0]} is not {ea.shape[1]}-dimensional "
+                f"like that of id {a[0]}")
+        yield pa.RecordBatch.from_arrays(
+            [a, b, pa.array(_fold_mats(ea, eb))], names=["a", "b", "cosine"])
+
+
 def cosine_pairs_exact(pairs: DataFrame, emb: DataFrame,
                        id_col: str = "vec_id",
                        emb_col: str = "embedding") -> DataFrame:
@@ -78,78 +119,19 @@ def cosine_pairs_exact(pairs: DataFrame, emb: DataFrame,
     per-dimension left fold (``acc += a[:, d] * b[:, d]`` — same
     operation order, same IEEE doubles; the same trick hyperplane_buckets
     uses instead of a BLAS matmul, whose pairwise-summation order is
-    unspecified)."""
-    a_type = pairs.schema["a"].dataType
-    b_type = pairs.schema["b"].dataType
+    unspecified). A null, empty or ragged vector raises ValueError, as in
+    the fused bucket kernel."""
     schema = T.StructType([
-        T.StructField("a", a_type, True),
-        T.StructField("b", b_type, True),
+        T.StructField("a", pairs.schema["a"].dataType, True),
+        T.StructField("b", pairs.schema["b"].dataType, True),
         T.StructField("cosine", T.DoubleType(), True),
     ])
-
-    def _flat(col, n_rows: int):
-        """(n_rows, dim) float64 view of a clean Arrow list<float> column,
-        or None when the column is dirty (nulls / ragged lengths). A list
-        column is one contiguous values buffer plus offsets, so a clean
-        batch reshapes WITHOUT any per-row work — no 10^5-element object
-        arrays, no vstack."""
-        import pyarrow.compute as pc
-
-        if col.null_count or n_rows == 0:
-            return None
-        lens = np.asarray(pc.list_value_length(col))
-        if (lens != lens[0]).any() or lens[0] == 0:
-            return None
-        flat = np.asarray(col.flatten())
-        if flat.size != n_rows * int(lens[0]):
-            return None
-        return flat.reshape(n_rows, int(lens[0])).astype(np.float64)
-
-    def score(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            n = batch.num_rows
-            if not n:
-                continue
-            ea = _flat(batch.column(2), n)
-            eb = _flat(batch.column(3), n)
-            if ea is not None and eb is not None and ea.shape == eb.shape:
-                cos = _fold_mats(ea, eb)
-                yield pa.RecordBatch.from_arrays(
-                    [batch.column(0), batch.column(1), pa.array(cos)],
-                    names=["a", "b", "cosine"])
-                continue
-            # Dirty batch: a null or ragged embedding. cosine_col's column
-            # algebra yields a null cosine for such a pair (zip_with
-            # null-pads, aggregate propagates null) and the caller's
-            # threshold filter drops it — reproduce that: drop pairs with
-            # a missing side or mismatched lengths, score the rest grouped
-            # by (shared) length. One dirty row must not abort a 100-TB job.
-            pdf = batch.to_pandas()
-            lens_a = np.fromiter(
-                (len(v) if v is not None else -1
-                 for v in pdf["_ea"].to_numpy()), np.int64, n)
-            lens_b = np.fromiter(
-                (len(v) if v is not None else -1
-                 for v in pdf["_eb"].to_numpy()), np.int64, n)
-            keep = (lens_a > 0) & (lens_a == lens_b)
-            for length in np.unique(lens_a[keep]):
-                sub = pdf[keep & (lens_a == length)]
-                cos = _fold_mats(
-                    np.vstack(sub["_ea"].to_numpy()).astype(np.float64),
-                    np.vstack(sub["_eb"].to_numpy()).astype(np.float64))
-                yield pa.RecordBatch.from_pandas(
-                    pd.DataFrame({"a": sub["a"], "b": sub["b"],
-                                  "cosine": cos}),
-                    preserve_index=False)
-
     ea = emb.select(F.col(id_col).alias("a"), F.col(emb_col).alias("_ea"))
     eb = emb.select(F.col(id_col).alias("b"), F.col(emb_col).alias("_eb"))
     return (
         pairs.join(ea, "a").join(eb, "b")
         .select("a", "b", "_ea", "_eb")
-        .mapInArrow(score, schema=schema)
+        .mapInArrow(_score_pairs, schema=schema)
     )
 
 
@@ -338,20 +320,8 @@ def _score_buckets(batches):
         offs = np.asarray(ms.offsets, dtype=np.int64)
         lens = np.diff(offs)
         starts = offs[:-1] - offs[0]  # offsets are absolute on slices
-        ids, embs = members.field(0), members.field(1)
-        elens = pc.list_value_length(embs).fill_null(0).to_numpy()
-        counts = np.bincount(elens)
-        counts[0] = 0  # null and empty vectors never set the batch's dim
-        dim = int(counts.argmax())
-        bad = np.flatnonzero((elens != dim) | (elens == 0))
-        if len(bad):
-            # A null or ragged vector would fold to a NaN cosine that the
-            # threshold filter then drops without a trace.
-            raise ValueError(
-                f"embedding of id {ids[int(bad[0])]} is null, empty or not "
-                f"{dim}-dimensional like the rest of its batch")
-        mat = np.asarray(embs.flatten()).reshape(
-            len(members), dim).astype(np.float64)
+        ids = members.field(0)
+        mat = _vectors(ids, members.field(1))
         ai_all, bi_all = [], []
         for m in np.unique(lens[lens >= 2]):
             ti, tj = np.triu_indices(int(m), 1)

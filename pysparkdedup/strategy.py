@@ -34,8 +34,6 @@ N-vs-4N scaling equivalence check.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -83,12 +81,6 @@ def resolve_strategies(names: tuple[str, ...] | list[str],
         if canonical not in out:
             out.append(canonical)
     return out
-
-
-@dataclass
-class CascadeResult:
-    df: DataFrame  # input columns + selected/applied_strategy/set_skip_kind
-    strategies: list[str]
 
 
 def _predicate(name: str, ts: Column, size: Column, url: Column,

@@ -1,7 +1,6 @@
 """Action sink tests (ref tests/test_action.py:82-269)."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from pysparkdedup.actions import perform, pointer_dedup
 from pysparkdedup.config import DedupConfig

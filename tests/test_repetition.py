@@ -1,7 +1,6 @@
 """Repetition stats, boilerplate line removal, benchmark decontamination."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from pysparkdedup.decontam import contamination
 from pysparkdedup.repetition import (

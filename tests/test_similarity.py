@@ -260,33 +260,28 @@ def test_ivf_lloyd_improves_recall_on_clustered_corpus(spark):
     assert r2 > r1 and r2 >= 0.95, (r0, r1, r2)
 
 
-def test_cosine_pairs_exact_tolerates_dirty_embeddings(spark, emb):
-    """One null or ragged embedding must not abort the job (at corpus scale
-    a single dirty row would otherwise kill the whole cascade): such pairs
-    are dropped — the same outcome as cosine_col's null cosine failing the
-    threshold — while clean pairs in the same batch score bit-exactly."""
+def test_cosine_pairs_exact_rejects_dirty_embeddings(spark, emb):
+    """A null or ragged embedding must fail the pair scorer loudly, naming
+    its id, as the fused bucket kernel does: dropping the pair would hide
+    bad input behind the threshold filter."""
+    from pyspark.errors import PythonException
+
     slim = emb.select("vec_id", "embedding").limit(2)
-    clean = slim.toPandas()
-    dim = len(clean["embedding"][0])
+    c0, c1 = (int(v) for v in slim.toPandas()["vec_id"])
+    dim = len(slim.first()["embedding"])
     dirty = spark.createDataFrame(
         [(9001, None), (9002, [1.0] * (dim + 3))],
         "vec_id long, embedding array<float>")
     mixed = slim.unionByName(dirty)
-    pairs = spark.createDataFrame(
-        [(int(clean["vec_id"][0]), int(clean["vec_id"][1])),
-         (int(clean["vec_id"][0]), 9001),   # null side
-         (int(clean["vec_id"][1]), 9002),   # ragged vs dim
-         (9001, 9002)],                      # both dirty
-        "a long, b long").coalesce(1)       # all in ONE batch
-    got = {(r["a"], r["b"]): r["cosine"]
-           for r in cosine_pairs_exact(pairs, mixed).collect()}
-    key = (int(clean["vec_id"][0]), int(clean["vec_id"][1]))
-    assert set(got) == {key}
-    expected = {(r["a"], r["b"]): r["cosine"]
-                for r in cosine_pairs_exact(
-                    spark.createDataFrame([key], "a long, b long"),
-                    emb).collect()}[key]
-    assert got[key] == expected
+    for bad_pairs, bad_id in [
+        ([(c0, c1), (9001, c1)], 9001),                 # null vector
+        ([(c0, c1), (c1, c0), (c0, 9002)], 9002),       # ragged vector
+    ]:
+        pairs = spark.createDataFrame(
+            bad_pairs, "a long, b long").coalesce(1)    # all in ONE batch
+        with pytest.raises(PythonException,
+                           match=f"embedding of id {bad_id}"):
+            cosine_pairs_exact(pairs, mixed).collect()
 
 
 def test_fused_bucket_scoring_matches_join_path(spark, emb):

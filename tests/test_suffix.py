@@ -1,6 +1,5 @@
 """Substring dedup tests: suffix array kernel, partition sweep, anchor join."""
 
-import numpy as np
 from pyspark.sql import functions as F
 
 from pysparkdedup.config import DedupConfig

@@ -1,7 +1,5 @@
 """Text-analysis operator tests."""
 
-from pyspark.sql import functions as F
-
 from pysparkdedup.textstats import (
     detected_lang, quality_columns, subword_count, token_count,
     winnowing_fingerprints,

@@ -90,12 +90,11 @@ def _driver_union_find(edge_rows, url_type) -> tuple[list, T.StructType]:
     return rows, schema
 
 
-def value_contracted_clusters(sigs: DataFrame, value_edges: DataFrame,
-                              vals: DataFrame, value_col: str,
-                              id_col: str = "url") -> DataFrame:
-    """Expand components over DISTINCT signature values back to per-id
-    clusters — the exact-duplicate contraction shared by the simhash and
-    image dHash clusterers.
+def value_component_labels(value_edges: DataFrame, vals: DataFrame,
+                           value_col: str) -> DataFrame:
+    """(value, cluster_key) for every distinct signature value that is in
+    a component — the exact-duplicate contraction of the image dHash
+    clusterer. Callers LEFT-join it on the value column.
 
     Ids sharing one 64-bit signature value are at Hamming distance 0, so
     they are ALWAYS one cluster; running candidate generation, verify and
@@ -106,27 +105,15 @@ def value_contracted_clusters(sigs: DataFrame, value_edges: DataFrame,
     merge or split a component. Blocking keys and the bit_count verify are
     pure functions of the value, hence identical in value space.
 
-    - ``sigs``        : (id, value) — one row per id, null values excluded
-                        by the inner join at the end;
     - ``value_edges`` : (a, b) verified edges between distinct values;
     - ``vals``        : (value, _n, _vmin) — per-value id count and min id
                         (the caller computes it for blocking anyway);
-    - returns (id_col, cluster_key) with cluster_key = 'cc:' + min id of
-      the component, exactly the uncontracted contract: members are ids
-      whose value has >= 2 ids (an exact-duplicate clique is a component
-      even with no cross-value edge) or participates in a verified edge.
+    - returns (value_col, cluster_key) with cluster_key = 'cc:' + min id
+      of the component, exactly the uncontracted contract: a value is
+      labelled when it has >= 2 ids (an exact-duplicate clique is a
+      component even with no cross-value edge) or participates in a
+      verified edge.
     """
-    labels = value_component_labels(value_edges, vals, value_col)
-    return sigs.join(labels, value_col, "inner").select(
-        F.col(id_col).alias("url"), "cluster_key")
-
-
-def value_component_labels(value_edges: DataFrame, vals: DataFrame,
-                           value_col: str) -> DataFrame:
-    """(value, cluster_key) for every distinct signature value that is in
-    a component — the value-keyed half of ``value_contracted_clusters``,
-    exposed so ledger-style callers can LEFT-join it on the value column
-    directly instead of paying a second id-keyed corpus join."""
     comp = connected_components(value_edges)
     vlab = (
         vals.join(

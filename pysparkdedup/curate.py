@@ -244,14 +244,27 @@ def curate_pages(
         ).otherwise(
             F.filter(F.col("lines"),
                      lambda _ln, i: ~F.array_contains(F.col("_dropall"), i)))
-        rebuilt = rebuilt.withColumn("_dropall", drop_all).select(
+        rebuilt = rebuilt.withColumn("_dropall", drop_all)
+        if drop_empty:
+            # Decide emptiness from the kept lines, not the rebuilt text:
+            # a filter on the text is pushed below the rebuild projection
+            # and inlines the interpreted rebuild (and any redaction above
+            # it) a second time. The '\n' separators are whitespace, so the
+            # rebuilt text is blank exactly when every kept line is.
+            rebuilt = rebuilt.filter(F.size(F.filter(
+                F.col("lines"),
+                lambda ln, i: ~F.array_contains(F.col("_dropall"), i)
+                & ln.rlike(r"\S"))) > 0)
+        rebuilt = rebuilt.select(
             F.col(id_col), F.concat_ws("\n", kept).alias(text_col))
         cur = cur.drop(text_col).join(rebuilt, id_col)
+    elif drop_empty:
+        # null text is dropped too (rlike -> null)
+        cur = cur.filter(F.col(text_col).rlike(r"\S"))
+    # Redaction runs after drop_empty and cannot change its verdict: every
+    # PII pattern needs a non-space character and every placeholder is
+    # non-blank. In this order the filter never inlines the regex chain.
     if redact:
         cur = redact_pii(cur, text_col=text_col, out_col=text_col)
-    if drop_empty:
-        # after redaction: placeholders are non-blank, so this keys on the
-        # final bytes either way; null text is dropped too (rlike -> null)
-        cur = cur.filter(F.col(text_col).rlike(r"\S"))
     # preserve the caller's column order (joins append the rebuilt text)
     return cur.select(*pages.columns)

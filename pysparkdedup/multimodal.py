@@ -408,7 +408,7 @@ def image_dup_clusters(df: DataFrame, payload_col: str = "html",
     than image-space and the per-bucket pair explosion (quadratic in
     bucket size) collapses with it. Verification needs NO signature
     joins: the candidate pair IS the two values. Output is provably
-    identical (components.value_contracted_clusters); ``max_bucket_size``
+    identical (components.value_component_labels); ``max_bucket_size``
     now caps distinct-VALUE buckets, which also keeps the salted-star
     recall degrade away until value-level skew is truly pathological."""
     from pyspark import StorageLevel

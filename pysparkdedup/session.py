@@ -69,8 +69,10 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
         # Preloaded-fork daemon: workers inherit numpy/pandas/our kernels as
-        # COW pages instead of re-importing per forked worker (see
-        # worker_daemon.py) — cuts per-task Python startup ~1s -> ~0.
+        # COW pages instead of re-importing per forked worker, and skip the
+        # per-task re-read of pyspark.zip that CPython < 3.12 does on
+        # importlib.invalidate_caches() (~250 ms of executor CPU per task;
+        # see worker_daemon.py).
         .config("spark.python.daemon.module", "pysparkdedup.worker_daemon")
     )
     for k, v in (extra_conf or {}).items():

@@ -9,6 +9,8 @@ ladders via whitespace padding, undated rows, outliers.
 from __future__ import annotations
 
 import datetime as dt
+import os
+from pathlib import Path
 
 import pytest
 from pyspark.sql import SparkSession
@@ -31,8 +33,16 @@ PAGES_SCHEMA = T.StructType([
 ])
 
 
+ROOT = str(Path(__file__).resolve().parent.parent)
+
+
 @pytest.fixture(scope="session")
 def spark():
+    # The production worker daemon (session.get_spark installs the same one)
+    # imports pysparkdedup, so the workers need the repository on their path.
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        [ROOT] + [p for p in os.environ.get("PYTHONPATH", "").split(
+            os.pathsep) if p])
     s = (
         SparkSession.builder.master("local[4]")
         .appName("pysparkdedup-tests")
@@ -42,6 +52,7 @@ def spark():
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", "6g")
+        .config("spark.python.daemon.module", "pysparkdedup.worker_daemon")
         .getOrCreate()
     )
     yield s

@@ -4,6 +4,7 @@
 import io
 from contextlib import redirect_stdout
 
+import pytest
 from pyspark.sql import functions as F
 
 from pysparkdedup.config import DedupConfig
@@ -386,3 +387,23 @@ def test_no_unpartitioned_window_in_headline_verbs(spark, pages_factory):
     topk_plan = plan_of(vocab_topk(pages, k=5))
     assert "Window" in topk_plan
     assert unpartitioned_windows_above_nonlimit(topk_plan) == []
+
+
+@pytest.mark.parametrize("line_stages", [{}, {"boilerplate_min_df": 2}],
+                         ids=["text", "line_section"])
+def test_curate_redacts_once_under_drop_empty(spark, pages_factory,
+                                              line_stages):
+    """drop_empty must not inline the PII chain (or the line rebuild) into
+    a pushed-down filter: the optimized plan names each PII regex once."""
+    from tests.conftest import ts
+    from pysparkdedup.curate import curate_pages
+    from pysparkdedup.pii import PII_PATTERNS
+
+    pages = pages_factory([
+        ("u/a", ts(0), "mail a@b.org now", "en"),
+        ("u/b", ts(1), "   ", "en"),
+    ])
+    out = curate_pages(pages, redact=True, drop_empty=True, **line_stages)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    for kind, pattern in PII_PATTERNS.items():
+        assert plan.count(pattern) == 1, (kind, plan.count(pattern))

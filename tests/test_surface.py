@@ -23,7 +23,6 @@ TEST_ONLY = {
     "partition_substring_dedup": "per-partition form of containment_edges",
     "token_count": "the token_stats driver query inlines the same column",
     "hot_old_bucket_count": "cross-corpus skew probe, until the run report",
-    "value_contracted_clusters": "no caller, tests included: next to delete",
 }
 
 

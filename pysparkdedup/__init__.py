@@ -6,7 +6,7 @@ A from-scratch re-expression of the query/data-processing capabilities of
 
 - exact dedup        : normalized content-hash groupBy      (ref deduplicate.py:958-1058)
 - near dup           : MinHash+LSH, SimHash Hamming-ball, n-gram Jaccard,
-                       per-partition suffix-array substring dedup
+                       min-shingle anchor-join substring containment
 - clustering         : union-find connected components (iterated min-label join)
 - selection          : the reference's 24 keep/discard strategies as window
                        predicates with cascade fallback     (ref strategy.py:196-273)
@@ -36,7 +36,7 @@ dedup (all first-class, DuckDB-oracled via the driver contract):
 
 Everything is DataFrame-first: built-in ``pyspark.sql.functions`` expressions in
 the hot path, Arrow-vectorized pandas UDFs only where semantics genuinely need
-per-group/per-batch Python (eviction, MinHash numpy kernels, suffix arrays).
+per-group/per-batch Python (eviction, MinHash numpy kernels, image decode).
 """
 
 __version__ = "0.1.0"

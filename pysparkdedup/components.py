@@ -6,9 +6,9 @@ itself and its neighbors until no label changes. Near-dup graphs built from
 star-shaped bucket pairs (pairs.py) have tiny diameter, so convergence is
 2-4 iterations in practice; ``max_iter`` bounds pathological chains.
 
-Execution is ADAPTIVE on the materialized edge count (observed on the
-materialization job — no extra count job): small graphs are solved by a
-driver-side union-find over the collected slim (a, b) pairs — identical
+Execution is ADAPTIVE on the edge count (one LIMIT-(K+1) probe job that
+also fetches the rows): small graphs are solved by a driver-side
+union-find over the collected slim (a, b) pairs — identical
 min-labels, zero fixpoint barriers — because below ~10^6 edges the
 distributed fixpoint's cost is purely job-scheduling/checkpoint latency
 (~2 s wall for a 1-edge graph, measured); large graphs run the
@@ -154,12 +154,12 @@ def connected_components(edges: DataFrame, a_col: str = "a", b_col: str = "b",
     """edges (a, b) -> (url, cluster_key) with cluster_key = min url of the
     component. Only nodes that appear in an edge are returned.
 
-    Adaptive execution: the edge count rides the materialization job as an
-    ``observe`` (zero extra jobs); at or below ``small_graph_edges`` the
-    components are solved by a driver-side union-find over the collected
-    slim pairs (identical labels, no fixpoint barriers — see
-    SMALL_GRAPH_EDGES), above it by the distributed min-label fixpoint.
-    Pass ``small_graph_edges=0`` to force the distributed path.
+    Adaptive execution: one LIMIT-(K+1) collect both sizes the graph and
+    fetches its rows; at or below ``small_graph_edges`` the components are
+    solved by a driver-side union-find over the collected slim pairs
+    (identical labels, no fixpoint barriers — see SMALL_GRAPH_EDGES),
+    above it by the distributed min-label fixpoint. Pass
+    ``small_graph_edges=0`` to force the distributed path.
 
     If ``max_iter`` is exhausted before the fixpoint (a long-diameter chain
     graph — containment/ngram edges can produce them), the labels would be
@@ -167,59 +167,44 @@ def connected_components(edges: DataFrame, a_col: str = "a", b_col: str = "b",
     'raise' (default) aborts, 'warn' emits a warning with the residual
     changed-label count and returns the partial labels.
 
-    ``reliable=True`` materializes each iteration with ``checkpoint()`` (to
-    ``spark.sparkContext.setCheckpointDir``, i.e. HDFS/object storage on a
-    cluster) instead of ``localCheckpoint()``. localCheckpoint blocks live in
-    executor storage and die with a lost executor — fatal mid-fixpoint on a
-    real cluster; the default stays local for single-JVM runs where it is
-    both safe and cheaper."""
+    ``reliable=True`` materializes the edges and each fixpoint iteration
+    with ``checkpoint()`` (to ``spark.sparkContext.setCheckpointDir``,
+    i.e. HDFS/object storage on a cluster) instead of
+    ``localCheckpoint()``; a driver-solved graph writes no checkpoint.
+    localCheckpoint blocks live in executor storage and die with a lost
+    executor — fatal mid-fixpoint on a real cluster; the default stays
+    local for single-JVM runs where it is both safe and cheaper."""
 
     if max_iter < 1:
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
 
-    # Materialize the edge input once: the symmetric union references it
-    # twice, and Spark recomputes shared subtrees (no DAG-level CSE) — for
-    # LSH edges that would mean running candidate generation + verification
-    # twice.
-    import uuid
+    # Persist the edge input once: the symmetric union references it twice,
+    # and Spark recomputes shared subtrees (no DAG-level CSE) — for LSH
+    # edges that would mean running candidate generation + verification
+    # twice. A LIMIT-(K+1) collect through the persist answers "is this
+    # graph small?" AND fetches its rows in ONE incremental job
+    # (CollectLimit scans partitions progressively and stops at K+1). A
+    # small graph is solved on the driver, so it needs no checkpoint, not
+    # even under ``reliable``: no fixpoint runs that could lose it.
+    from pyspark import StorageLevel
+
+    from .cache import track
 
     spark = edges.sparkSession
-    slim = edges.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
+    edges = track(
+        edges.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
+        .persist(StorageLevel.MEMORY_AND_DISK))
     sample = None
-    if reliable:
-        # Cluster-durable path: one checkpoint job with the edge count
-        # riding it as a CollectMetrics node, then a collect for small
-        # graphs — the checkpoint must exist anyway to survive executor
-        # loss mid-fixpoint.
-        obs_n = Observation(f"cc_n_edges_{uuid.uuid4().hex[:8]}")
-        edges = materialize(
-            slim.observe(obs_n, F.count(F.lit(1)).alias("n")), reliable)
-        n_edges = obs_n.get["n"] or 0
-        if small_graph_edges > 0 and n_edges <= small_graph_edges:
-            sample = edges.collect()
-    else:
-        # Local path: a LIMIT-(K+1) collect through a persist answers "is
-        # this graph small?" AND fetches the rows in ONE incremental job
-        # (CollectLimit scans partitions progressively and stops at K+1) —
-        # the former checkpoint-then-collect pair cost two full jobs per
-        # invocation. Large graphs abort the probe early, leaving the
-        # touched partitions cached for the fixpoint below; the persist
-        # also covers the symmetric union's double read.
-        from pyspark import StorageLevel
-
-        from .cache import track
-
-        edges = track(slim.persist(StorageLevel.MEMORY_AND_DISK))
-        if small_graph_edges > 0:
-            sample = edges.limit(small_graph_edges + 1).collect()
-            if len(sample) > small_graph_edges:
-                sample = None
-        if sample is None:
-            # Large graph: truncate the edge lineage before the fixpoint
-            # (iteration plans reference the edges twice per step; without
-            # the checkpoint each re-plan re-optimizes the full candidate
-            # lineage). Reads through the probe's partial cache.
-            edges = materialize(edges, reliable)
+    if small_graph_edges > 0:
+        sample = edges.limit(small_graph_edges + 1).collect()
+        if len(sample) > small_graph_edges:
+            sample = None
+    if sample is None:
+        # Large graph: truncate the edge lineage before the fixpoint
+        # (iteration plans reference the edges twice per step; without the
+        # checkpoint each re-plan re-optimizes the full candidate lineage).
+        # Reads through the probe's partial cache.
+        edges = materialize(edges, reliable)
 
     if sample is not None:
         url_type = edges.schema["a"].dataType

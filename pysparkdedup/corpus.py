@@ -27,8 +27,8 @@ Planted group kinds (FIXTURES.md table 1) and their reference analogs:
 - same_ts     : identical copies sharing one timestamp — time strategy
                 selects all => ineffective => fallback
                 (ref tests/test_strategy.py:455-478)
-- substring   : short doc fully contained in a longer one — suffix-array
-                dedup target
+- substring   : short doc fully contained in a longer one — containment
+                dedup target (suffix.containment_edges)
 - malformed   : empty text — rejected with metric (ref mail.py:490-496)
 - unique      : everything else (singleton fast path, ref deduplicate.py:419-424)
 

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .config import DedupConfig
-from .minhash import lsh_bands, minhash_signatures
+from .minhash import jaccard_col, lsh_bands, minhash_signatures
 
 DEFAULT_CROSS_CAP = 2000
 
@@ -96,23 +96,6 @@ def hot_old_bucket_count(old_bands: DataFrame,
         .filter(F.col("_bn") > cap)
         .count()
     )
-
-
-def _cross_jaccard(pairs: DataFrame, new_sigs: DataFrame,
-                   old_sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """(url, old_url, jaccard) — fraction of equal MinHash positions."""
-    a = new_sigs.select("url", F.col("minhash").alias("_sig_a"))
-    b = old_sigs.select(
-        F.col("url").alias("old_url"), F.col("minhash").alias("_sig_b"))
-    joined = pairs.join(a, "url").join(b, "old_url")
-    matches = F.aggregate(
-        F.zip_with("_sig_a", "_sig_b", lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
-    return joined.withColumn(
-        "jaccard", matches / F.lit(cfg.num_perm)
-    ).select("url", "old_url", "jaccard")
 
 
 def dedup_against(
@@ -187,13 +170,19 @@ def dedup_against(
     old_stats = old_dims["band_stats"] if old_dims is not None else None
     pairs = cross_candidate_pairs(
         lsh_bands(new_sigs, cfg), old_bands, cap=cap, old_stats=old_stats)
+    sa = new_sigs.select("url", F.col("minhash").alias("_sig_a"))
+    sb = old_sigs.select(
+        F.col("url").alias("old_url"), F.col("minhash").alias("_sig_b"))
     # Persist the slim scored frame BEFORE the threshold filter: the
     # jaccard estimate is an interpreted aggregate-over-zip_with
     # (CodegenFallback), and filtering on it directly inlines the whole
     # expression into the predicate next to the projected copy — 2x
     # evaluation per candidate pair. The persist boundary evaluates once.
     scored = track(
-        _cross_jaccard(pairs, new_sigs, old_sigs, cfg)
+        pairs.join(sa, "url").join(sb, "old_url")
+        .select("url", "old_url",
+                jaccard_col(F.col("_sig_a"), F.col("_sig_b"), cfg.num_perm)
+                .alias("jaccard"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     ).filter(F.col("jaccard") >= cfg.jaccard_threshold)
     best = scored.groupBy("url").agg(

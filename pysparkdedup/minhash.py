@@ -31,7 +31,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -164,20 +164,25 @@ def candidate_pairs(bands_df: DataFrame, cfg: DedupConfig) -> DataFrame:
     return pairs.dropDuplicates(["a", "b"])
 
 
+def jaccard_col(a: Column, b: Column, num_perm: int) -> Column:
+    """Estimated Jaccard of two MinHash signature columns: the fraction of
+    equal positions, as column algebra."""
+    matches = F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x == y).cast("int")),
+        F.lit(0),
+        lambda acc, v: acc + v,
+    )
+    return matches / F.lit(num_perm)
+
+
 def estimate_jaccard(pairs: DataFrame, sig_df: DataFrame,
                      cfg: DedupConfig) -> DataFrame:
     """(a, b, jaccard) — fraction of equal MinHash positions, column algebra."""
     sa = sig_df.select(F.col("url").alias("a"), F.col("minhash").alias("_sig_a"))
     sb = sig_df.select(F.col("url").alias("b"), F.col("minhash").alias("_sig_b"))
     joined = pairs.join(sa, "a").join(sb, "b")
-    matches = F.aggregate(
-        F.zip_with("_sig_a", "_sig_b",
-                   lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
     return joined.withColumn(
-        "jaccard", matches / F.lit(cfg.num_perm)
+        "jaccard", jaccard_col(F.col("_sig_a"), F.col("_sig_b"), cfg.num_perm)
     ).select("a", "b", "jaccard")
 
 

@@ -3,8 +3,8 @@
 Images travel as a ``binary`` column (``html`` by default). Two stages
 reach them: ``exact_binary_dedup`` groups byte-identical payloads by
 sha2, and the perceptual path (``image_dhash`` -> ``dhash_blocks`` ->
-``image_dup_edges`` / ``image_dup_clusters`` / ``image_dedup_ledger``)
-finds re-encoded and resized copies through a 64-bit difference hash.
+``image_dedup_ledger``) finds re-encoded and resized copies through a
+64-bit difference hash, clustering distinct hash values rather than ids.
 
 Decode is plug-in gated: when Pillow is importable (``_pil_image()``) any
 codec it knows decodes; without it PNG still decodes for real through the
@@ -211,7 +211,7 @@ def exact_binary_dedup(df: DataFrame, payload_col: str = "html") -> DataFrame:
     """Exact media dedup: group by payload sha2 — the binary analog of the
     text content-hash groupBy. Catches byte-identical copies only; for
     re-encoded/resized copies (the dominant duplicate class in multimodal
-    training data) see ``image_dup_clusters`` (perceptual dHash)."""
+    training data) see ``image_dedup_ledger`` (perceptual dHash)."""
     return (
         df.withColumn("payload_sha", F.sha2(F.col(payload_col), 256))
         .groupBy("payload_sha")
@@ -347,144 +347,55 @@ def dhash_blocks(sig_df: DataFrame, hamming_threshold: int,
     )
 
 
-def image_dup_edges(df: DataFrame, payload_col: str = "html",
-                    id_col: str = "url", hamming_threshold: int = 4,
-                    max_bucket_size: int = 256,
-                    sigs: DataFrame | None = None,
-                    fake_decode: bool = False) -> DataFrame:
-    """Verified perceptual-duplicate edges (a, b, hamming) with
-    hamming <= threshold. dHash signatures persisted once (they feed
-    blocking AND both verify-join sides); candidates come from the
-    skew-capped pigeonhole bucket join — never all-pairs — and the verify
-    is JVM ``bit_count(xor)``. Pass ``sigs`` (id, dhash) to reuse
-    precomputed signatures — the caller then owns their persistence (a
-    re-persist here would SHARE the caller's cache entry, so a scoped
-    unpersist on exit would drop it under the caller's later consumers)."""
-    from pyspark import StorageLevel
-
-    from .cache import track
-    from .pairs import bucket_pairs
-
-    if sigs is None:
-        sigs = track(
-            image_dhash(df, payload_col=payload_col, id_col=id_col,
-                        fake_decode=fake_decode)
-            .persist(StorageLevel.MEMORY_AND_DISK))
-    else:
-        sigs = sigs.select(id_col, "dhash")
-    blocks = dhash_blocks(sigs, hamming_threshold, id_col=id_col)
-    pairs = bucket_pairs(
-        blocks, ["block_id", "val_a", "val_b"], id_col=id_col,
-        cap=max_bucket_size,
-    ).dropDuplicates(["a", "b"])
-    sa = sigs.select(F.col(id_col).alias("a"), F.col("dhash").alias("_ha"))
-    sb = sigs.select(F.col(id_col).alias("b"), F.col("dhash").alias("_hb"))
-    scored = (
-        pairs.join(sa, "a")
-        .join(sb, "b")
-        .withColumn("hamming",
-                    F.bit_count(F.col("_ha").bitwiseXOR(F.col("_hb"))))
-    )
-    return scored.filter(F.col("hamming") <= hamming_threshold).select(
-        "a", "b", "hamming")
-
-
-def image_dup_clusters(df: DataFrame, payload_col: str = "html",
-                       id_col: str = "url", hamming_threshold: int = 4,
-                       max_bucket_size: int = 256,
-                       sigs: DataFrame | None = None,
-                       fake_decode: bool = False) -> DataFrame:
-    """(id, cluster_key) for perceptual image-duplicate components —
-    cluster_key = min id of the component (numeric min for numeric ids,
-    string min for string ids — deterministic at any parallelism). Only
-    images whose dhash has >= 2 copies or appears in a verified edge are
-    returned (identical membership to edge-level clustering); the caller
-    left-joins and coalesces to self for singleton rows.
-
-    Exact-duplicate contraction: blocking, candidate pairing, the
-    bit_count verify and the component fixpoint all run over DISTINCT
-    dhash VALUES, not images — re-encoded/rescaled copies hash
-    identically, so value-space is typically orders of magnitude smaller
-    than image-space and the per-bucket pair explosion (quadratic in
-    bucket size) collapses with it. Verification needs NO signature
-    joins: the candidate pair IS the two values. Output is provably
-    identical (components.value_component_labels); ``max_bucket_size``
-    now caps distinct-VALUE buckets, which also keeps the salted-star
-    recall degrade away until value-level skew is truly pathological."""
-    from pyspark import StorageLevel
-
-    from .cache import cache_scope, track
-
-    with cache_scope():
-        if sigs is None:
-            sigs = track(
-                image_dhash(df, payload_col=payload_col, id_col=id_col,
-                            fake_decode=fake_decode)
-                .persist(StorageLevel.MEMORY_AND_DISK))
-        else:
-            sigs = sigs.select(id_col, "dhash")
-        labels = _dhash_value_labels(sigs, hamming_threshold,
-                                     max_bucket_size, id_col)
-        out = sigs.join(labels, "dhash", "inner").select(
-            F.col(id_col).alias("url"), "cluster_key")
-    return out.select(F.col("url").alias(id_col),
-                      F.col("cluster_key")) if id_col != "url" else out
-
-
-def _dhash_value_labels(sigs: DataFrame, hamming_threshold: int,
-                        max_bucket_size: int, id_col: str) -> DataFrame:
-    """(dhash, cluster_key) labels over DISTINCT dhash values: blocking ->
-    skew-capped bucket pairing -> join-free bit_count verify (the pair IS
-    the two values) -> component fixpoint -> min-id labels."""
-    from pyspark import StorageLevel
-
-    from .cache import track
-    from .components import value_component_labels
-    from .pairs import bucket_pairs
-
-    # one skinny row per distinct value: feeds blocking AND the
-    # component expansion (count + min id ride the same aggregation)
-    vals = track(
-        sigs.filter(F.col("dhash").isNotNull())
-        .groupBy("dhash")
-        .agg(F.count(F.lit(1)).alias("_n"),
-             F.min(id_col).alias("_vmin"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    blocks = dhash_blocks(
-        vals.select(F.col("dhash").alias("_vid"), "dhash"),
-        hamming_threshold, id_col="_vid")
-    edges = (
-        bucket_pairs(blocks, ["block_id", "val_a", "val_b"],
-                     id_col="_vid", cap=max_bucket_size)
-        .dropDuplicates(["a", "b"])
-        .filter(F.bit_count(F.col("a").bitwiseXOR(F.col("b")))
-                <= hamming_threshold)
-    )
-    return value_component_labels(edges, vals, "dhash")
-
-
 def image_dedup_ledger(df: DataFrame, payload_col: str = "html",
                        id_col: str = "url", hamming_threshold: int = 4,
                        max_bucket_size: int = 256,
                        fake_decode: bool = False) -> DataFrame:
-    """(id, dhash, cluster_key) for EVERY input row — the writeable ledger
-    form of ``image_dup_clusters``: duplicate components carry the
-    component's min id, singletons (and undecodable/null payloads) their
-    own id. Signatures are computed once and persisted; the value-keyed
-    component labels LEFT-join back on dhash DIRECTLY (null dhash never
-    matches, so undecodable rows coalesce to themselves), saving the
-    second id-keyed corpus join the per-id clusters frame would cost."""
+    """(id, dhash, cluster_key) for EVERY input row: duplicate components
+    carry 'cc:' + the component's min id, singletons (and undecodable/null
+    payloads) their own id.
+
+    Exact-duplicate contraction: blocking, skew-capped bucket pairing, the
+    bit_count verify and the component fixpoint all run over DISTINCT
+    dhash VALUES, not images. Re-encoded and rescaled copies hash
+    identically, so value space is typically orders of magnitude smaller
+    than image space, and the verify needs no signature joins: the
+    candidate pair IS the two values. The labels are provably those of
+    the id-level graph (components.value_component_labels), and
+    ``max_bucket_size`` caps distinct-VALUE buckets. Signatures are
+    computed once and persisted; the value-keyed labels LEFT-join back on
+    dhash directly (null dhash never matches, so undecodable rows
+    coalesce to themselves)."""
     from pyspark import StorageLevel
 
     from .cache import cache_scope, track
+    from .components import materialize, value_component_labels
+    from .pairs import bucket_pairs
 
     sigs = track(
         image_dhash(df, payload_col=payload_col, id_col=id_col,
                     fake_decode=fake_decode)
         .persist(StorageLevel.MEMORY_AND_DISK))
     with cache_scope():
-        labels = _dhash_value_labels(sigs, hamming_threshold,
-                                     max_bucket_size, id_col)
+        # one skinny row per distinct value: feeds blocking AND the
+        # component expansion (count + min id ride the same aggregation)
+        vals = track(
+            sigs.filter(F.col("dhash").isNotNull())
+            .groupBy("dhash")
+            .agg(F.count(F.lit(1)).alias("_n"),
+                 F.min(id_col).alias("_vmin"))
+            .persist(StorageLevel.MEMORY_AND_DISK))
+        blocks = dhash_blocks(
+            vals.select(F.col("dhash").alias("_vid"), "dhash"),
+            hamming_threshold, id_col="_vid")
+        edges = (
+            bucket_pairs(blocks, ["block_id", "val_a", "val_b"],
+                         id_col="_vid", cap=max_bucket_size)
+            .dropDuplicates(["a", "b"])
+            .filter(F.bit_count(F.col("a").bitwiseXOR(F.col("b")))
+                    <= hamming_threshold)
+        )
+        labels = value_component_labels(edges, vals, "dhash")
         ledger = (
             sigs.join(labels, "dhash", "left")
             .select(
@@ -497,5 +408,4 @@ def image_dedup_ledger(df: DataFrame, payload_col: str = "html",
         # Materialize inside the scope: the component fixpoint has already
         # run eagerly, the remaining work is slim label joins, and the
         # caller gets a frame that no longer depends on the scoped caches.
-        ledger = ledger.localCheckpoint(eager=True)
-    return ledger
+        return materialize(ledger)

@@ -1,23 +1,13 @@
-"""Substring containment dedup: suffix arrays + distributed anchor join.
+"""Substring containment dedup: a distributed anchor join.
 
-Two layers, mirroring how the reference keeps expensive per-set work set-local
-(ref deduplicate.py:181-216) while grouping is global:
-
-1. ``containment_edges`` — distributed candidate generation: if doc A is a
-   substring of doc B, every word k-shingle of A appears in B; in particular
-   A's *minimum-hash* shingle does. So A emits one anchor row (its min
-   shingle) and B emits all its distinct shingles; the equi-join yields every
-   (A in B) candidate, verified exactly per pair. Linear in total shingles,
-   one shuffle. Skew guard: shingles occurring in more than ``max_df`` docs
-   are dropped from the container side with a logged count (df-cut; affects
-   only docs whose min shingle is boilerplate-common).
-
-2. ``suffix_array`` / ``partition_substring_dedup`` — a per-partition exact
-   sweep: a numpy prefix-doubling suffix array over the partition's
-   concatenated text finds every doc whose full text occurs inside another
-   doc of the same partition (partition-local by design, like the reference's
-   per-set work; co-locate related docs first via repartition on a content
-   key for higher recall).
+``containment_edges`` generates candidates globally: if doc A is a
+substring of doc B, every word k-shingle of A appears in B; in particular
+A's *minimum-hash* shingle does. So A emits one anchor row (its min
+shingle) and B emits all its distinct shingles; the equi-join yields every
+(A in B) candidate, verified exactly per pair. Linear in total shingles,
+one shuffle. Skew guard: shingles occurring in more than ``max_df`` docs
+are dropped from the container side (df-cut; affects only docs whose min
+shingle is boilerplate-common).
 """
 
 from __future__ import annotations
@@ -34,115 +24,6 @@ from .config import DedupConfig
 from .minhash import _batch_shingles
 
 DEFAULT_MAX_DF = 10000
-
-
-def suffix_array(s: str) -> np.ndarray:
-    """Suffix array by prefix doubling with numpy lexsort — O(n log^2 n)."""
-    n = len(s)
-    if n == 0:
-        return np.empty(0, dtype=np.int64)
-    rank = np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
-    sa = np.argsort(rank, kind="stable")
-    k = 1
-    while k < n:
-        rank2 = np.full(n, -1, dtype=np.int64)
-        rank2[:-k] = rank[k:]
-        order = np.lexsort((rank2, rank))
-        new_rank = np.empty(n, dtype=np.int64)
-        prev = (rank[order], rank2[order])
-        boundary = np.ones(n, dtype=bool)
-        boundary[1:] = (prev[0][1:] != prev[0][:-1]) | (prev[1][1:] != prev[1][:-1])
-        new_rank[order] = np.cumsum(boundary) - 1
-        rank = new_rank
-        sa = order
-        if rank[order[-1]] == n - 1:
-            break
-        k *= 2
-    return sa
-
-
-def _sa_lower_bound(hay: str, sa: np.ndarray, needle: str) -> int:
-    """First suffix-array index whose suffix is >= needle."""
-    lo, hi = 0, len(sa)
-    while lo < hi:
-        mid = (lo + hi) // 2
-        start = sa[mid]
-        if hay[start : start + len(needle)] < needle:
-            lo = mid + 1
-        else:
-            hi = mid
-    return lo
-
-
-_PART_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType(), False),
-    T.StructField("contained_in", T.StringType(), True),
-])
-
-
-def partition_substring_dedup(df: DataFrame, text_col: str = "text",
-                              min_chars: int = 20,
-                              truncation_acc=None) -> DataFrame:
-    """(url, contained_in) for docs whose full text occurs inside another doc
-    of the same partition. Exact within partition; containment across
-    partitions is out of scope by design (repartition on a content-derived
-    key first to co-locate candidates).
-
-    Recall within a partition: for NUL-free texts a match never straddles the
-    '\\x00' separator, so the first matching SA entry owned by another doc and
-    ending inside it IS a container, and a doc's own full text matches itself
-    at exactly one position — an owner is found within the first couple of
-    matching entries. Texts CONTAINING NUL can match across separators; the
-    span check rejects those hits (they are not real containments) and they
-    consume scan budget. ``scan_cap`` bounds that walk; hitting it is counted
-    in ``truncation_acc`` (a Spark accumulator, pass ``sc.accumulator(0)``) —
-    no silent truncation.
-    """
-
-    def sweep(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        urls: list[str] = []
-        texts: list[str] = []
-        for pdf in batches:
-            urls.extend(pdf["url"].tolist())
-            texts.extend((t or "") for t in pdf[text_col].tolist())
-        if not urls:
-            return
-        sep = "\x00"  # sorts below every text char => clean suffix boundaries
-        hay = sep.join(texts)
-        sa = suffix_array(hay)
-        # offset -> owning doc spans
-        starts = np.zeros(len(texts), dtype=np.int64)
-        np.cumsum([len(t) + 1 for t in texts[:-1]], out=starts[1:])
-        ends = starts + np.array([len(t) for t in texts], dtype=np.int64)
-        out_urls, out_in = [], []
-        scan_cap = 64  # bounds the walk over rejected hits (see docstring)
-        for idx in range(len(texts)):
-            text = texts[idx]
-            if len(text) < min_chars:
-                continue
-            lo = _sa_lower_bound(hay, sa, text)
-            owner = None
-            for j in range(lo, len(sa)):
-                pos = int(sa[j])
-                if hay[pos : pos + len(text)] != text:
-                    break  # left the matching SA range
-                doc_i = int(np.searchsorted(starts, pos, side="right") - 1)
-                # The span check rejects separator-crossing matches (possible
-                # only when `text` itself contains NUL) — those are NOT real
-                # containments in any single document.
-                if doc_i != idx and pos + len(text) <= ends[doc_i]:
-                    owner = urls[doc_i]
-                    break
-                if j - lo + 1 >= scan_cap:
-                    if truncation_acc is not None:
-                        truncation_acc.add(1)
-                    break
-            if owner is not None:
-                out_urls.append(urls[idx])
-                out_in.append(owner)
-        yield pd.DataFrame({"url": out_urls, "contained_in": out_in})
-
-    return df.select("url", text_col).mapInPandas(sweep, schema=_PART_SCHEMA)
 
 
 _ANCHOR_SCHEMA = T.StructType([

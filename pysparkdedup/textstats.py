@@ -1,7 +1,7 @@
 """Text-analysis operators for training-data pipelines — all JVM-side column
 algebra except winnowing (vectorized pandas UDF).
 
-- token_count        : whitespace tokens + a BPE-ish subword estimate
+- token counts       : whitespace ``tokens_col`` + BPE-ish ``subword_count``
 - language-ID        : n-gram/stopword-marker heuristic, argmax over langs
 - quality scoring    : length / punctuation / stopword / digit ratios
 - fingerprinting     : winnowing (rolling k-gram hashes, window minima)
@@ -34,11 +34,6 @@ def tokens_col(text_col: str = "text") -> Column:
         F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))), r"\s+"),
         lambda t: t != "",
     )
-
-
-def token_count(text_col: str = "text") -> Column:
-    """Whitespace token count."""
-    return F.size(tokens_col(text_col))
 
 
 def subword_count(text_col: str = "text") -> Column:
@@ -171,7 +166,7 @@ def vocab_topk(
     min_count: int = 1,
 ) -> DataFrame:
     """Corpus token vocabulary: the k most frequent whitespace tokens
-    (lowercased, same tokenizer as token_count) with their total counts and
+    (lowercased, the ``tokens_col`` tokenizer) with their total counts and
     frequency rank. The BPE-training / stopword-derivation precursor.
 
     Rank is fully deterministic: (count DESC, token ASC) — ties break

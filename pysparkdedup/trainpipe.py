@@ -76,6 +76,7 @@ def curate_and_dedup(
     ``staging_path`` (durable parquet) vs localCheckpoint vs
     ``reliable=True`` cluster checkpoint — see module docstring.
     """
+    from .components import materialize
     from .curate import curate_pages
     from .tiers import tiered_dedup
 
@@ -85,10 +86,8 @@ def curate_and_dedup(
     if staging_path is not None:
         cur.write.mode("overwrite").parquet(staging_path)
         cur = pages.sparkSession.read.parquet(staging_path)
-    elif reliable:
-        cur = cur.checkpoint(eager=True)
     else:
-        cur = cur.localCheckpoint(eager=True)
+        cur = materialize(cur, reliable)
     ledger = tiered_dedup(
         cur, cfg, emb=emb, emb_threshold=emb_threshold,
         emb_kwargs=emb_kwargs, id_col=id_col, text_col=text_col,

@@ -1,7 +1,7 @@
 """Property-based tests for the pure-numpy kernels (no SparkSession needed).
 
-The vectorized kernels (tokenhash byte-LUT tokenizer, suffix array) implement
-documented semantics; hypothesis checks them against direct Python reference
+The vectorized kernels (tokenhash byte-LUT tokenizer, guard eviction,
+repetition profile, driver union-find) implement documented semantics; hypothesis checks them against direct Python reference
 implementations of those semantics over adversarial inputs.
 """
 
@@ -13,7 +13,6 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from pysparkdedup.suffix import suffix_array
 from pysparkdedup.tokenhash import batch_token_hashes
 
 # The kernel's documented token rule over UTF-8 bytes: word bytes are
@@ -61,14 +60,6 @@ def test_token_hashes_follow_token_identity(s):
         if tok in seen:
             assert seen[tok] == h
         seen[tok] = h
-
-
-@settings(max_examples=200, deadline=None)
-@given(st.text(alphabet="abc\x01", max_size=60))
-def test_suffix_array_matches_naive(s):
-    got = suffix_array(s).tolist()
-    expected = sorted(range(len(s)), key=lambda i: s[i:])
-    assert got == expected
 
 
 # ---- guards: class-level greedy eviction == node-level reference ----------

@@ -1,6 +1,8 @@
 """Image dedup tests: exact binary dedup, the stdlib PNG codec, dHash
 signatures, pigeonhole blocking, perceptual clustering and the CLI mode."""
 
+from collections import Counter
+
 import pytest
 
 from pysparkdedup.multimodal import exact_binary_dedup
@@ -282,12 +284,33 @@ def test_image_dhash_corrupt_payload_nulls(spark):
     assert sigs["u/trunc"] is None
 
 
+def _ref_hamming_labels(dhashes, k):
+    """Brute-force reference of the ledger relation: every pair of non-null
+    dHashes within Hamming distance k is an edge; components by union-find,
+    labelled 'cc:' + min url (null and isolated urls label themselves)."""
+    parent = {u: u for u in dhashes}
+
+    def find(u):
+        while parent[u] != u:
+            u = parent[u]
+        return u
+
+    hashed = sorted(u for u, h in dhashes.items() if h is not None)
+    for i, u in enumerate(hashed):
+        for v in hashed[i + 1:]:
+            if bin((dhashes[u] ^ dhashes[v]) & (2**64 - 1)).count("1") <= k:
+                ru, rv = find(u), find(v)
+                if ru != rv:
+                    parent[max(ru, rv)] = min(ru, rv)
+    return {u: f"cc:{find(u)}" for u in dhashes}
+
+
 def test_image_dup_clusters_planted_recall(spark):
     """Planted resized/re-encoded copies cluster with their base image;
-    unrelated images stay apart. Runs the REAL decode path end-to-end."""
-    from pysparkdedup.multimodal import (
-        image_dup_clusters, image_dup_edges, png_encode_gray,
-    )
+    unrelated images stay apart. Runs the REAL decode path end-to-end
+    through image_dedup_ledger and checks every label against the
+    brute-force all-pairs Hamming relation the DuckDB oracle replays."""
+    from pysparkdedup.multimodal import image_dedup_ledger, png_encode_gray
 
     rows, want = [], {}
     for i in range(12):
@@ -304,15 +327,16 @@ def test_image_dup_clusters_planted_recall(spark):
             want[f"img{i:02d}_up4"] = base
     df = spark.createDataFrame(rows, ["url", "html"])
 
-    edges = image_dup_edges(df, hamming_threshold=2).collect()
-    assert all(e["hamming"] <= 2 for e in edges)
-
-    got = {r["url"]: r["cluster_key"]
-           for r in image_dup_clusters(df, hamming_threshold=2).collect()}
+    ledger = image_dedup_ledger(df, hamming_threshold=2).collect()
+    assert len(ledger) == len(rows)
+    got = {r["url"]: r["cluster_key"] for r in ledger}
+    assert got == _ref_hamming_labels(
+        {r["url"]: r["dhash"] for r in ledger}, k=2)
     for copy, base in want.items():
-        assert got[copy] == got[base], (copy, base)
-    # distinct-base clusters never merge: cluster count == planted families
-    assert len(set(got.values())) == len({*want.values()})
+        assert got[copy] == got[base] == f"cc:{base}", (copy, base)
+    # distinct-base clusters never merge: multi-member clusters == families
+    sizes = Counter(got.values())
+    assert sum(n > 1 for n in sizes.values()) == len({*want.values()})
 
 
 def test_image_dhash_fake_decode_plumbing(pages_factory):

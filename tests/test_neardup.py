@@ -202,6 +202,26 @@ def test_connected_components_reliable_checkpoint(spark, tmp_path):
                    ("x", "cc:x"), ("y", "cc:x")}
 
 
+def test_connected_components_reliable_small_graph_writes_no_checkpoint(
+        spark, tmp_path):
+    """A graph small enough for the driver union-find runs no fixpoint, so
+    reliable=True must neither change its labels nor write a durable
+    checkpoint of its edges."""
+    from pysparkdedup.components import connected_components
+
+    ckpt = tmp_path / "ckpt"
+    spark.sparkContext.setCheckpointDir(str(ckpt))
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("x", "y")], ["a", "b"])
+    local = {(r["url"], r["cluster_key"])
+             for r in connected_components(edges).collect()}
+    durable = {(r["url"], r["cluster_key"])
+               for r in connected_components(edges, reliable=True).collect()}
+    assert durable == local == {("a", "cc:a"), ("b", "cc:a"), ("c", "cc:a"),
+                                ("x", "cc:x"), ("y", "cc:x")}
+    assert not list(ckpt.rglob("rdd-*"))
+
+
 def test_small_graph_union_find_matches_distributed(spark):
     """The adaptive driver-side union-find (default for small edge sets)
     must produce EXACTLY the distributed fixpoint's labels — pinned on a

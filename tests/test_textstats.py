@@ -1,7 +1,9 @@
 """Text-analysis operator tests."""
 
+from pyspark.sql import functions as F
+
 from pysparkdedup.textstats import (
-    detected_lang, quality_columns, subword_count, token_count,
+    detected_lang, quality_columns, subword_count, tokens_col,
     winnowing_fingerprints,
 )
 from tests.conftest import ts
@@ -9,7 +11,7 @@ from tests.conftest import ts
 
 def test_token_count(pages_factory):
     df = pages_factory([("u/a", ts(0), "one two  three\nfour", "en")])
-    got = df.select(token_count().alias("n")).collect()[0]["n"]
+    got = df.select(F.size(tokens_col()).alias("n")).collect()[0]["n"]
     assert got == 4
 
 

@@ -47,7 +47,6 @@ def frames(spark, sf_dir):
 
     from pysparkdedup.minhash import minhash_edges
     from pysparkdedup.simhash import simhash_edges
-    from pysparkdedup.multimodal import image_dhash, image_dup_edges
 
     out = {
         "exact_pipeline": lambda: run_exact(pages, cfg).groupBy("status").count(),
@@ -57,9 +56,6 @@ def frames(spark, sf_dir):
         # full candidate-generation + verify pipeline shape.
         "minhash_edges": lambda: minhash_edges(pages, cfg),
         "simhash_edges": lambda: simhash_edges(pages, cfg),
-        "image_dup_edges": lambda: image_dup_edges(
-            pages.limit(50).select("url", F.encode("text", "utf-8")
-                                   .alias("html")), fake_decode=True),
         "simhash_cluster": lambda: simhash_clusters(pages, cfg),
         "ngram_jaccard": lambda: jaccard_edges(pages, k=5, threshold=0.5, max_df=100),
         "cascade_events": lambda: apply_cascade(events, cfg).agg(

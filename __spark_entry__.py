@@ -248,7 +248,7 @@ def _q_regexp_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token counting over whitespace tokens (textstats.token_count) +
+    """Token counting over whitespace tokens (F.size(textstats.tokens_col())) +
     the BPE-ish subword estimate (textstats.subword_count) — widened in
     round 7 per SURVEY §8 fold option 3 (per-parameter variants ride the
     SAME slot as extra columns). The subword oracle replays the Java
@@ -2401,7 +2401,7 @@ def oracle_sql() -> dict[str, str]:
                        regexp_extract_all(coalesce(text, ''),
                                           '\\p{{L}}+|\\p{{N}}+'),
                        p -> greatest(ceil(length(p)::DOUBLE / 4)::BIGINT, 1))),
-                       0) AS n_subwords
+                       0)::BIGINT AS n_subwords
             FROM documents
         """,
         "quality_stats": f"""

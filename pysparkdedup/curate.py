@@ -11,9 +11,10 @@ keep-first paragraph dedup, then PII redaction on the surviving text.
 Scale notes (100 TB): every stage reuses the shuffle-discipline of its
 module — repetition_stats is shuffle-free and the line ops dehydrate (only
 (id, line/pos) projections shuffle) — but the COMPOSITION is flattened
-rather than chained: both line-stage verdict dims (boilerplate hit sets,
-keep-first drop positions) are derived from one persisted exploded frame
-and applied in a single order-preserving array filter, so tokenization,
+rather than chained: one persisted exploded frame feeds the shared
+``repetition.line_drops`` primitive for both line stages, whose one
+per-document drop set is applied by one order-preserving
+``repetition.kept_lines`` filter, so tokenization,
 the repetition gram sort, and the text rebuild each run exactly once per
 pass (chaining the standalone ops re-executes the corpus lineage per
 stage — Spark has no DAG-level CSE; measured 4-6x re-compute). The full
@@ -37,17 +38,26 @@ pick, matching the public paragraph-dedup pipelines (Dolma/CCNet skip
 empty/trivial lines). Without the exemption, every blank line in a
 newline-split web corpus is one shared "value" that keep-first dedup
 would collapse corpus-wide, flattening the paragraph structure of
-essentially every multi-paragraph document. Chunk pseudo-lines are never
-blank, so the exemption is a no-op in chunk mode.
+essentially every multi-paragraph document. The exemption lives here,
+not in the shared primitive: curate filters blank lines out of the
+exploded frame before calling ``line_drops``, and the standalone
+``drop_boilerplate_lines`` / ``dedup_lines_keep_first`` treat them as
+ordinary lines. Chunk pseudo-lines are never blank, so the exemption is a
+no-op in chunk mode.
 """
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .cache import track
 from .pii import redact_pii
-from .repetition import repetition_stats, with_chunk_lines
+from .repetition import (
+    chunk_lines_expr, kept_lines, line_drops, repetition_stats,
+    with_chunk_lines)
+from .textstats import tokens_col
 
 
 def curate_pages(
@@ -97,10 +107,6 @@ def curate_pages(
         raise ValueError(
             f"line_mode must be 'chunk', 'newline' or 'auto', "
             f"got {line_mode!r}")
-    from pyspark import StorageLevel
-
-    from .cache import track
-
     cur = pages
     if max_dup_gram_frac is not None:
         reps = repetition_stats(cur, n=2, id_col=id_col, text_col=text_col)
@@ -122,24 +128,18 @@ def curate_pages(
             F.col("dup_gram_frac") > max_dup_gram_frac).select(id_col)
         cur = cur.join(bad, id_col, "left_anti")
     if boilerplate_min_df > 0 or dedup_paragraphs:
-        # Fused line section. Running drop_boilerplate_lines and
-        # dedup_lines_keep_first SEQUENTIALLY (each with its own explode,
-        # dim join and array rebuild) re-tokenizes and re-rebuilds the whole
-        # corpus once per stage; instead both verdict dims are derived from
-        # ONE persisted (id, pos, line) exploded frame and both drop sets
-        # are applied by POSITION in ONE order-preserving array filter.
-        # The fusion is order-safe: an order-preserving filter keeps
-        # relative order within each doc, so argmin(id, original_pos) picks
-        # the same keep-first occurrence as argmin(id, post-filter pos) —
-        # id dominates the struct order and pos only breaks ties inside one
-        # document. NOTE the fused pass is deliberately NOT output-identical
-        # to the standalone ops: blank lines are exempt from both the
-        # boilerplate df aggregation and the keep-first winner computation
-        # (kept unconditionally — paragraph SEPARATORS, not paragraphs;
-        # see the module docstring), an exemption the standalone
-        # drop_boilerplate_lines / dedup_lines_keep_first do not apply.
-        # test_curate.py pins equivalence on blank-free corpora and the
-        # blank-line exemption on corpora with them.
+        # Fused line section. Chaining drop_boilerplate_lines and
+        # dedup_lines_keep_first re-tokenizes and re-rebuilds the corpus
+        # once per stage; here ONE persisted exploded frame feeds
+        # line_drops for both stages and ONE order-preserving filter
+        # applies the merged drop set. The fusion is order-safe: the filter
+        # keeps relative order within each doc, so argmin(id, original_pos)
+        # picks the same keep-first occurrence as argmin(id, post-filter
+        # pos) — id dominates the struct order and pos only breaks ties
+        # inside one document. It is NOT output-identical to the standalone
+        # ops on blank lines, which are exempt here (see the module
+        # docstring); test_curate.py pins equivalence on blank-free corpora
+        # and the exemption on corpora with them.
         raw_lines = F.split(
             F.coalesce(F.col(text_col), F.lit("")), "\n")
         if line_mode == "newline":
@@ -149,10 +149,8 @@ def curate_pages(
             # column first (with_chunk_lines' O(len^2) guard); CaseWhen
             # evaluates only the taken branch per row, so newline docs
             # never pay the chunking transform.
-            from .repetition import chunk_lines_expr, tokens_expr
-
             lines_src = cur.withColumn(
-                "_toks", tokens_expr(text_col)
+                "_toks", tokens_col(text_col)
             ).select(
                 F.col(id_col),
                 F.when(
@@ -168,93 +166,26 @@ def curate_pages(
         # Tokenization/chunking runs exactly once into this cache; the
         # rebuild reads the arrays back instead of recomputing them.
         lines_src = track(lines_src.persist(StorageLevel.MEMORY_AND_DISK))
-        # Blank-line exemption: whitespace-only lines are layout, not
-        # dedupable values — they feed neither verdict dim, so their
-        # positions never enter the drop sets and the rebuild keeps them
-        # unconditionally. (Chunk pseudo-lines are never blank.)
+        # Blank-line exemption: whitespace-only lines never reach
+        # line_drops, so their positions never enter the drop set and the
+        # rebuild keeps them unconditionally.
         light = track(
             lines_src.select(
                 F.col(id_col), F.posexplode("lines").alias("pos", "line"))
             .filter(F.col("line").rlike(r"\S"))
             .persist(StorageLevel.MEMORY_AND_DISK))
-
-        # Both stages drop by POSITION: boilerplate removes every
-        # occurrence of a frequent line, and the exploded frame already
-        # knows every occurrence's position, so collecting hit positions
-        # (ints, bounded by the doc's own line count) replaces the former
-        # per-line array_contains scan over a per-doc string array —
-        # O(lines x distinct_bad_lines) per document for template-heavy
-        # docs — with one merged int-set membership test.
-        bad_pos_per_doc = None
-        drops_per_doc = None
-        surv = light
-        if boilerplate_min_df > 0:
-            # Same dim as drop_boilerplate_lines: distinct-doc frequency,
-            # count-only shuffle state, NOT hint-broadcast (unbounded at web
-            # scale — AQE decides). Persisted: it feeds the keep-first
-            # anti-join AND the per-doc hit positions.
-            boiler = track(
-                light.select(id_col, "line").distinct()
-                .groupBy("line").agg(F.count(F.lit(1)).alias("df"))
-                .filter(F.col("df") >= boilerplate_min_df).select("line")
-                .persist(StorageLevel.MEMORY_AND_DISK))
-            surv = light.join(boiler, "line", "left_anti")
-            bad_pos_per_doc = (
-                light.join(boiler, "line", "inner")
-                .groupBy(id_col)
-                .agg(F.collect_set("pos").alias("_badpos")))
-        if dedup_paragraphs:
-            # Same winner rule as dedup_lines_keep_first: minimal (id, pos)
-            # occurrence of each duplicated boilerplate-surviving line.
-            winners = (
-                surv.groupBy("line")
-                .agg(F.count(F.lit(1)).alias("n"),
-                     F.min(F.struct(F.col(id_col).alias("id"),
-                                    F.col("pos").alias("pos")))
-                     .alias("first"))
-                .filter(F.col("n") >= 2)
-                .select("line", "first"))
-            drops_per_doc = (
-                surv.join(winners, "line", "inner")
-                .filter(~((F.col(id_col) == F.col("first.id"))
-                          & (F.col("pos") == F.col("first.pos"))))
-                .groupBy(id_col)
-                .agg(F.collect_set("pos").alias("_drop")))
-
-        rebuilt = lines_src
-        if bad_pos_per_doc is not None:
-            rebuilt = rebuilt.join(bad_pos_per_doc, id_col, "left")
-        else:
-            rebuilt = rebuilt.withColumn(
-                "_badpos", F.lit(None).cast("array<int>"))
-        if drops_per_doc is not None:
-            rebuilt = rebuilt.join(drops_per_doc, id_col, "left")
-        else:
-            rebuilt = rebuilt.withColumn(
-                "_drop", F.lit(None).cast("array<int>"))
-        drop_all = F.when(
-            F.col("_badpos").isNull(), F.coalesce(
-                F.col("_drop"), F.array().cast("array<int>"))
-        ).when(
-            F.col("_drop").isNull(), F.col("_badpos")
-        ).otherwise(F.array_union(F.col("_badpos"), F.col("_drop")))
-        kept = F.when(
-            F.col("_badpos").isNull() & F.col("_drop").isNull(),
-            F.col("lines"),
-        ).otherwise(
-            F.filter(F.col("lines"),
-                     lambda _ln, i: ~F.array_contains(F.col("_dropall"), i)))
-        rebuilt = rebuilt.withColumn("_dropall", drop_all)
+        rebuilt = lines_src.join(
+            line_drops(light, id_col, boilerplate_min_df, dedup_paragraphs),
+            id_col, "left")
+        kept = kept_lines(F.col("lines"), F.col("_drop"))
         if drop_empty:
             # Decide emptiness from the kept lines, not the rebuilt text:
             # a filter on the text is pushed below the rebuild projection
             # and inlines the interpreted rebuild (and any redaction above
             # it) a second time. The '\n' separators are whitespace, so the
             # rebuilt text is blank exactly when every kept line is.
-            rebuilt = rebuilt.filter(F.size(F.filter(
-                F.col("lines"),
-                lambda ln, i: ~F.array_contains(F.col("_dropall"), i)
-                & ln.rlike(r"\S"))) > 0)
+            rebuilt = rebuilt.filter(
+                F.exists(kept, lambda ln: ln.rlike(r"\S")))
         rebuilt = rebuilt.select(
             F.col(id_col), F.concat_ws("\n", kept).alias(text_col))
         cur = cur.drop(text_col).join(rebuilt, id_col)

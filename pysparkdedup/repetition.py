@@ -1,7 +1,7 @@
 """Repetition / boilerplate operators for training-data curation.
 
-Two public-literature families the reference's per-mailbox model has no
-analog for, but a web-scale corpus pipeline needs alongside dedup:
+Public-literature curation filters the reference's per-mailbox model has
+no analog for, but a web-scale corpus pipeline needs alongside dedup:
 
 - ``repetition_stats`` — per-document repetition signals in the style of
   Gopher's repetition filters (Rae et al. 2021, "Scaling Language Models",
@@ -14,6 +14,18 @@ analog for, but a web-scale corpus pipeline needs alongside dedup:
   (navigation chrome, cookie banners, footers) is boilerplate; drop it from
   every document while preserving the order of what remains.
 
+- ``dedup_lines_keep_first`` — corpus-wide paragraph dedup in the style of
+  Dolma: every copy of a line except its first occurrence is removed.
+
+Both line ops, and the fused line section of ``curate.curate_pages``, are
+one shape — group the exploded lines, decide per line, drop per position —
+and share one primitive: ``line_drops`` computes the per-document drop
+positions of either stage or both, and ``kept_lines`` is the
+order-preserving positional filter that applies them. Each caller keeps
+only its own part: the standalone ops their accounting columns, curate its
+line unit, its blank-line exemption (blank lines are filtered out of the
+exploded frame before ``line_drops``) and its ``drop_empty`` test.
+
 Scale notes (100 TB):
 - ``repetition_stats`` / ``repetition_profile`` are SHUFFLE-FREE
   (plan-gated: zero Exchange nodes): per-document signals computed by an
@@ -21,11 +33,12 @@ Scale notes (100 TB):
   parallel, a mega-document costs only its own gram count within its
   task, and the whole batch is one factorize + one lexsort per n (no
   per-row Python). The line ops are pure JVM column algebra.
-- ``drop_boilerplate_lines`` dehydrates: only the (id, line) projection
-  rides the document-frequency aggregation (distinct-then-count; partial
-  agg absorbs hot boilerplate lines because count is O(1) state); the
-  rebuild filters each document's OWN lines array against broadcast-joined
-  per-doc hits, so the corpus text never shuffles.
+- The line ops dehydrate: only the light (id, pos, line) projection rides
+  the verdict aggregations (count-only / min-struct state, so partial agg
+  absorbs hot lines); both drop sets leave through one per-document
+  ``collect_set`` of positions, and the rebuild filters each document's
+  OWN lines array against that one per-doc frame, so the corpus text
+  never shuffles.
 """
 
 from __future__ import annotations
@@ -33,20 +46,17 @@ from __future__ import annotations
 import re
 from collections.abc import Iterator
 from decimal import ROUND_HALF_UP, Decimal
+from functools import reduce
 
 import numpy as np
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-
-def tokens_expr(text_col: str = "text") -> Column:
-    """Lowercased whitespace tokens (same tokenizer family as textstats)."""
-    return F.filter(
-        F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))), r"\s+"),
-        lambda t: t != "",
-    )
+from .cache import track
+from .textstats import tokens_col
 
 
 def with_chunk_lines(
@@ -62,7 +72,7 @@ def with_chunk_lines(
     once per chunk slice (no CSE inside lambda bodies) — O(len^2) per doc.
     """
     return (
-        df.withColumn("_toks", tokens_expr(text_col))
+        df.withColumn("_toks", tokens_col(text_col))
         .withColumn(out_col,
                     chunk_lines_expr(F.col("_toks"), tokens_per_line))
         .drop("_toks")
@@ -90,7 +100,8 @@ def chunk_lines_expr(tokens: Column, tokens_per_line: int) -> Column:
 
 
 # Java's default \s (no UNICODE_CHARACTER_CLASS): [ \t\n\x0B\f\r] — the
-# kernel must tokenize byte-identically to tokens_expr's F.split(..., \s+).
+# kernel must tokenize byte-identically to textstats.tokens_col's
+# F.split(..., \s+).
 _WS_RE = re.compile(r"[ \t\n\x0B\f\r]+")
 _Q4 = Decimal("0.0001")
 _GLEN_BITS = np.uint64(34)          # (count << 34) | gram_char_len packing
@@ -283,22 +294,105 @@ def repetition_stats(
         *[F.col(f"{c}_{n}").alias(c) for c in REP_COLS])
 
 
-def line_doc_frequency(
-    df: DataFrame,
-    lines_col: str = "lines",
-    id_col: str = "doc_id",
+def line_drops(
+    light: DataFrame,
+    id_col: str,
+    min_df: int = 0,
+    keep_first: bool = False,
 ) -> DataFrame:
-    """(line, df) — in how many distinct documents each line occurs.
+    """Per-document drop positions of the two corpus line stages.
 
-    Exact: distinct (id, line) first (repeated lines inside one document
-    count once), then count per line. Both shuffles carry count-only state.
+    ``light`` is an exploded ``(id_col, pos, line)`` frame. Returns one
+    ``(id_col, _drop)`` row per document that loses a line, ``_drop`` the
+    set of its dropped positions:
+    - ``min_df > 0`` (CCNet boilerplate): every occurrence of a line held
+      by at least ``min_df`` DISTINCT documents;
+    - ``keep_first`` (Dolma paragraph dedup): among the lines that survive
+      the boilerplate stage, every occurrence except the first — the
+      minimal (id, pos) under struct order, so the same occurrence wins at
+      any partitioning.
+
+    A null line joins neither dim (null keys match nothing), so it is never
+    dropped. Lines a caller wants exempt (curate's blank lines) are
+    filtered out of ``light`` before the call. Both sets leave through ONE
+    ``collect_set`` over their union, so a caller rebuilds against one
+    per-doc frame bounded by the docs that lose lines.
+
+    Scale notes: the boilerplate dim is distinct-then-count (count-only
+    shuffle state; partial agg absorbs hot footers) and is deliberately
+    NOT hint-broadcast — every line with df >= min_df qualifies, an
+    unbounded set at web scale, so AQE decides from its runtime size. It
+    is persisted only when both stages run, the one case with two
+    consumers (its hit positions and the survivors' anti-join). The winner
+    dim carries O(1) min-struct state and keeps only lines with >= 2
+    occurrences (a unique line can never be dropped).
     """
-    exploded = df.select(
-        F.col(id_col), F.explode(lines_col).alias("line"))
-    return (
-        exploded.distinct()
-        .groupBy("line")
-        .agg(F.count(F.lit(1)).alias("df"))
+    if min_df <= 0 and not keep_first:
+        raise ValueError("line_drops needs min_df > 0 or keep_first")
+    parts = []
+    surv = light
+    if min_df > 0:
+        boiler = (
+            light.select(id_col, "line").distinct()
+            .groupBy("line").agg(F.count(F.lit(1)).alias("df"))
+            .filter(F.col("df") >= min_df).select("line"))
+        if keep_first:
+            boiler = track(boiler.persist(StorageLevel.MEMORY_AND_DISK))
+            surv = light.join(boiler, "line", "left_anti")
+        parts.append(light.join(boiler, "line").select(id_col, "pos"))
+    if keep_first:
+        first = (
+            surv.groupBy("line")
+            .agg(F.count(F.lit(1)).alias("n"),
+                 F.min(F.struct(F.col(id_col).alias("id"),
+                                F.col("pos").alias("pos"))).alias("first"))
+            .filter(F.col("n") >= 2).select("line", "first"))
+        parts.append(
+            surv.join(first, "line")
+            .filter(~((F.col(id_col) == F.col("first.id"))
+                      & (F.col("pos") == F.col("first.pos"))))
+            .select(id_col, "pos"))
+    return (reduce(DataFrame.union, parts)
+            .groupBy(id_col).agg(F.collect_set("pos").alias("_drop")))
+
+
+def kept_lines(lines: Column, drop: Column) -> Column:
+    """``lines`` without the positions in ``drop`` (a ``line_drops`` set),
+    original order preserved; a null ``drop`` — a document that loses
+    nothing — keeps every line. Membership is an int-set test per
+    position, never a string comparison against the dropped lines."""
+    return F.when(drop.isNull(), lines).otherwise(
+        F.filter(lines, lambda _ln, i: ~F.array_contains(drop, i)))
+
+
+def _drop_lines(df: DataFrame, lines_col: str, id_col: str,
+                min_df: int = 0, keep_first: bool = False) -> DataFrame:
+    """The standalone line ops' shared body: explode, ``line_drops``, and
+    the ``(n_lines, kept_lines, clean_text, n_dropped)`` rebuild."""
+    # The light projection feeds the verdict dim AND the drop join; persist
+    # it so the caller's lines expression (often a chunking transform)
+    # evaluates once, not per consumer.
+    light = track(
+        df.select(F.col(id_col),
+                  F.posexplode(lines_col).alias("pos", "line"))
+        .persist(StorageLevel.MEMORY_AND_DISK))
+    drops = line_drops(light, id_col, min_df=min_df, keep_first=keep_first)
+    return df.select(
+        F.col(id_col),
+        F.greatest(F.size(lines_col), F.lit(0)).alias("n_lines"),
+        F.coalesce(
+            F.col(lines_col), F.array().cast("array<string>")
+        ).alias("_lines"),
+    ).join(drops, id_col, "left").select(
+        id_col,
+        "n_lines",
+        kept_lines(F.col("_lines"), F.col("_drop")).alias("kept_lines"),
+    ).select(
+        id_col,
+        "n_lines",
+        "kept_lines",
+        F.concat_ws("\n", "kept_lines").alias("clean_text"),
+        (F.col("n_lines") - F.size("kept_lines")).alias("n_dropped"),
     )
 
 
@@ -307,7 +401,6 @@ def drop_boilerplate_lines(
     min_df: int,
     lines_col: str = "lines",
     id_col: str = "doc_id",
-    keep_order: bool = True,
 ) -> DataFrame:
     """Remove every line occurring in >= ``min_df`` distinct documents
     (CCNet-style boilerplate filter).
@@ -319,85 +412,14 @@ def drop_boilerplate_lines(
     - ``clean_text`` : the surviving lines re-joined with ``'\\n'``;
     - ``n_lines`` / ``n_dropped`` : accounting.
 
-    The document payload never shuffles (the engine's dehydration principle):
-    only the light (id, pos, line) projection rides the document-frequency
-    aggregation, and the rebuild drops by POSITION — the exploded frame
-    already knows every occurrence's position, so collecting the hit
-    positions (ints, bounded by the doc's own line count) replaces the
-    former per-line ``array_contains`` scan over a per-doc STRING array —
-    O(lines x distinct_bad_lines x strlen) per document for template-heavy
-    docs — with an int-set membership test, the same form the fused curate
-    path uses (curate.py position drops). The per-doc hit frame is bounded
-    by (docs containing boilerplate) x (few ints each), which AQE
-    broadcasts in the common regime; the fallback is a shuffle join keyed
-    on id that still moves only hit positions, not the corpus.
-
-    The boilerplate dim itself is deliberately NOT hint-broadcast: unlike
-    the engine's capped hot-key dims (pairs/ngram/suffix), every distinct
-    line with df >= min_df qualifies, which at web scale is an unbounded
-    set (every footer variant in the crawl). AQE decides at runtime from
-    the aggregated size — broadcast when it fits, shuffle join (count-only
-    state, partial-agg absorbed) when it does not.
-
-    Null entries in the lines array are KEPT in every document: a null
-    line never matches the frequency dim (null joins nothing), so it
-    cannot be boilerplate and the positional drop passes it through —
-    consistent with documents that have no hits at all. (The pre-r7
-    ``array_contains`` formulation dropped nulls from any document with a
-    hit; the positional semantics are the deliberate fix, pinned by
-    test_drop_boilerplate_null_lines_are_kept.)
+    ``min_df`` must be positive; repeats inside one document count once
+    toward it. Blank lines are ordinary values here (curate_pages exempts
+    them). Null entries in the lines array are KEPT in every document: a
+    null line cannot be boilerplate (see ``line_drops``), pinned by
+    test_drop_boilerplate_null_lines_are_kept. Execution model and scale
+    notes: ``line_drops``; the document payload never shuffles.
     """
-    del keep_order  # order is always preserved by the array filter
-    from pyspark import StorageLevel
-
-    from .cache import track
-
-    # The light (id, pos, line) projection feeds BOTH the frequency count
-    # and the per-doc hit positions; persist it so the caller's lines
-    # expression (often a chunking transform) evaluates once, not per
-    # consumer.
-    light = track(
-        df.select(F.col(id_col),
-                  F.posexplode(lines_col).alias("pos", "line"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    boiler = (
-        light.select(id_col, "line").distinct()
-        .groupBy("line")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") >= min_df)
-        .select("line")
-    )
-
-    bad_per_doc = (
-        light.join(boiler, "line", "inner")
-        .groupBy(id_col)
-        .agg(F.collect_set("pos").alias("_badpos"))
-    )
-
-    joined = df.select(
-        F.col(id_col),
-        F.greatest(F.size(lines_col), F.lit(0)).alias("n_lines"),
-        F.coalesce(
-            F.col(lines_col), F.array().cast("array<string>")
-        ).alias("_lines"),
-    ).join(bad_per_doc, id_col, "left")
-
-    kept = F.when(
-        F.col("_badpos").isNull(), F.col("_lines")
-    ).otherwise(
-        F.filter(F.col("_lines"),
-                 lambda _ln, i: ~F.array_contains(F.col("_badpos"), i)))
-    return joined.select(
-        id_col,
-        "n_lines",
-        kept.alias("kept_lines"),
-    ).select(
-        id_col,
-        "n_lines",
-        "kept_lines",
-        F.concat_ws("\n", "kept_lines").alias("clean_text"),
-        (F.col("n_lines") - F.size("kept_lines")).alias("n_dropped"),
-    )
+    return _drop_lines(df, lines_col, id_col, min_df=min_df)
 
 
 def dedup_lines_keep_first(
@@ -412,68 +434,9 @@ def dedup_lines_keep_first(
 
     "First" is fully deterministic: the minimal (id, position) under
     lexicographic struct order — the same occurrence regardless of
-    partitioning or parallelism. Output mirrors drop_boilerplate_lines:
+    partitioning or parallelism — and intra-doc repeats of the winning
+    line are removed too. Output mirrors drop_boilerplate_lines:
     ``n_lines`` / ``n_dropped`` / ``kept_lines`` (original order) /
-    ``clean_text``.
-
-    Scale notes (100 TB): only the dehydrated (id, pos, line) projection
-    rides any shuffle — the winner-per-line aggregation carries O(1) state
-    (min-struct, count), so a paragraph duplicated across 10^10 documents is
-    absorbed by map-side partial aggregation; the winner dim keeps only
-    lines with >= 2 occurrences (unique lines can never be dropped), and the
-    occurrence->winner equi-join is left to AQE (broadcast when the dup dim
-    is small, skew-split when one line dominates). The rebuild drops by
-    POSITION (an int array bounded by each document's own line count), so
-    document text never shuffles and intra-doc repeats of the winning line
-    are removed precisely."""
-    from pyspark import StorageLevel
-
-    from .cache import track
-
-    light = track(
-        df.select(F.col(id_col),
-                  F.posexplode(lines_col).alias("pos", "line"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-
-    # One winner per duplicated line: minimal (id, pos) occurrence.
-    winners = (
-        light.groupBy("line")
-        .agg(F.count(F.lit(1)).alias("n"),
-             F.min(F.struct(F.col(id_col).alias("id"),
-                            F.col("pos").alias("pos"))).alias("first"))
-        .filter(F.col("n") >= 2)
-        .select("line", "first")
-    )
-
-    drops = (
-        light.join(winners, "line", "inner")
-        .filter(~((F.col(id_col) == F.col("first.id"))
-                  & (F.col("pos") == F.col("first.pos"))))
-        .groupBy(id_col)
-        .agg(F.collect_set("pos").alias("_drop"))
-    )
-
-    joined = df.select(
-        F.col(id_col),
-        F.greatest(F.size(lines_col), F.lit(0)).alias("n_lines"),
-        F.coalesce(
-            F.col(lines_col), F.array().cast("array<string>")
-        ).alias("_lines"),
-    ).join(drops, id_col, "left")
-
-    kept = F.when(
-        F.col("_drop").isNull(), F.col("_lines")
-    ).otherwise(
-        F.filter(F.col("_lines"),
-                 lambda _ln, i: ~F.array_contains(F.col("_drop"), i)))
-    return joined.select(
-        id_col,
-        "n_lines",
-        kept.alias("kept_lines"),
-    ).select(
-        id_col,
-        "n_lines",
-        "kept_lines",
-        F.concat_ws("\n", "kept_lines").alias("clean_text"),
-        (F.col("n_lines") - F.size("kept_lines")).alias("n_dropped"),
-    )
+    ``clean_text``. Execution model and scale notes: ``line_drops``; only
+    the dehydrated (id, pos, line) projection rides any shuffle."""
+    return _drop_lines(df, lines_col, id_col, keep_first=True)

@@ -12,6 +12,7 @@ Single place that pins the configs the engine relies on:
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
@@ -75,6 +76,15 @@ def get_spark(
         # see worker_daemon.py).
         .config("spark.python.daemon.module", "pysparkdedup.worker_daemon")
     )
+    if not submitted:
+        # The daemon module lives in this package, so the Python workers
+        # must import it even when this process found the package through
+        # sys.path alone (no PYTHONPATH, another working directory). PySpark
+        # merges this entry into every worker's PYTHONPATH. Under
+        # spark-submit, --py-files or the cluster image ship the package.
+        builder = builder.config(
+            "spark.executorEnv.PYTHONPATH",
+            str(Path(__file__).resolve().parent.parent))
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

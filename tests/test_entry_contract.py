@@ -45,8 +45,14 @@ def test_composite_oracles_have_unique_cte_names(name):
 
 
 def test_all_oracles_parse_in_duckdb():
-    """Syntax-check every oracle against empty tables of the real schemas —
-    catches a broken splice without paying a full sf0.01 replay."""
+    """Bind every oracle against empty tables of the real schemas — catches
+    a broken splice without paying a full sf0.01 replay — and reject any
+    HUGEINT or DECIMAL output column: DuckDB hands those to pandas as
+    float64 and to Arrow as decimal128, so a typed comparison against
+    Spark's BIGINT fails even when every value matches (a bare sum() or
+    list_sum() over BIGINT widens to HUGEINT; cast it back)."""
+    from tools.oracle_check import wide_columns
+
     con = duckdb.connect()
     sf = "/root/testdata/sf0.001"
     for t in ("region", "nation", "customer", "supplier", "part", "orders",
@@ -55,6 +61,7 @@ def test_all_oracles_parse_in_duckdb():
             f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet' LIMIT 0")
     for name, sql in entry.oracle_sql().items():
         try:
-            con.execute(f"SELECT * FROM ({sql}) LIMIT 0")
+            wide = wide_columns(con.sql(sql))
         except Exception as e:  # pragma: no cover - assertion formatting
             raise AssertionError(f"oracle {name} failed to parse: {e}") from e
+        assert not wide, f"oracle {name} emits {wide}"

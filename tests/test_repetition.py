@@ -1,15 +1,18 @@
 """Repetition stats, boilerplate line removal, benchmark decontamination."""
 
+import random
+import re
+from collections import defaultdict
+
 import pytest
 
 from pysparkdedup.decontam import contamination
 from pysparkdedup.repetition import (
     chunk_lines_expr,
     drop_boilerplate_lines,
-    line_doc_frequency,
     repetition_stats,
-    tokens_expr,
 )
+from pysparkdedup.textstats import tokens_col
 
 
 def docs(spark, rows):
@@ -49,7 +52,7 @@ def test_repetition_stats_short_doc_no_gram(spark):
 def test_chunk_lines(spark):
     text = " ".join(f"t{i}" for i in range(25))
     row = docs(spark, [(1, text)]).select(
-        chunk_lines_expr(tokens_expr(), 10).alias("lines")).head()
+        chunk_lines_expr(tokens_col(), 10).alias("lines")).head()
     lines = row["lines"]
     assert len(lines) == 3
     assert lines[0].split() == [f"t{i}" for i in range(10)]
@@ -61,13 +64,18 @@ def with_lines(spark, rows):
         rows, "doc_id long, lines array<string>")
 
 
-def test_line_doc_frequency_counts_docs_not_occurrences(spark):
+def test_drop_boilerplate_counts_docs_not_occurrences(spark):
+    # footer occurs 3 times but in only 2 documents: min_df counts docs
     d = with_lines(spark, [
         (1, ["footer", "footer", "body1"]),
         (2, ["footer", "body2"]),
     ])
-    freq = {r["line"]: r["df"] for r in line_doc_frequency(d).collect()}
-    assert freq == {"footer": 2, "body1": 1, "body2": 1}
+    got = by_id(drop_boilerplate_lines(d, min_df=3))
+    assert got[1]["kept_lines"] == ["footer", "footer", "body1"]
+    assert got[2]["n_dropped"] == 0
+    got = by_id(drop_boilerplate_lines(d, min_df=2))
+    assert got[1]["kept_lines"] == ["body1"]
+    assert got[2]["kept_lines"] == ["body2"]
 
 
 def test_drop_boilerplate_lines(spark):
@@ -337,3 +345,106 @@ def test_drop_boilerplate_null_lines_are_kept(spark):
     # a doc with no hits keeps nulls too (and is untouched)
     assert got[4]["kept_lines"] == [None, "solo"]
     assert got[4]["n_dropped"] == 0
+
+
+# -- seeded reference for the line stages ------------------------------------
+# drop_boilerplate_lines, dedup_lines_keep_first and curate_pages' fused
+# line section share one primitive (line_drops + kept_lines), so each is
+# checked here against plain Python implementing the documented rules.
+
+LINE_VOCAB = ["nav home", "cookie banner", "footer", "share this",
+              "read more", "related posts", "subscribe", "rare one",
+              "rare two", "rare three", "", "  "]
+LINE_WEIGHTS = [14, 10, 8, 6, 5, 4, 3, 2, 2, 1, 6, 3]
+_NON_WS = re.compile(r"[^ \t\n\x0b\f\r]")   # Java's \S
+
+
+def seeded_line_docs(seed=13, n=60):
+    """id -> lines: skewed shared vocabulary (document frequencies 2..27),
+    doc-local lines that repeat inside their doc, blank lines, null
+    entries, and empty and null arrays; ids in shuffled order."""
+    rng = random.Random(seed)
+    docs = {}
+    for j, i in enumerate(rng.sample(range(1, 500), n)):
+        if j < 5:
+            docs[i] = [] if j < 3 else None
+            continue
+        lines = []
+        for p in range(rng.randint(1, 8)):
+            r = rng.random()
+            if r < 0.05:
+                lines.append(None)
+            elif r < 0.35:
+                lines.append(f"body {i} {p % 3}")
+            else:
+                lines.append(rng.choices(LINE_VOCAB, LINE_WEIGHTS)[0])
+        docs[i] = lines
+    return docs
+
+
+def reference_drops(docs, min_df=0, keep_first=False, exempt=None):
+    """(id, pos) pairs dropped: a line is boilerplate when at least min_df
+    DISTINCT docs hold it; the keep-first winner is the minimal (id, pos)
+    among the survivors; a null line is never dropped; ``exempt`` lines
+    never take part."""
+    occ = sorted((i, p, ln) for i, lines in docs.items()
+                 for p, ln in enumerate(lines or [])
+                 if ln is not None and not (exempt and exempt(ln)))
+    holders = defaultdict(set)
+    for i, _, ln in occ:
+        holders[ln].add(i)
+    drop = {(i, p) for i, p, ln in occ
+            if min_df > 0 and len(holders[ln]) >= min_df}
+    if keep_first:
+        seen = set()
+        for i, p, ln in occ:
+            if (i, p) not in drop:
+                if ln in seen:
+                    drop.add((i, p))
+                seen.add(ln)
+    return drop
+
+
+def reference_rows(docs, drop):
+    out = {}
+    for i, lines in docs.items():
+        lines = lines or []
+        kept = [ln for p, ln in enumerate(lines) if (i, p) not in drop]
+        out[i] = {"doc_id": i, "n_lines": len(lines), "kept_lines": kept,
+                  "clean_text": "\n".join(ln for ln in kept
+                                          if ln is not None),
+                  "n_dropped": len(lines) - len(kept)}
+    return out
+
+
+def test_line_stages_match_python_reference(spark):
+    from pysparkdedup.curate import curate_pages
+    from pysparkdedup.repetition import dedup_lines_keep_first
+
+    docs = seeded_line_docs()
+    d = with_lines(spark, list(docs.items()))
+    assert by_id(dedup_lines_keep_first(d)) == reference_rows(
+        docs, reference_drops(docs, keep_first=True))
+
+    # newline text of the same docs: null entries cannot be spelled in
+    # text, a null array becomes null text, and blank lines are exempt
+    texts = {f"u/{i}": None if lines is None
+             else "\n".join(ln for ln in lines if ln is not None)
+             for i, lines in docs.items()}
+    pages = spark.createDataFrame(list(texts.items()),
+                                  "url string, text string")
+    split = {u: (t or "").split("\n") for u, t in texts.items()}
+    for k in (3, 10):
+        drop = reference_drops(docs, min_df=k)
+        assert by_id(drop_boilerplate_lines(d, min_df=k)) == reference_rows(
+            docs, drop)
+        drop = reference_drops(split, min_df=k, keep_first=True,
+                               exempt=lambda ln: not _NON_WS.search(ln))
+        want = {u: "\n".join(ln for p, ln in enumerate(lines)
+                             if (u, p) not in drop)
+                for u, lines in split.items()}
+        got = curate_pages(pages, boilerplate_min_df=k, dedup_paragraphs=True,
+                           line_mode="newline")
+        assert {r["url"]: r["text"] for r in got.collect()} == want
+    # the two thresholds split the shared vocabulary differently
+    assert reference_drops(docs, min_df=3) != reference_drops(docs, min_df=10)

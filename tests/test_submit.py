@@ -1,4 +1,5 @@
-"""spark-submit --py-files deployment path, end-to-end.
+"""Deployment paths, end-to-end: spark-submit --py-files, and a plain
+script that finds the package through sys.path alone.
 
 The north rule requires the pipeline to run via ``spark-submit --py-files``
 on a cluster; this drives the exact artifact chain a cluster submit uses —
@@ -12,6 +13,7 @@ import os
 import shutil
 import subprocess
 import sys
+import textwrap
 
 import pytest
 
@@ -66,3 +68,28 @@ def test_spark_submit_py_files_end_to_end(spark, pages_factory, tmp_path):
     assert proc.returncode == 0, proc.stderr[-4000:]
     got = {r["url"] for r in spark.read.parquet(out).collect()}
     assert got == {"u/dup-new", "u/solo"}
+
+
+def test_get_spark_workers_import_package_from_foreign_cwd(tmp_path):
+    """A script that reaches the package only through sys.path.insert, run
+    from another directory with no PYTHONPATH: the worker daemon module is
+    in the package, so get_spark must put the package on the workers' path
+    or the first Python task dies with "No module named 'pysparkdedup'"."""
+    script = tmp_path / "one_job.py"
+    script.write_text(textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {REPO!r})
+        from pysparkdedup.session import get_spark
+
+        spark = get_spark(master="local[2]")
+        df = spark.range(4).mapInPandas(lambda it: it, "id long")
+        print("ROWS", df.count())
+        spark.stop()
+    """))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEM"] = "1g"
+    proc = subprocess.run(
+        [sys.executable, str(script)], cwd=str(tmp_path), env=env,
+        capture_output=True, text=True, timeout=300)
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert "ROWS 4" in proc.stdout

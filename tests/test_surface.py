@@ -16,7 +16,6 @@ TEST_ONLY = {
     "pair_diff_lengths": "content-guard debug table (reference --show-diff)",
     "exact_binary_dedup": "byte-identical media dedup beside the dHash path",
     "run_and_check": "one-call run plus invariant check, the verify recipe",
-    "line_doc_frequency": "line counts drop_boilerplate_lines thresholds",
     "union_sources": "multi-source registration, no CLI flag yet",
     "hot_old_bucket_count": "cross-corpus skew probe, until the run report",
 }

@@ -3,7 +3,11 @@
 Runs each __spark_entry__ queries()[name] on Spark and oracle_sql()[name] on
 DuckDB over the same sf dir, compares row count + order-insensitive value
 hash (columns sorted by name, rows sorted, values stringified with float
-rounding). Usage: python tools/oracle_check.py [sf_dir] [query ...]
+rounding). An oracle column typed HUGEINT or DECIMAL fails too: the hash
+here reads Python ints from fetchall(), but a typed consumer (pandas via
+rel.df(), Arrow) turns those into float64 / decimal128 and no longer
+matches Spark's BIGINT. Usage: python tools/oracle_check.py [sf_dir]
+[query ...]
 """
 
 from __future__ import annotations
@@ -17,6 +21,12 @@ sys.path.insert(0, ".")
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
+
+
+def wide_columns(rel) -> list[str]:
+    """Columns of a DuckDB relation whose type no Spark integer matches."""
+    return [f"{c}:{t}" for c, t in zip(rel.columns, map(str, rel.types))
+            if t == "HUGEINT" or t.startswith("DECIMAL")]
 
 
 def value_hash(cols, rows) -> str:
@@ -76,6 +86,11 @@ def main() -> None:
             drows = rel.fetchall()
         except Exception as e:
             print(f"FAIL  {name}: duckdb error: {e}")
+            failures.append(name)
+            continue
+        wide = wide_columns(rel)
+        if wide:
+            print(f"FAIL  {name}: oracle column type {', '.join(wide)}")
             failures.append(name)
             continue
         ok_count = len(srows) == len(drows)

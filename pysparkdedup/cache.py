@@ -1,7 +1,7 @@
 """Scoped lifecycle for library-internal persisted frames.
 
 Several operators persist() intermediate frames because Spark has no
-DAG-level CSE (signatures feed banding + both verify-join sides, bucket
+DAG-level CSE (signatures feed banding + the scorer's payload joins, bucket
 sizes feed the cold and hot branches, ...). Those persists used to live for
 the whole session: every LSH invocation — and each run of an incremental /
 daemon loop — leaked one cached frame (ADVICE r2). The fix is scope-based:

@@ -21,9 +21,10 @@ Pipeline (all JVM joins, skew-aware):
    (rep fails verify, another hot-bucket member would have passed) is the
    same observable trade pairs.py makes, surfaced via
    ``hot_old_bucket_count``.
-3. verify: candidate (new, old) pairs score signature-jaccard
-   (zip_with/aggregate column algebra, no UDF); best match per new doc
-   picked deterministically (highest jaccard, then smallest old url).
+3. verify: candidate (new, old) pairs score signature-jaccard in the
+   shared pair-row kernel (pairs.score_pairs, new side's signature against
+   the old side's); best match per new doc picked deterministically
+   (highest jaccard, then smallest old url).
 
 Output: one row per new page — (url, status exact_dup|near_dup|unique,
 dup_of, jaccard).
@@ -35,7 +36,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .config import DedupConfig
-from .minhash import jaccard_col, lsh_bands, minhash_signatures
+from .minhash import _equal_fraction, lsh_bands, minhash_signatures
+from .pairs import score_pairs
 
 DEFAULT_CROSS_CAP = 2000
 
@@ -170,24 +172,14 @@ def dedup_against(
     old_stats = old_dims["band_stats"] if old_dims is not None else None
     pairs = cross_candidate_pairs(
         lsh_bands(new_sigs, cfg), old_bands, cap=cap, old_stats=old_stats)
-    sa = new_sigs.select("url", F.col("minhash").alias("_sig_a"))
-    sb = old_sigs.select(
-        F.col("url").alias("old_url"), F.col("minhash").alias("_sig_b"))
-    # Persist the slim scored frame BEFORE the threshold filter: the
-    # jaccard estimate is an interpreted aggregate-over-zip_with
-    # (CodegenFallback), and filtering on it directly inlines the whole
-    # expression into the predicate next to the projected copy — 2x
-    # evaluation per candidate pair. The persist boundary evaluates once.
-    scored = track(
-        pairs.join(sa, "url").join(sb, "old_url")
-        .select("url", "old_url",
-                jaccard_col(F.col("_sig_a"), F.col("_sig_b"), cfg.num_perm)
-                .alias("jaccard"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    scored = score_pairs(
+        pairs.select(F.col("url").alias("a"), F.col("old_url").alias("b")),
+        new_sigs, old_sigs.select("url", "minhash"), _equal_fraction,
+        "jaccard",
     ).filter(F.col("jaccard") >= cfg.jaccard_threshold)
-    best = scored.groupBy("url").agg(
+    best = scored.groupBy(F.col("a").alias("url")).agg(
         F.min(F.struct((-F.col("jaccard")).alias("nj"),
-                       F.col("old_url").alias("u"))).alias("_b"))
+                       F.col("b").alias("u"))).alias("_b"))
 
     out = (
         new_pages.select("url")

@@ -221,13 +221,12 @@ def guard_group_aggs(cfg: DedupConfig) -> list:
 
 
 def apply_guards(df: DataFrame, cfg: DedupConfig, key: str = "cluster_key",
-                 max_eviction_group: int | None = None,
                  group_stats: DataFrame | None = None) -> DataFrame:
     """Annotate rows with ``evicted`` (bool) and ``guard_skip_kind``
     ('size' | 'content' | null = whole-set skip).
 
-    ``max_eviction_group`` defaults to ``cfg.max_eviction_group``: a
-    guard-failing cluster larger than the bound is skip-accounted WHOLE
+    A guard-failing cluster larger than ``cfg.max_eviction_group`` (default
+    MAX_EVICTION_GROUP) is skip-accounted WHOLE
     (every member keeps evicted=False and gets guard_skip_kind — never
     silently truncated), bounding the pairwise diff at O(bound^2).
 
@@ -239,10 +238,8 @@ def apply_guards(df: DataFrame, cfg: DedupConfig, key: str = "cluster_key",
     leaves the JVM. The group-stats join lives only inside the verdicts
     branch; the returned spine is just ``df ⋈(url) verdicts``.
     """
-    if max_eviction_group is None:
-        max_eviction_group = getattr(
-            cfg, "max_eviction_group", MAX_EVICTION_GROUP)
     st, ct = cfg.size_threshold, cfg.content_threshold
+    cap = cfg.max_eviction_group
     if st < 0 and ct < 0:
         return df.withColumn("evicted", F.lit(False)).withColumn(
             "guard_skip_kind", F.lit(None).cast("string"))
@@ -274,7 +271,7 @@ def apply_guards(df: DataFrame, cfg: DedupConfig, key: str = "cluster_key",
     passes = (F.col("_gd_n") == 1) | (spread_ok & (F.lit(ct < 0) | one_body))
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _evict_group(pdf, st, ct, max_eviction_group)
+        return _evict_group(pdf, st, ct, cap)
 
     # Verdicts exist only for rows of suspicious groups; everyone else gets
     # the defaults through the left join — no branch-and-union, so the

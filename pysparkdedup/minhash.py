@@ -15,9 +15,12 @@ Physical design for 10^12 docs:
   worker tasks in chunks of 200 (ref deduplicate.py:688-694) but Arrow-sized;
 - band hashing is JVM-side (``xxhash64`` over signature slices) so banding
   adds no Python;
-- candidate pairing goes through pairs.bucket_pairs (salted-star hot buckets);
-- verification (estimated Jaccard = fraction of equal signature positions) is
-  pure column algebra over a zip_with.
+- pairing and verification are one step, pairs.scored_edges: each cold band
+  bucket is paired and scored in one fused Arrow kernel, hot buckets degrade
+  to salted-star pairs, and the score is the estimated Jaccard — the
+  fraction of equal signature positions (``_equal_fraction``), exactly
+  k/num_perm. ``candidate_pairs`` + ``estimate_jaccard`` are the same
+  step split at the pair list, the reference form the benches time.
 
 Shingle hashing: tokens -> 64-bit blake2b (memoized per batch), word
 k-shingles combined with a vectorized rolling polynomial, masked into the
@@ -31,13 +34,13 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .components import connected_components
 from .config import DedupConfig
-from .pairs import bucket_pairs
+from .pairs import bucket_pairs, score_pairs, scored_edges
 
 MERSENNE_31 = np.uint64((1 << 31) - 1)
 _POLY_BASE = np.uint64(1099511628211)  # FNV prime, shingle combiner
@@ -164,45 +167,30 @@ def candidate_pairs(bands_df: DataFrame, cfg: DedupConfig) -> DataFrame:
     return pairs.dropDuplicates(["a", "b"])
 
 
-def jaccard_col(a: Column, b: Column, num_perm: int) -> Column:
-    """Estimated Jaccard of two MinHash signature columns: the fraction of
-    equal positions, as column algebra."""
-    matches = F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
-    return matches / F.lit(num_perm)
+def _equal_fraction(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Estimated Jaccard of two (n, num_perm) signature matrices, row-wise:
+    the fraction of equal positions."""
+    return (a == b).sum(1) / a.shape[1]
 
 
 def estimate_jaccard(pairs: DataFrame, sig_df: DataFrame,
                      cfg: DedupConfig) -> DataFrame:
-    """(a, b, jaccard) — fraction of equal MinHash positions, column algebra."""
-    sa = sig_df.select(F.col("url").alias("a"), F.col("minhash").alias("_sig_a"))
-    sb = sig_df.select(F.col("url").alias("b"), F.col("minhash").alias("_sig_b"))
-    joined = pairs.join(sa, "a").join(sb, "b")
-    return joined.withColumn(
-        "jaccard", jaccard_col(F.col("_sig_a"), F.col("_sig_b"), cfg.num_perm)
-    ).select("a", "b", "jaccard")
+    """(a, b, jaccard) — fraction of equal MinHash positions of each pair,
+    scored by the pair-row kernel (the signatures' width is
+    ``cfg.num_perm``)."""
+    sigs = sig_df.select("url", "minhash")
+    return score_pairs(pairs, sigs, sigs, _equal_fraction, "jaccard")
 
 
 def minhash_edges(pages: DataFrame, cfg: DedupConfig,
                   sigs: DataFrame | None = None) -> DataFrame:
     """Verified near-dup edges (a, b, jaccard >= threshold).
 
-    Signatures are persisted (memory+disk) — they feed banding AND both sides
-    of the verification join; without the persist the Python signature kernel
-    would run three times. Pass ``sigs`` (url, minhash) to reuse checkpointed
-    signatures (checkpoint.py) instead of recomputing — the resume path.
-
-    The scored frame is persisted BEFORE the threshold filter: the jaccard
-    estimate is an aggregate-over-zip_with higher-order expression
-    (CodegenFallback — interpreted, no subexpression reuse), and filtering
-    directly on it lets Catalyst inline the whole expression into the
-    predicate alongside the projected copy — 2x evaluation per candidate
-    pair (the same mechanism the curate pass measured at ~7x on its
-    heavier expression). The persist boundary forces one evaluation into
-    a slim (a, b, jaccard) cache the filter then reads."""
+    Signatures are persisted (memory+disk) — they feed banding AND the
+    scorer's payload joins; without the persist the Python signature kernel
+    would run again for each. Pass ``sigs`` (url, minhash) to reuse
+    checkpointed signatures (checkpoint.py) instead of recomputing — the
+    resume path."""
     from pyspark import StorageLevel
 
     from .cache import track
@@ -211,12 +199,10 @@ def minhash_edges(pages: DataFrame, cfg: DedupConfig,
         sigs = minhash_signatures(pages, cfg)
     sigs = track(
         sigs.select("url", "minhash").persist(StorageLevel.MEMORY_AND_DISK))
-    bands = lsh_bands(sigs, cfg)
-    pairs = candidate_pairs(bands, cfg)
-    scored = track(
-        estimate_jaccard(pairs, sigs, cfg)
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    return scored.filter(F.col("jaccard") >= cfg.jaccard_threshold)
+    return scored_edges(
+        lsh_bands(sigs, cfg), ["band_id", "band_hash"], sigs,
+        _equal_fraction, "jaccard",
+        F.col("jaccard") >= cfg.jaccard_threshold, cap=cfg.max_bucket_size)
 
 
 def minhash_clusters(pages: DataFrame, cfg: DedupConfig,

@@ -4,8 +4,9 @@ Complements MinHash for near-exact duplicates: two documents whose SimHashes
 differ in <= ``hamming_threshold`` bits are candidates. Candidate generation
 uses the pigeonhole block trick: split the 64-bit signature into
 (threshold + 1) blocks — any pair within Hamming distance k agrees exactly on
-at least one block — equi-join on (block_id, block_value) via the shared
-skew-aware bucket pairing, then verify with ``bit_count(xor) <= k`` JVM-side.
+at least one block — then pair and verify each (block_id, block_value)
+bucket in the shared skew-aware scorer (pairs.scored_edges): the Hamming
+popcount of ``a ^ b`` (``_hamming``) must be <= k.
 
 Signature computation is a vectorized pandas UDF: per-batch unique-token
 hashing (memoized blake2b), per-doc unpacked-bit vote accumulation in numpy.
@@ -23,7 +24,7 @@ from pyspark.sql import types as T
 
 from .components import connected_components
 from .config import DedupConfig
-from .pairs import bucket_pairs
+from .pairs import scored_edges
 
 SIMHASH_SCHEMA = T.StructType([
     T.StructField("url", T.StringType(), False),
@@ -103,12 +104,19 @@ def simhash_blocks(sig_df: DataFrame, cfg: DedupConfig,
     )
 
 
+def _hamming(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Hamming distance of two (n, 1) int64 SimHash matrices, row-wise: the
+    popcount of ``a ^ b``."""
+    bits = np.unpackbits((a ^ b).view(np.uint8), axis=1)
+    return bits.sum(1, dtype=np.int32)
+
+
 def simhash_edges(pages: DataFrame, cfg: DedupConfig,
                   sigs: DataFrame | None = None) -> DataFrame:
     """Verified (a, b, hamming) edges with hamming <= threshold. Signatures
-    persisted: they feed blocking AND both verify-join sides. Pass ``sigs``
-    (url, simhash) to reuse checkpointed signatures (checkpoint.py) instead
-    of recomputing — the resume path."""
+    persisted: they feed blocking AND the scorer's payload joins. Pass
+    ``sigs`` (url, simhash) to reuse checkpointed signatures
+    (checkpoint.py) instead of recomputing — the resume path."""
     from pyspark import StorageLevel
 
     from .cache import track
@@ -117,20 +125,11 @@ def simhash_edges(pages: DataFrame, cfg: DedupConfig,
         sigs = simhash_signatures(pages)
     sigs = track(
         sigs.select("url", "simhash").persist(StorageLevel.MEMORY_AND_DISK))
-    blocks = simhash_blocks(sigs, cfg)
-    pairs = bucket_pairs(
-        blocks, ["block_id", "block_val"], id_col="url", cap=cfg.max_bucket_size
-    ).dropDuplicates(["a", "b"])
-    sa = sigs.select(F.col("url").alias("a"), F.col("simhash").alias("_ha"))
-    sb = sigs.select(F.col("url").alias("b"), F.col("simhash").alias("_hb"))
-    scored = (
-        pairs.join(sa, "a")
-        .join(sb, "b")
-        .withColumn("hamming", F.bit_count(F.col("_ha").bitwiseXOR(F.col("_hb"))))
-    )
-    return scored.filter(F.col("hamming") <= cfg.hamming_threshold).select(
-        "a", "b", "hamming"
-    )
+    return scored_edges(
+        simhash_blocks(sigs, cfg), ["block_id", "block_val"],
+        sigs.select("url", F.array("simhash").alias("simhash")),
+        _hamming, "hamming", F.col("hamming") <= cfg.hamming_threshold,
+        cap=cfg.max_bucket_size, dtype="int")
 
 
 def simhash_clusters(pages: DataFrame, cfg: DedupConfig,

@@ -14,14 +14,16 @@ Two paths over an ``array<float>`` embedding column:
   centroids (``ivf_centroids``), queries probe ``nprobe`` lists; recall is
   tunable with n_list/nprobe and candidates are bounded by list sizes.
 
-Also ``cosine_pairs_exact`` — exact cosine between explicit id pairs (used by
-the embedding near-dup detector and the DuckDB oracle: deterministic left-fold
-sum, double precision end to end).
+Every exact cosine here — the ANN re-rank, ``embedding_dup_edges`` and
+``cosine_pairs_exact`` (explicit id pairs) — is ``_fold_mats`` run by the
+shared scoring kernels of pairs.py: a deterministic per-dimension left fold
+in double precision, bit-identical to the DuckDB oracle replay.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -29,29 +31,19 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-
-def _dot(a: F.Column, b: F.Column) -> F.Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _norm(a: F.Column) -> F.Column:
-    return F.sqrt(_dot(a, a))
-
-
-def cosine_col(a: F.Column, b: F.Column) -> F.Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
+from .pairs import _SCORE_SLICE, score_pairs, scored_edges  # noqa: F401
+from .pairs import _score_buckets as _bucket_kernel
 
 
 def _fold_mats(ea: np.ndarray, eb: np.ndarray) -> np.ndarray:
-    """Row-wise cosine between two (n, dim) float64 matrices as an ordered
-    per-dimension left fold — the same operation order (and hence the same
-    IEEE doubles) as the column-algebra ``cosine_col`` and the DuckDB
-    ``list_reduce`` oracle replay; a BLAS matmul's pairwise-summation
-    order is unspecified and could differ in the last ulp."""
+    """Row-wise cosine between two (n, dim) matrices, upcast to float64, as
+    an ordered per-dimension left fold — the same operation order (and
+    hence the same IEEE doubles) as the DuckDB ``list_reduce`` oracle
+    replay; a BLAS matmul's pairwise-summation order is unspecified and
+    could differ in the last ulp. The embedding family's score for the
+    shared kernels of pairs.py."""
+    ea = np.asarray(ea, dtype=np.float64)
+    eb = np.asarray(eb, dtype=np.float64)
     dot = np.zeros(len(ea), np.float64)
     na = np.zeros(len(ea), np.float64)
     nb = np.zeros(len(ea), np.float64)
@@ -63,45 +55,10 @@ def _fold_mats(ea: np.ndarray, eb: np.ndarray) -> np.ndarray:
     return dot / (np.sqrt(na) * np.sqrt(nb))
 
 
-def _vectors(ids, embs) -> np.ndarray:
-    """(n, dim) float64 matrix of an Arrow ``list<float>`` column whose rows
-    belong to ``ids``; dim is the column's most common non-zero length.
-
-    A null, empty or ragged vector would fold to a NaN cosine that the
-    threshold filter then drops without a trace, so it raises ValueError
-    naming its id instead. A clean list column is one contiguous values
-    buffer, so it reshapes without per-row work."""
-    import pyarrow.compute as pc
-
-    elens = pc.list_value_length(embs).fill_null(0).to_numpy()
-    counts = np.bincount(elens, minlength=1)
-    counts[0] = 0  # null and empty vectors never set the dim
-    dim = int(counts.argmax())
-    bad = np.flatnonzero((elens != dim) | (elens == 0))
-    if len(bad):
-        raise ValueError(
-            f"embedding of id {ids[int(bad[0])]} is null, empty or not "
-            f"{dim}-dimensional like the rest of its batch")
-    return np.asarray(embs.flatten()).reshape(
-        len(embs), dim).astype(np.float64)
-
-
-def _score_pairs(batches):
-    """mapInArrow kernel: (a, b, a's vector, b's vector) rows ->
-    (a, b, cosine)."""
-    import pyarrow as pa
-
-    for batch in batches:
-        if not batch.num_rows:
-            continue
-        a, b = batch.column(0), batch.column(1)
-        ea, eb = _vectors(a, batch.column(2)), _vectors(b, batch.column(3))
-        if ea.shape != eb.shape:
-            raise ValueError(
-                f"embedding of id {b[0]} is not {ea.shape[1]}-dimensional "
-                f"like that of id {a[0]}")
-        yield pa.RecordBatch.from_arrays(
-            [a, b, pa.array(_fold_mats(ea, eb))], names=["a", "b", "cosine"])
+# The cosine form of the shared bucket kernel and its slice size, kept only
+# because test_similarity imports them from here (ROADMAP item 4).
+_score_buckets = partial(_bucket_kernel, score=_fold_mats, name="cosine",
+                         label="embedding")
 
 
 def cosine_pairs_exact(pairs: DataFrame, emb: DataFrame,
@@ -110,29 +67,12 @@ def cosine_pairs_exact(pairs: DataFrame, emb: DataFrame,
     """pairs(a, b) + emb(id, embedding) -> (a, b, cosine).
 
     The joins are JVM (AQE broadcasts the embedding dim when it fits); the
-    cosine itself is a batched numpy kernel rather than the column-algebra
-    ``cosine_col``: three aggregate-over-zip_with higher-order expressions
-    per row are CodegenFallback (interpreted, per-element allocation) —
-    the dominant cost when LSH buckets emit 10^8 candidates. BIT-EXACT
-    parity with ``cosine_col`` and the DuckDB ``list_reduce`` oracle
-    replay is preserved by accumulating the dot/norm sums as an ordered
-    per-dimension left fold (``acc += a[:, d] * b[:, d]`` — same
-    operation order, same IEEE doubles; the same trick hyperplane_buckets
-    uses instead of a BLAS matmul, whose pairwise-summation order is
-    unspecified). A null, empty or ragged vector raises ValueError, as in
-    the fused bucket kernel."""
-    schema = T.StructType([
-        T.StructField("a", pairs.schema["a"].dataType, True),
-        T.StructField("b", pairs.schema["b"].dataType, True),
-        T.StructField("cosine", T.DoubleType(), True),
-    ])
-    ea = emb.select(F.col(id_col).alias("a"), F.col(emb_col).alias("_ea"))
-    eb = emb.select(F.col(id_col).alias("b"), F.col(emb_col).alias("_eb"))
-    return (
-        pairs.join(ea, "a").join(eb, "b")
-        .select("a", "b", "_ea", "_eb")
-        .mapInArrow(_score_pairs, schema=schema)
-    )
+    cosine is the shared pair-row kernel (pairs.score_pairs) over
+    ``_fold_mats``, bit-exact with the DuckDB ``list_reduce`` oracle
+    replay. A null, empty or ragged vector raises ValueError, as in the
+    fused bucket kernel."""
+    vecs = emb.select(id_col, emb_col)
+    return score_pairs(pairs, vecs, vecs, _fold_mats, "cosine")
 
 
 _TOPK_SCHEMA = T.StructType([
@@ -300,81 +240,6 @@ def _auto_n_bits(n_vectors: int, occupancy: int = TARGET_BUCKET_OCCUPANCY,
     return max(lo, min(hi, round(math.log2(n_vectors / occupancy))))
 
 
-# Pairs folded per kernel step: bounds the kernel's float64 working set to
-# O(slice x dim) however many buckets one Arrow batch carries.
-_SCORE_SLICE = 65536
-
-
-def _score_buckets(batches):
-    """mapInArrow kernel: batches of one ``list<struct<_i, _e>>`` column,
-    one id-sorted bucket per row -> (a, b, cosine) for every within-bucket
-    pair with a != b, in slices of at most _SCORE_SLICE pairs."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    for batch in batches:
-        ms = batch.column(0)
-        members = ms.flatten()
-        if not len(members):
-            continue
-        offs = np.asarray(ms.offsets, dtype=np.int64)
-        lens = np.diff(offs)
-        starts = offs[:-1] - offs[0]  # offsets are absolute on slices
-        ids = members.field(0)
-        mat = _vectors(ids, members.field(1))
-        ai_all, bi_all = [], []
-        for m in np.unique(lens[lens >= 2]):
-            ti, tj = np.triu_indices(int(m), 1)
-            bstarts = starts[lens == m]
-            ai_all.append((bstarts[:, None] + ti[None, :]).ravel())
-            bi_all.append((bstarts[:, None] + tj[None, :]).ravel())
-        if not ai_all:
-            continue
-        ai_all, bi_all = np.concatenate(ai_all), np.concatenate(bi_all)
-        for lo in range(0, len(ai_all), _SCORE_SLICE):
-            ai = ai_all[lo:lo + _SCORE_SLICE]
-            bi = bi_all[lo:lo + _SCORE_SLICE]
-            # A duplicated id pairs with itself: never an edge.
-            keep = pc.not_equal(ids.take(ai), ids.take(bi)).to_numpy(
-                zero_copy_only=False)
-            ai, bi = ai[keep], bi[keep]
-            yield pa.RecordBatch.from_arrays(
-                [ids.take(ai), ids.take(bi),
-                 pa.array(_fold_mats(mat[ai], mat[bi]))],
-                names=["a", "b", "cosine"])
-
-
-def _bucket_scored_edges(members: DataFrame, id_col: str,
-                         emb_col: str) -> DataFrame:
-    """(a, b, cosine) for every within-bucket pair of ``members``
-    (id, emb, table_id, bucket) — pairing and exact-cosine scoring fused
-    into ONE aggregation + mapInArrow, so the embedding payload crosses
-    the Python boundary once per BUCKET MEMBER instead of twice per
-    CANDIDATE PAIR (the pairs -> join(ea) -> join(eb) chain of
-    ``cosine_pairs_exact`` ships each vector once per pair it appears in;
-    at the target occupancy of ~32 that is ~16 ships per vector per table
-    vs exactly 1 here).
-
-    Members are sorted by id inside the bucket (JVM sort_array), giving
-    a < b pair order — identical pair canonicalization to
-    pairs.bucket_pairs. The cosine is the same ordered per-dimension left
-    fold as ``cosine_pairs_exact`` (_fold_mats over float64 upcasts of the
-    same float32 values), so scores are bit-identical to the join path."""
-    st = F.struct(F.col(id_col).alias("_i"), F.col(emb_col).alias("_e"))
-    grouped = (
-        members.groupBy("table_id", "bucket")
-        .agg(F.sort_array(F.collect_list(st)).alias("_ms"))
-        .select("_ms")
-    )
-    id_type = members.schema[id_col].dataType
-    schema = T.StructType([
-        T.StructField("a", id_type, True),
-        T.StructField("b", id_type, True),
-        T.StructField("cosine", T.DoubleType(), True),
-    ])
-    return grouped.mapInArrow(_score_buckets, schema=schema)
-
-
 def embedding_dup_edges(emb: DataFrame, threshold: float = 0.95,
                         n_tables: int = 12, n_bits: int | None = None,
                         seed: int = 42, id_col: str = "vec_id",
@@ -394,43 +259,29 @@ def embedding_dup_edges(emb: DataFrame, threshold: float = 0.95,
     verifies. Feed components.connected_components for embedding-level dup
     clusters — the vector analog of MinHash-LSH.
 
-    Skew is gated per bucket by pairs.split_buckets: every cold bucket
+    Skew is gated per bucket by pairs.scored_edges: every cold bucket
     (<= ``max_bucket`` members) is paired and scored by the fused per-bucket
-    kernel (decide with small rows, move heavy bytes once); only
-    the hot buckets' salted-star pairs take the id-keyed embedding joins of
-    ``cosine_pairs_exact``. Both score with the same fold, so a pair is
+    kernel (decide with small rows, move heavy bytes once); only the hot
+    buckets' salted-star pairs take the id-keyed vector joins of the
+    pair-row kernel. Both fold with ``_fold_mats``, so a pair is
     bit-identical whichever branch emits it."""
     from pyspark import StorageLevel
 
     from .cache import track
-    from .pairs import split_buckets
 
     if n_bits is None:
         n_bits = _auto_n_bits(emb.select(id_col).count())
     # Slim (id, table, bucket) rows persisted once: they feed the size
-    # aggregation, the hot-bucket probe AND both branches below, so the
-    # Python bucketing kernel runs exactly once.
+    # aggregation, the hot-bucket probe AND both branches, so the Python
+    # bucketing kernel runs exactly once.
     buckets = track(
         hyperplane_buckets(emb, n_tables, n_bits, seed=seed,
                            id_col=id_col, emb_col=emb_col)
         .persist(StorageLevel.MEMORY_AND_DISK))
-    cold_rows, star_pairs = split_buckets(
-        buckets, ["table_id", "bucket"], id_col, cap=max_bucket)
-    # Attach each cold member's vector once by id (AQE broadcasts the
-    # embedding frame when it fits; SHJ otherwise). A pair colliding in
-    # several tables is scored per collision (identical fold, identical
-    # value) and canonicalized by dropDuplicates.
-    scored = _bucket_scored_edges(
-        cold_rows.join(emb.select(id_col, emb_col), id_col), id_col, emb_col)
-    if star_pairs is not None:
-        scored = scored.unionByName(cosine_pairs_exact(
-            star_pairs, emb, id_col=id_col, emb_col=emb_col))
-    # Threshold BEFORE the (a, b) canonicalization: a pair colliding in k
-    # tables carries k identical fold values, so filtering first is
-    # result-identical and the dedup exchange moves only the survivors
-    # (sub-threshold candidates — the vast majority — never shuffle).
-    return (scored.filter(F.col("cosine") >= threshold)
-            .dropDuplicates(["a", "b"]))
+    return scored_edges(
+        buckets, ["table_id", "bucket"], emb.select(id_col, emb_col),
+        _fold_mats, "cosine", F.col("cosine") >= threshold,
+        id_col=id_col, cap=max_bucket)
 
 
 def embedding_dup_clusters(emb: DataFrame, threshold: float = 0.95,
@@ -556,6 +407,25 @@ def _ivf_assign(df: DataFrame, cent_pdf: pd.DataFrame, nprobe: int,
     return df.select(id_col, emb_col).mapInPandas(assign, schema=schema)
 
 
+def _rerank(cand: DataFrame, corpus: DataFrame, queries: DataFrame, k: int,
+            id_col: str, emb_col: str) -> DataFrame:
+    """Top-k of the distinct (query_id, id) candidates of ``cand`` by exact
+    cosine (DESC, id ASC): the shared pair-row kernel over ``_fold_mats``,
+    so a null or ragged query or corpus vector raises instead of ranking a
+    NaN."""
+    pairs = cand.select(F.col("query_id").alias("a"),
+                        F.col(id_col).alias("b")).dropDuplicates(["a", "b"])
+    scored = score_pairs(
+        pairs, queries.select("query_id", emb_col),
+        corpus.select(id_col, emb_col), _fold_mats, "cosine",
+    ).select(F.col("a").alias("query_id"), F.col("b").alias(id_col), "cosine")
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc(id_col))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+    )
+
+
 def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
              n_list: int = 16, nprobe: int = 4, seed: int = 42,
              id_col: str = "vec_id", emb_col: str = "embedding",
@@ -587,23 +457,8 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     corpus_lists = _ivf_assign(corpus, cent_pdf, 1, id_col, emb_col, id_col)
     query_lists = _ivf_assign(queries, cent_pdf, nprobe,
                               "query_id", emb_col, "query_id")
-    cand = (
-        query_lists.join(corpus_lists, "list_id")
-        .select("query_id", id_col)
-        .dropDuplicates(["query_id", id_col])
-    )
-    qe = queries.select("query_id", F.col(emb_col).alias("_qe"))
-    ce = corpus.select(id_col, F.col(emb_col).alias("_ce"))
-    scored = (
-        cand.join(qe, "query_id").join(ce, id_col)
-        .withColumn("cosine", cosine_col(F.col("_qe"), F.col("_ce")))
-        .select("query_id", id_col, "cosine")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _rerank(query_lists.join(corpus_lists, "list_id"), corpus,
+                   queries, k, id_col, emb_col)
 
 
 def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
@@ -649,20 +504,5 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
         .hint("shuffle_hash"),
         ["table_id", "bucket"],
     )
-    cand = (
-        qb.join(cold_cb, ["table_id", "bucket"])
-        .select("query_id", id_col)
-        .dropDuplicates(["query_id", id_col])
-    )
-    qe = queries.select("query_id", F.col(emb_col).alias("_qe"))
-    ce = corpus.select(id_col, F.col(emb_col).alias("_ce"))
-    scored = (
-        cand.join(qe, "query_id").join(ce, id_col)
-        .withColumn("cosine", cosine_col(F.col("_qe"), F.col("_ce")))
-        .select("query_id", id_col, "cosine")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _rerank(qb.join(cold_cb, ["table_id", "bucket"]), corpus, queries,
+                   k, id_col, emb_col)

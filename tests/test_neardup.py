@@ -324,3 +324,128 @@ def test_zero_small_graph_threshold_forces_distributed_even_when_empty(
     empty = spark.createDataFrame([], "a string, b string")
     out = components_mod.connected_components(empty, small_graph_edges=0)
     assert out.count() == 0
+
+
+def test_scored_edges_match_reference_path(spark):
+    """minhash_edges and simhash_edges (cold buckets through the fused
+    bucket scorer, hot buckets' star pairs through the pair-row kernel)
+    must emit exactly the pairs and scores of a reference that shares
+    neither kernel — bucket_pairs -> dropDuplicates candidates scored in
+    plain Python from the collected signatures — with every bucket cold,
+    with a mix of hot and cold buckets, and with every bucket hot."""
+    from pysparkdedup.cache import cache_scope
+    from pysparkdedup.minhash import minhash_edges
+    from pysparkdedup.simhash import simhash_blocks, simhash_edges
+
+    pages, _ = pages_and_truth(spark, 300)
+    mh = {r["url"]: r["minhash"]
+          for r in minhash_signatures(pages, CFG).collect()
+          if r["minhash"] is not None}
+    sh = {r["url"]: r["simhash"]
+          for r in simhash_signatures(pages).collect()
+          if r["simhash"] is not None}
+    mh_sigs = spark.createDataFrame(
+        list(mh.items()), "url string, minhash array<int>")
+    sh_sigs = spark.createDataFrame(
+        list(sh.items()), "url string, simhash long")
+    mask = (1 << 64) - 1
+    families = {
+        # name: (edges, bucket rows, bucket cols, score col, reference
+        #        score, reference keep)
+        "minhash": (
+            lambda cfg: minhash_edges(None, cfg, sigs=mh_sigs),
+            lambda cfg: lsh_bands(mh_sigs, cfg), ["band_id", "band_hash"],
+            "jaccard",
+            lambda a, b: sum(x == y for x, y in zip(mh[a], mh[b]))
+            / CFG.num_perm,
+            lambda s: s >= CFG.jaccard_threshold),
+        "simhash": (
+            lambda cfg: simhash_edges(None, cfg, sigs=sh_sigs),
+            lambda cfg: simhash_blocks(sh_sigs, cfg),
+            ["block_id", "block_val"], "hamming",
+            lambda a, b: bin((sh[a] ^ sh[b]) & mask).count("1"),
+            lambda s: s <= CFG.hamming_threshold),
+    }
+    for fam, (edges, rows, cols, col, score, keep) in families.items():
+        sizes = [r["count"] for r in rows(CFG).groupBy(*cols).count()
+                 .filter("count >= 2").collect()]
+        caps = {"cold": max(sizes), "mixed": min(sizes), "hot": 1}
+        for kind, cap in caps.items():
+            hot = [n > cap for n in sizes]
+            assert {"cold": not any(hot),
+                    "mixed": 0 < sum(hot) < len(hot),
+                    "hot": all(hot)}[kind], (fam, kind, sizes)
+            cfg = DedupConfig(max_bucket_size=cap)
+            with cache_scope():
+                got = {(r["a"], r["b"]): r[col]
+                       for r in edges(cfg).collect()}
+                cand = bucket_pairs(rows(cfg), cols, id_col="url",
+                                    cap=cap).dropDuplicates(["a", "b"])
+                want = {(r["a"], r["b"]): score(r["a"], r["b"])
+                        for r in cand.collect()}
+            want = {p: s for p, s in want.items() if keep(s)}
+            assert got, (fam, kind)  # planted duplicates must collide
+            assert got == want, (fam, kind)
+
+
+def test_minhash_edges_reject_ragged_signature(spark):
+    """A signature shorter than the rest must fail the fused scorer loudly,
+    naming its url: scoring it over the wrong width would hide bad input
+    behind the threshold filter."""
+    from pyspark.errors import PythonException
+
+    from pysparkdedup.minhash import minhash_edges
+
+    sig = list(range(CFG.num_perm))
+    sigs = spark.createDataFrame(
+        [("u/a", sig), ("u/b", sig[:-1]), ("u/c", sig)],
+        "url string, minhash array<int>")
+    with pytest.raises(PythonException, match="minhash of id u/b"):
+        minhash_edges(None, CFG, sigs=sigs).collect()
+
+
+def test_bucket_kernel_pair_indices_bounded_per_slice():
+    """One Arrow batch of many small buckets (3.1M pairs) must be indexed a
+    slice at a time: the kernel's Python-side allocations stay far below
+    the 50 MB that the batch's whole pair-index arrays would take, and the
+    slices together still hold every within-bucket pair exactly once."""
+    import tracemalloc
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from pysparkdedup.pairs import _SCORE_SLICE, _score_buckets
+
+    nb, m = 4000, 40
+    n = nb * m
+    members = pa.StructArray.from_arrays(
+        [pa.array(np.arange(n, dtype=np.int64)),
+         pa.ListArray.from_arrays(
+             pa.array(np.arange(n + 1, dtype=np.int32)),
+             pa.array(np.arange(n, dtype=np.int64) % 7))],
+        names=["_i", "_p"])
+    offsets = np.arange(0, n + 1, m, dtype=np.int32)
+    batch = pa.RecordBatch.from_arrays(
+        [pa.ListArray.from_arrays(pa.array(offsets), members)],
+        names=["_ms"])
+
+    def equal(a, b):
+        return (a == b).sum(1, dtype=np.int32)
+
+    rows = same = 0
+    tracemalloc.start()
+    try:
+        for out in _score_buckets(iter([batch]), score=equal, name="s",
+                                  label="p"):
+            assert out.num_rows <= _SCORE_SLICE
+            rows += out.num_rows
+            same += pc.sum(out.column(2)).as_py()
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert rows == nb * m * (m - 1) // 2
+    # Members i < j of one bucket score 1 exactly when j - i is a
+    # multiple of 7 (every bucket starts at a multiple of 40).
+    assert same == nb * sum(m - d for d in range(7, m, 7))
+    assert peak < 12 * 2**20, peak

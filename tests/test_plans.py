@@ -113,6 +113,36 @@ def test_embedding_dup_edges_cold_single_fused_scorer(spark):
     assert "_ea" not in plan, plan
 
 
+def test_minhash_edges_cold_single_fused_scorer(spark, pages_factory):
+    """With every band bucket under max_bucket_size, minhash_edges pairs
+    and scores every bucket in ONE fused mapInArrow node: no verify join of
+    the signature onto candidate pairs and no interpreted zip_with score.
+    dedup_against scores through the same pair-row kernel, so its plan
+    carries no zip_with either."""
+    from tests.conftest import ts
+
+    from pysparkdedup.cache import cache_scope
+    from pysparkdedup.checkpoint import compute_signatures
+    from pysparkdedup.crosscorpus import dedup_against
+    from pysparkdedup.minhash import minhash_edges
+
+    cfg = DedupConfig()
+    text = " ".join(f"w{i}" for i in range(30))
+    pages = pages_factory([("u/a", ts(0), text, "en"),
+                           ("u/b", ts(1), text, "en")])
+    with cache_scope():
+        plan = plan_of(minhash_edges(pages, cfg))
+    tree = plan.split("\n\n")[0]
+    assert tree.count("MapInArrow") == 1, plan
+    for verify in ("_sig_a", "_sig_b", "_pa", "zip_with"):
+        assert verify not in plan, (verify, plan)
+
+    old = pages_factory([("old/a", ts(0), text, "en")])
+    new = pages_factory([("new/a", ts(1), text + " x", "en")])
+    plan = plan_of(dedup_against(new, compute_signatures(old, cfg), cfg))
+    assert "zip_with" not in plan, plan
+
+
 def test_containment_no_cartesian(spark, pages_factory):
     """containment_edges candidates come from the anchor equi-join — the plan
     must contain no cartesian/nested-loop join in either verify mode."""

@@ -18,6 +18,8 @@ TEST_ONLY = {
     "run_and_check": "one-call run plus invariant check, the verify recipe",
     "union_sources": "multi-source registration, no CLI flag yet",
     "hot_old_bucket_count": "cross-corpus skew probe, until the run report",
+    "cosine_pairs_exact": "explicit-pair cosine, the embedding tests' "
+                          "reference form",
 }
 
 

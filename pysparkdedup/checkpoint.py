@@ -35,9 +35,10 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .config import DedupConfig
-from .minhash import minhash_signatures
+from .minhash import minhash_family
 from .normalize import content_hash_expr
-from .simhash import simhash_signatures
+from .simhash import SIMHASH
+from .tokenhash import token_signatures
 
 MANIFEST = "_manifest.json"
 DATA_DIR = "data"
@@ -121,15 +122,13 @@ def stale_key_col(full: bool = False) -> F.Column:
 
 
 def compute_signatures(pages: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """(url, stale_key, content_hash, minhash, simhash) for every row."""
-    base = pages.select(
-        "url",
-        stale_key_col(full=cfg.stale_key_full).alias("stale_key"),
-        content_hash_expr(cfg).alias("content_hash"),
-    )
-    mh = minhash_signatures(pages, cfg).select("url", "minhash")
-    sh = simhash_signatures(pages).select("url", "simhash")
-    return base.join(mh, "url", "left").join(sh, "url", "left")
+    """(url, stale_key, content_hash, minhash, simhash) for every row: the
+    JVM keys ride through one token kernel that signs both families."""
+    keyed = pages.select(
+        "url", stale_key_col(full=cfg.stale_key_full).alias("stale_key"),
+        content_hash_expr(cfg).alias("content_hash"), "text")
+    return token_signatures(
+        keyed, minhash_family(cfg), SIMHASH).drop("n_shingles")
 
 
 class SignatureCheckpoint:

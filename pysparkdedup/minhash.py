@@ -9,10 +9,11 @@ at J=0.8 and ~0.23 at J=0.3, so the J>=0.8 verify threshold sees near-full
 recall while most sub-0.3 noise pairs never become candidates).
 
 Physical design for 10^12 docs:
-- signatures are computed in ``mapInPandas`` with fully vectorized numpy — a
-  perm-chunked (num_perm x total_shingles) universal-hash matrix reduced per
-  doc with ``np.minimum.reduceat`` — mirroring how the reference batches
-  worker tasks in chunks of 200 (ref deduplicate.py:688-694) but Arrow-sized;
+- signatures are a family of the token kernel (tokenhash.py, one
+  ``mapInArrow``): fully vectorized numpy — a perm-chunked (num_perm x
+  total_shingles) universal-hash matrix reduced per doc with
+  ``np.minimum.reduceat`` — mirroring how the reference batches worker
+  tasks in chunks of 200 (ref deduplicate.py:688-694) but Arrow-sized;
 - band hashing is JVM-side (``xxhash64`` over signature slices) so banding
   adds no Python;
 - pairing and verification are one step, pairs.scored_edges: each cold band
@@ -22,18 +23,18 @@ Physical design for 10^12 docs:
   k/num_perm. ``candidate_pairs`` + ``estimate_jaccard`` are the same
   step split at the pair list, the reference form the benches time.
 
-Shingle hashing: tokens -> 64-bit blake2b (memoized per batch), word
-k-shingles combined with a vectorized rolling polynomial, masked into the
-31-bit Mersenne field so the universal hash (a*s + b) mod (2^31 - 1) stays
-exact in uint64 arithmetic.
+Shingle hashing: tokens -> tokenhash's 64-bit FNV-prime polynomial with an
+fmix64 avalanche, word k-shingles combined with a vectorized rolling
+polynomial, masked into the 31-bit Mersenne field so the universal hash
+(a*s + b) mod (2^31 - 1) stays exact in uint64 arithmetic.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from functools import partial
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -41,45 +42,28 @@ from pyspark.sql import types as T
 from .components import connected_components
 from .config import DedupConfig
 from .pairs import bucket_pairs, score_pairs, scored_edges
+from .tokenhash import Family, list_array, token_signatures
 
 MERSENNE_31 = np.uint64((1 << 31) - 1)
 _POLY_BASE = np.uint64(1099511628211)  # FNV prime, shingle combiner
 
-SIG_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType(), False),
-    T.StructField("minhash", T.ArrayType(T.IntegerType()), True),
-    T.StructField("n_shingles", T.IntegerType(), False),
-])
 
-
-def _batch_shingles(texts, k: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Batch-vectorized shingling over the numpy byte tokenizer (tokenhash.py):
-    no Python objects in the hot path. Returns (shingle_hashes grouped by doc,
-    reduceat offsets for non-empty docs, per-doc shingle counts). Counts are
-    window counts (not distinct) — min-over-multiset == min-over-set, so
-    MinHash is unaffected.
-    """
-    from .tokenhash import batch_token_hashes
-
-    doc_lens, tok_hashes = batch_token_hashes(list(texts))
+def _shingles(doc_lens: np.ndarray, tok_hashes: np.ndarray,
+              k: int) -> tuple[np.ndarray, np.ndarray]:
+    """Word k-shingle hashes of a batch's token stream, grouped by doc, and
+    the per-doc shingle counts. Counts are window counts (not distinct) —
+    min-over-multiset == min-over-set, so MinHash is unaffected."""
     ndocs = len(doc_lens)
-    total = len(tok_hashes)
-    n = total - k + 1
-    if total == 0 or n <= 0:
-        return (np.empty(0, np.uint64), np.empty(0, np.int64),
-                np.zeros(ndocs, np.int64))
+    n = len(tok_hashes) - k + 1
+    if n <= 0:
+        return np.empty(0, np.uint64), np.zeros(ndocs, np.int64)
     doc_ids = np.repeat(np.arange(ndocs, dtype=np.int64), doc_lens)
     acc = np.zeros(n, dtype=np.uint64)
     for j in range(k):
         acc = acc * _POLY_BASE + tok_hashes[j : j + n]
     valid = doc_ids[:n] == doc_ids[k - 1 : k - 1 + n]
-    sh = (acc % MERSENNE_31)[valid]
-    vdoc = doc_ids[:n][valid]
-    counts = np.bincount(vdoc, minlength=ndocs).astype(np.int64)
-    nonzero = counts[counts > 0]
-    offsets = np.zeros(len(nonzero), dtype=np.int64)
-    np.cumsum(nonzero[:-1], out=offsets[1:])
-    return sh, offsets, counts
+    counts = np.bincount(doc_ids[:n][valid], minlength=ndocs)
+    return (acc % MERSENNE_31)[valid], counts.astype(np.int64)
 
 
 def _perm_params(cfg: DedupConfig) -> tuple[np.ndarray, np.ndarray]:
@@ -90,58 +74,55 @@ def _perm_params(cfg: DedupConfig) -> tuple[np.ndarray, np.ndarray]:
     return a, b
 
 
-def minhash_signatures(df: DataFrame, cfg: DedupConfig,
-                       text_col: str = "text") -> DataFrame:
+def _minhash_arrays(doc_lens: np.ndarray, tok_hashes: np.ndarray, k: int,
+                    a_params: np.ndarray, b_params: np.ndarray) -> list:
+    """The MinHash family: (minhash, n_shingles) arrays, the signature null
+    for a doc with no shingle."""
+    all_sh, counts = _shingles(doc_lens, tok_hashes, k)
+    nonempty = counts > 0
+    nz_lens = counts[nonempty]
+    nnz, num_perm = len(nz_lens), len(a_params)
+    ends = np.cumsum(nz_lens)
+    offsets = ends - nz_lens
+    sig_mat = np.empty((nnz, num_perm), dtype=np.int32)
+    ac, bc = a_params[:, None], b_params[:, None]
+    # Process doc-blocks whose (num_perm x block_shingles) hash matrix stays
+    # cache-resident: the naive full-batch matrix is DRAM-bandwidth-bound
+    # (GBs of traffic per batch); blocked, the intermediate never leaves
+    # L2/L3 and 8->32 cores scales.
+    block_target = 2048  # num_perm x block x 8B ~ 1MB: L2-resident
+    d0 = 0
+    while d0 < nnz:
+        d1 = d0
+        start = offsets[d0]
+        # a single doc larger than the block is a block of its own
+        while d1 < nnz and (d1 == d0 or ends[d1] - start <= block_target):
+            d1 += 1
+        sl = all_sh[start : ends[d1 - 1]]
+        m = (ac * sl[None, :] + bc) % MERSENNE_31  # (num_perm, block)
+        mins = np.minimum.reduceat(m, offsets[d0:d1] - start, axis=1)
+        sig_mat[d0:d1, :] = mins.T  # < 2^31 - 1: exact in int32
+        d0 = d1
+    return [list_array(np.where(nonempty, num_perm, 0), sig_mat.ravel(),
+                       ~nonempty),
+            pa.array(counts.astype(np.int32))]
+
+
+def minhash_family(cfg: DedupConfig) -> Family:
+    """MinHash as a token-kernel family: ``minhash array<int>`` (null when
+    the doc has fewer than shingle_size tokens) and ``n_shingles``."""
+    a, b = _perm_params(cfg)
+    return Family([T.StructField("minhash", T.ArrayType(T.IntegerType())),
+                   T.StructField("n_shingles", T.IntegerType(), False)],
+                  partial(_minhash_arrays, k=cfg.shingle_size,
+                          a_params=a, b_params=b))
+
+
+def minhash_signatures(df: DataFrame, cfg: DedupConfig) -> DataFrame:
     """(url, minhash array<int>, n_shingles). Docs with < shingle_size tokens
     get a null signature (cannot be near-dup candidates; the exact path still
     covers them)."""
-    k, num_perm, seed = cfg.shingle_size, cfg.num_perm, cfg.seed
-    a_params, b_params = _perm_params(cfg)
-    p = MERSENNE_31
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ac = a_params[:, None]
-        bc = b_params[:, None]
-        for pdf in batches:
-            urls = pdf["url"].tolist()
-            all_sh, offsets, counts = _batch_shingles(pdf[text_col], k)
-            nonempty = counts > 0
-            sigs: list = [None] * len(urls)
-            nnz = int(nonempty.sum())
-            if nnz:
-                sig_mat = np.empty((nnz, num_perm), dtype=np.int64)
-                # Process doc-blocks whose (num_perm x block_shingles) hash
-                # matrix stays cache-resident: the naive full-batch matrix is
-                # DRAM-bandwidth-bound (GBs of traffic per batch); blocked, the
-                # intermediate never leaves L2/L3 and 8->32 cores scales.
-                block_target = 2048  # num_perm x block x 8B ~ 1MB: L2-resident
-                nz_lens = counts[nonempty]
-                ends = np.cumsum(nz_lens)
-                d0 = 0
-                while d0 < nnz:
-                    d1 = d0
-                    start = offsets[d0]
-                    while d1 < nnz and ends[d1] - start <= block_target:
-                        d1 += 1
-                    if d1 == d0:  # single doc larger than the block
-                        d1 = d0 + 1
-                    sl = all_sh[start : ends[d1 - 1]]
-                    m = (ac * sl[None, :] + bc) % p  # (num_perm, block)
-                    local_off = (offsets[d0:d1] - start).astype(np.int64)
-                    mins = np.minimum.reduceat(m, local_off, axis=1)
-                    sig_mat[d0:d1, :] = mins.T.astype(np.int64)
-                    d0 = d1
-                rows = iter(sig_mat)
-                for i in range(len(urls)):
-                    if nonempty[i]:
-                        sigs[i] = next(rows).tolist()
-            yield pd.DataFrame({
-                "url": urls,
-                "minhash": sigs,
-                "n_shingles": counts.astype("int32"),
-            })
-
-    return df.select("url", text_col).mapInPandas(compute, schema=SIG_SCHEMA)
+    return token_signatures(df.select("url", "text"), minhash_family(cfg))
 
 
 def lsh_bands(sig_df: DataFrame, cfg: DedupConfig) -> DataFrame:

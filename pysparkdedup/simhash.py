@@ -8,16 +8,15 @@ at least one block — then pair and verify each (block_id, block_value)
 bucket in the shared skew-aware scorer (pairs.scored_edges): the Hamming
 popcount of ``a ^ b`` (``_hamming``) must be <= k.
 
-Signature computation is a vectorized pandas UDF: per-batch unique-token
-hashing (memoized blake2b), per-doc unpacked-bit vote accumulation in numpy.
+Signatures are a family of the token kernel (tokenhash.py): each token
+occurrence's 64-bit hash (an FNV-prime polynomial with an fmix64 avalanche)
+votes on every bit, summed per doc in numpy.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -25,66 +24,47 @@ from pyspark.sql import types as T
 from .components import connected_components
 from .config import DedupConfig
 from .pairs import scored_edges
-
-SIMHASH_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType(), False),
-    T.StructField("simhash", T.LongType(), True),
-])
+from .tokenhash import Family, token_signatures
 
 
-def _le64(arr: np.ndarray) -> np.ndarray:
-    """uint64 array with a guaranteed little-endian byte layout so that
-    ``.view(np.uint8)`` / packbits round-trips pin the bit numbering on any
-    host (free on little-endian machines)."""
-    import sys
+def _simhash_arrays(doc_lens: np.ndarray, occ_hashes: np.ndarray) -> list:
+    """The SimHash family: one ``simhash`` array, null for an empty doc.
 
-    return arr if sys.byteorder == "little" else arr.byteswap()
+    Each token occurrence votes once (which IS the count-weighted vote), so
+    the per-doc vote vector is one ``np.add.reduceat`` over the batch's
+    +-1 bit matrix — no per-doc loops."""
+    empty = doc_lens == 0
+    out = np.zeros(len(doc_lens), dtype=np.int64)
+    if len(occ_hashes):
+        # "<u8" pins the bit numbering to the little-endian byte layout on
+        # any host (no copy on a little-endian one).
+        bits = np.unpackbits(
+            occ_hashes.astype("<u8", copy=False).view(np.uint8)
+            .reshape(-1, 8), axis=1, bitorder="little")
+        # Segment sums via add.reduceat with an int32 accumulator: 3x the
+        # int64 full-batch cumsum (which materializes a (total, 64) int64
+        # intermediate — pure DRAM traffic) and bit-identical, since per-doc
+        # bit counts are exact integers in any width >= log2(doc_len).
+        # votes = 2*bitsum - n.
+        lens_nz = doc_lens[~empty]
+        offs = np.cumsum(lens_nz) - lens_nz
+        bitsum = np.add.reduceat(
+            bits.astype(np.int32), offs, axis=0).astype(np.int64)
+        votes = 2 * bitsum - lens_nz[:, None]  # (nd, 64)
+        out_bits = (votes > 0).astype(np.uint8)
+        packed = np.packbits(out_bits, axis=1, bitorder="little").view(
+            "<u8")[:, 0]
+        out[~empty] = packed.astype(np.int64)
+    return [pa.array(out, mask=empty)]
 
 
-def simhash_signatures(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """(url, simhash long); null for empty docs.
+SIMHASH = Family([T.StructField("simhash", T.LongType(), True)],
+                 _simhash_arrays)
 
-    Batch-vectorized: each token occurrence votes once (which IS the
-    count-weighted vote), so the per-doc vote vector is one
-    ``np.add.reduceat`` over the batch's +-1 bit matrix — no per-doc loops.
-    """
-    from pysparkdedup.tokenhash import batch_token_hashes
 
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            doc_lens, occ_hashes = batch_token_hashes(pdf[text_col].tolist())
-            ndocs = len(doc_lens)
-            total = len(occ_hashes)
-            out = np.zeros(ndocs, dtype=np.int64)
-            empty = doc_lens == 0
-            if total:
-                bits = np.unpackbits(
-                    _le64(occ_hashes).view(np.uint8).reshape(-1, 8), axis=1,
-                    bitorder="little")
-                # Segment sums via add.reduceat with an int32 accumulator:
-                # 3x the int64 full-batch cumsum (which materializes a
-                # (total, 64) int64 intermediate — pure DRAM traffic) and
-                # bit-identical, since per-doc bit counts are exact
-                # integers in any width >= log2(doc_len). votes =
-                # 2*bitsum - n.
-                lens_nz = doc_lens[~empty]
-                offs = np.zeros(len(lens_nz), dtype=np.int64)
-                np.cumsum(lens_nz[:-1], out=offs[1:])
-                bitsum = np.add.reduceat(
-                    bits.astype(np.int32), offs, axis=0).astype(np.int64)
-                votes = 2 * bitsum - lens_nz[:, None]  # (nd, 64)
-                out_bits = (votes > 0).astype(np.uint8)
-                packed = _le64(np.packbits(out_bits, axis=1,
-                                           bitorder="little")
-                               .view(np.uint64))[:, 0]
-                out[~empty] = packed.astype(np.int64)
-            vals = pd.array(
-                [None if empty[i] else int(out[i]) for i in range(ndocs)],
-                dtype="Int64")
-            yield pd.DataFrame({"url": pdf["url"], "simhash": vals})
-
-    return df.select("url", text_col).mapInPandas(
-        compute, schema=SIMHASH_SCHEMA)
+def simhash_signatures(df: DataFrame) -> DataFrame:
+    """(url, simhash long); null for empty docs."""
+    return token_signatures(df.select("url", "text"), SIMHASH)
 
 
 def simhash_blocks(sig_df: DataFrame, cfg: DedupConfig,

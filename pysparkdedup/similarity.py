@@ -23,7 +23,6 @@ in double precision, bit-identical to the DuckDB oracle replay.
 from __future__ import annotations
 
 from collections.abc import Iterator
-from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -31,8 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .pairs import _SCORE_SLICE, score_pairs, scored_edges  # noqa: F401
-from .pairs import _score_buckets as _bucket_kernel
+from .pairs import score_pairs, scored_edges
 
 
 def _fold_mats(ea: np.ndarray, eb: np.ndarray) -> np.ndarray:
@@ -53,12 +51,6 @@ def _fold_mats(ea: np.ndarray, eb: np.ndarray) -> np.ndarray:
         na += ca * ca
         nb += cb * cb
     return dot / (np.sqrt(na) * np.sqrt(nb))
-
-
-# The cosine form of the shared bucket kernel and its slice size, kept only
-# because test_similarity imports them from here (ROADMAP item 4).
-_score_buckets = partial(_bucket_kernel, score=_fold_mats, name="cosine",
-                         label="embedding")
 
 
 def cosine_pairs_exact(pairs: DataFrame, emb: DataFrame,

@@ -3,7 +3,8 @@
 ``containment_edges`` generates candidates globally: if doc A is a
 substring of doc B, every word k-shingle of A appears in B; in particular
 A's *minimum-hash* shingle does. So A emits one anchor row (its min
-shingle) and B emits all its distinct shingles; the equi-join yields every
+shingle) and B emits all its distinct shingles, both computed by one
+family of the token kernel (tokenhash.py); the equi-join yields every
 (A in B) candidate, verified exactly per pair. Linear in total shingles,
 one shuffle. Skew guard: shingles occurring in more than ``max_df`` docs
 are dropped from the container side (df-cut; affects only docs whose min
@@ -12,56 +13,41 @@ shingle is boilerplate-common).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from functools import partial
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .config import DedupConfig
-from .minhash import _batch_shingles
+from .minhash import _shingles
+from .tokenhash import Family, list_array, token_signatures
 
 DEFAULT_MAX_DF = 10000
 
 
-_ANCHOR_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType(), False),
-    T.StructField("anchor", T.LongType(), True),
-    T.StructField("shingles", T.ArrayType(T.LongType()), True),
-])
+def _anchor_arrays(doc_lens: np.ndarray, tok_hashes: np.ndarray,
+                   k: int) -> list:
+    """The containment family: each doc's distinct shingles, sorted, and
+    their minimum (the anchor) — both null for a doc with no shingle. One
+    lexsort over (doc, shingle) orders the whole batch."""
+    sh, counts = _shingles(doc_lens, tok_hashes, k)
+    doc = np.repeat(np.arange(len(counts)), counts)
+    order = np.lexsort((sh, doc))
+    sh, doc = sh[order], doc[order]
+    first = np.ones(len(sh), dtype=bool)
+    first[1:] = (doc[1:] != doc[:-1]) | (sh[1:] != sh[:-1])
+    sh, doc = sh[first].astype(np.int64), doc[first]
+    lens = np.bincount(doc, minlength=len(counts))
+    empty = counts == 0
+    anchor = np.zeros(len(counts), dtype=np.int64)
+    anchor[~empty] = sh[(np.cumsum(lens) - lens)[~empty]]
+    return [pa.array(anchor, mask=empty), list_array(lens, sh, empty)]
 
 
-def _shingle_frame(df: DataFrame, cfg: DedupConfig,
-                   text_col: str = "text") -> DataFrame:
-    k = cfg.shingle_size
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            sh, offsets, counts = _batch_shingles(pdf[text_col].tolist(), k)
-            nz_ends = np.cumsum(counts[counts > 0])
-            anchors, shingles = [], []
-            nz_i = 0
-            for i in range(len(counts)):
-                if counts[i] == 0:
-                    anchors.append(None)
-                    shingles.append(None)
-                    continue
-                seg = sh[offsets[nz_i] : nz_ends[nz_i]]
-                nz_i += 1
-                seg = np.unique(seg)
-                anchors.append(int(seg.min()))
-                shingles.append(seg.astype(np.int64).tolist())
-            yield pd.DataFrame({
-                "url": pdf["url"], "anchor": pd.array(anchors, dtype="Int64"),
-                "shingles": shingles,
-            })
-
-    return df.select("url", text_col).mapInPandas(compute, schema=_ANCHOR_SCHEMA)
-
-
-def containment_edges(df: DataFrame, cfg: DedupConfig, text_col: str = "text",
+def containment_edges(df: DataFrame, cfg: DedupConfig,
                       max_df: int = DEFAULT_MAX_DF,
                       verify: str = "raw") -> DataFrame:
     """(inner, outer): verified 'inner's text occurs inside outer's text'.
@@ -83,7 +69,10 @@ def containment_edges(df: DataFrame, cfg: DedupConfig, text_col: str = "text",
       driver's DuckDB oracle replays. ASCII tokenization ([0-9a-z_]+ on
       lowered text), matching the tokenhash kernel on ASCII corpora.
     """
-    sh = _shingle_frame(df, cfg, text_col)
+    sh = token_signatures(df.select("url", "text"), Family(
+        [T.StructField("anchor", T.LongType()),
+         T.StructField("shingles", T.ArrayType(T.LongType()))],
+        partial(_anchor_arrays, k=cfg.shingle_size)))
     anchors = sh.filter(F.col("anchor").isNotNull()).select("url", "anchor")
     exploded = (
         sh.filter(F.col("shingles").isNotNull())
@@ -104,23 +93,19 @@ def containment_edges(df: DataFrame, cfg: DedupConfig, text_col: str = "text",
     if verify == "token":
         # ' tok tok … ' padded token string: containment on it == contiguous
         # token-subsequence containment.
-        def tokstr(col):
-            toks = F.filter(
-                F.split(F.lower(F.coalesce(col, F.lit(""))), "[^0-9a-z_]+"),
-                lambda t: t != "",
-            )
-            return F.concat(F.lit(" "), F.array_join(toks, " "), F.lit(" "))
-        probe = tokstr(F.col(text_col))
+        toks = F.filter(
+            F.split(F.lower(F.coalesce("text", F.lit(""))), "[^0-9a-z_]+"),
+            lambda t: t != "")
+        probe = F.concat(F.lit(" "), F.array_join(toks, " "), F.lit(" "))
     elif verify == "raw":
-        probe = F.col(text_col)
+        probe = F.col("text")
     else:
         raise ValueError(f"unknown verify mode: {verify!r}")
     ti = df.select(F.col("url").alias("inner"), probe.alias("_t_in"))
     to = df.select(F.col("url").alias("outer"), probe.alias("_t_out"))
-    verified = (
+    return (
         cand.join(ti, "inner")
         .join(to, "outer")
         .filter(F.expr("contains(_t_out, _t_in)"))
         .select("inner", "outer")
     )
-    return verified

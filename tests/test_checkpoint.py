@@ -106,6 +106,33 @@ def test_resume_equals_fresh(pages, tmp_path):
     assert resumed == cold
 
 
+def test_fused_signatures_equal_single_family_paths(pages_factory):
+    """compute_signatures signs MinHash and SimHash in one token kernel;
+    row for row it equals minhash_signatures and simhash_signatures, nulls
+    included (a doc too short to shingle, a doc with no token, a null
+    text)."""
+    from pysparkdedup.minhash import minhash_signatures
+    from pysparkdedup.simhash import simhash_signatures
+
+    cfg = DedupConfig()
+    pages = pages_factory([
+        ("u/a", ts(0), " ".join(f"w{i}" for i in range(30)), "en"),
+        ("u/b", ts(1), "too short", "en"),
+        ("u/c", ts(2), " ... ", "en"),
+        ("u/d", ts(3), None, "en"),
+    ])
+    fused = {r["url"]: (r["minhash"], r["simhash"])
+             for r in compute_signatures(pages, cfg).collect()}
+    mh = {r["url"]: r["minhash"]
+          for r in minhash_signatures(pages, cfg).collect()}
+    sh = {r["url"]: r["simhash"] for r in simhash_signatures(pages).collect()}
+    assert fused == {u: (mh[u], sh[u]) for u in mh}
+    assert set(fused) == {"u/a", "u/b", "u/c", "u/d"}
+    assert fused["u/a"][0] is not None and fused["u/b"][0] is None
+    assert fused["u/b"][1] is not None and fused["u/c"][1] is None
+    assert fused["u/d"] == (None, None)
+
+
 def test_incremental_run_equals_fresh(spark, tmp_path):
     """run_incremental (checkpoint-backed) == fresh run, cold and warm."""
     from pysparkdedup.corpus import pages_and_truth

@@ -10,6 +10,7 @@ from __future__ import annotations
 import re
 
 import numpy as np
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -35,7 +36,7 @@ texts = st.text(
 @settings(max_examples=200, deadline=None)
 @given(st.lists(texts, max_size=8))
 def test_token_counts_match_reference(batch):
-    doc_lens, hashes = batch_token_hashes(batch)
+    doc_lens, hashes = batch_token_hashes(pa.array(batch, pa.string()))
     expected = [len(ref_tokens(t)) for t in batch]
     assert doc_lens.tolist() == expected
     assert len(hashes) == sum(expected)
@@ -51,8 +52,8 @@ def test_token_hashes_follow_token_identity(s):
     # maps like 'ß'->'SS' change the byte sequence and are out of scope)
     ascii_upper = "".join(
         c.upper() if "a" <= c <= "z" else c for c in s)
-    _, h1 = batch_token_hashes([s])
-    _, h2 = batch_token_hashes([ascii_upper])
+    _, h1 = batch_token_hashes(pa.array([s], pa.string()))
+    _, h2 = batch_token_hashes(pa.array([ascii_upper], pa.string()))
     assert np.array_equal(h1, h2)  # ASCII case-insensitive
     # identical tokens at different positions share a hash
     seen: dict[bytes, int] = {}
@@ -60,6 +61,38 @@ def test_token_hashes_follow_token_identity(s):
         if tok in seen:
             assert seen[tok] == h
         seen[tok] = h
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.lists(texts, min_size=1, max_size=4),
+       st.lists(st.one_of(st.none(), texts), max_size=8))
+def test_token_hashes_read_arrow_offsets(prefix, batch):
+    """The kernel cuts documents at the Arrow offsets, not at a separator
+    byte: int32 and int64 offsets, and a slice of a longer array (non-zero
+    offset into shared buffers), tokenize alike; a null is the empty doc."""
+    want = batch_token_hashes(pa.array(batch, pa.string()))
+    for arr in (pa.array(batch, pa.large_string()),
+                pa.array(prefix + batch, pa.string()).slice(len(prefix)),
+                pa.array(prefix + batch, pa.large_string()).slice(
+                    len(prefix))):
+        got = batch_token_hashes(arr)
+        assert np.array_equal(got[0], want[0])
+        assert np.array_equal(got[1], want[1])
+    lens = [0 if t is None else len(ref_tokens(t)) for t in batch]
+    assert want[0].tolist() == lens
+
+
+def test_null_slot_owning_bytes_tokenizes_empty():
+    """Arrow lets a null slot span bytes of the data buffer; the kernel
+    reads it as the empty doc, not as the bytes under it."""
+    data = pa.py_buffer(b"onetwothree")
+    offsets = pa.array([0, 3, 6, 11], pa.int32()).buffers()[1]
+    validity = pa.array([True, False, True]).buffers()[1]
+    arr = pa.Array.from_buffers(pa.string(), 3, [validity, offsets, data])
+    doc_lens, hashes = batch_token_hashes(arr)
+    want_lens, want = batch_token_hashes(pa.array(["one", None, "three"]))
+    assert doc_lens.tolist() == want_lens.tolist() == [1, 0, 1]
+    assert np.array_equal(hashes, want)
 
 
 # ---- guards: class-level greedy eviction == node-level reference ----------

@@ -2,6 +2,7 @@
 .explain()-level properties the engine relies on at scale."""
 
 import io
+import re
 from contextlib import redirect_stdout
 
 import pytest
@@ -110,7 +111,7 @@ def test_embedding_dup_edges_cold_single_fused_scorer(spark):
         plan = plan_of(embedding_dup_edges(emb, n_tables=6, n_bits=4))
     tree = plan.split("\n\n")[0]
     assert tree.count("MapInArrow") == 1, plan
-    assert "_ea" not in plan, plan
+    assert "_pa" not in plan, plan
 
 
 def test_minhash_edges_cold_single_fused_scorer(spark, pages_factory):
@@ -132,8 +133,11 @@ def test_minhash_edges_cold_single_fused_scorer(spark, pages_factory):
                            ("u/b", ts(1), text, "en")])
     with cache_scope():
         plan = plan_of(minhash_edges(pages, cfg))
-    tree = plan.split("\n\n")[0]
-    assert tree.count("MapInArrow") == 1, plan
+    # The signature kernel is a MapInArrow node too (it reads the text);
+    # every other MapInArrow node is a scorer, and there is one.
+    inputs = [b.splitlines()[1] for b in plan.split("\n\n")
+              if re.fullmatch(r"\(\d+\) MapInArrow", b.splitlines()[0])]
+    assert sorted("text#" in i for i in inputs) == [False, True], plan
     for verify in ("_sig_a", "_sig_b", "_pa", "zip_with"):
         assert verify not in plan, (verify, plan)
 
@@ -141,6 +145,22 @@ def test_minhash_edges_cold_single_fused_scorer(spark, pages_factory):
     new = pages_factory([("new/a", ts(1), text + " x", "en")])
     plan = plan_of(dedup_against(new, compute_signatures(old, cfg), cfg))
     assert "zip_with" not in plan, plan
+
+
+def test_compute_signatures_single_token_kernel(spark, pages_factory):
+    """compute_signatures tokenizes once for both signature families: one
+    mapInArrow over the keyed projection, and no Python UDF, shuffle or
+    join-back of per-family results by url."""
+    from tests.conftest import ts
+
+    from pysparkdedup.checkpoint import compute_signatures
+
+    pages = pages_factory([("u/a", ts(0), "alpha beta gamma delta eps", "en")])
+    plan = plan_of(compute_signatures(pages, DedupConfig()))
+    tree = plan.split("\n\n")[0]
+    assert tree.count("MapInArrow") == 1, plan
+    for node in ("MapInPandas", "Exchange", "Join"):
+        assert node not in tree, (node, plan)
 
 
 def test_containment_no_cartesian(spark, pages_factory):

@@ -354,10 +354,15 @@ def test_bucket_kernel_scores_in_bounded_slices():
     yielded batch stays within _SCORE_SLICE pairs (the kernel's memory is
     bounded by the slice, not by the batch's buckets x occupancy^2), and
     the slices together equal one unsliced _fold_mats pass."""
+    from functools import partial
+
     import pyarrow as pa
 
-    from pysparkdedup.similarity import (
-        _SCORE_SLICE, _fold_mats, _score_buckets)
+    from pysparkdedup.pairs import _SCORE_SLICE, _score_buckets
+    from pysparkdedup.similarity import _fold_mats
+
+    score_buckets = partial(_score_buckets, score=_fold_mats, name="cosine",
+                            label="embedding")
 
     sizes = [300, 1, 200, 250]  # 95,875 pairs
     n, dim = sum(sizes), 8
@@ -374,7 +379,7 @@ def test_bucket_kernel_scores_in_bounded_slices():
         [pa.ListArray.from_arrays(pa.array(offsets), members)],
         names=["_ms"])
 
-    out = list(_score_buckets(iter([batch])))
+    out = list(score_buckets(iter([batch])))
     assert len(out) > 1
     assert all(b.num_rows <= _SCORE_SLICE for b in out)
     got = pa.Table.from_batches(out).to_pydict()

@@ -35,8 +35,9 @@ dedup (all first-class, DuckDB-oracled via the driver contract):
 - one-call pipeline  : `curate.curate_pages` / CLI `--mode curate`
 
 Everything is DataFrame-first: built-in ``pyspark.sql.functions`` expressions in
-the hot path, Arrow-vectorized pandas UDFs only where semantics genuinely need
-per-group/per-batch Python (eviction, MinHash numpy kernels, image decode).
+the hot path, numpy kernels over Arrow batches (``mapInArrow`` /
+``applyInArrow``) only where semantics genuinely need per-group/per-batch
+Python (eviction, MinHash numpy kernels, image decode).
 """
 
 __version__ = "0.1.0"

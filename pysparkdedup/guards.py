@@ -10,11 +10,12 @@ Re-expresses ``DuplicateSet.check_differences`` (ref deduplicate.py:270-359):
    regression-tests (tests/test_performance.py:316-341). At web scale this is
    what makes boilerplate mega-clusters O(n) — and sharded, not one task.
 
-2. **Greedy eviction, in applyInPandas** — only for the (rare) groups failing
-   the short-circuit: pairwise offenses with diff memoized per body-hash pair
-   (ref deduplicate.py:304-326), then evict the member with the most offending
-   pairs, ties broken on the row key for determinism (ref deduplicate.py:343-358),
-   until no offending pair remains. If fewer than 2 members would survive, the
+2. **Greedy eviction, in a grouped ``applyInArrow``** — only for the (rare)
+   groups failing the short-circuit: pairwise offenses with diff memoized
+   per body-hash pair (ref deduplicate.py:304-326), then evict the member
+   with the most offending pairs, ties broken on the row key for
+   determinism (ref deduplicate.py:343-358), until no offending pair
+   remains. If fewer than 2 members would survive, the
    whole set is skipped — 'size' when any size offense fired, else 'content'
    (ref deduplicate.py:349-358, SizeDiffAboveThreshold/ContentDiffAboveThreshold).
 
@@ -31,9 +32,9 @@ and counted — a documented divergence that bounds worst-case work.
 from __future__ import annotations
 
 from difflib import unified_diff
-from itertools import combinations
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -63,9 +64,10 @@ def _diff_len(lines_a: list[str], lines_b: list[str]) -> int:
     )
 
 
-def _evict_group(pdf: pd.DataFrame, size_threshold: int, content_threshold: int,
-                 max_group: int) -> pd.DataFrame:
-    """Greedy eviction for one group (ref deduplicate.py:304-359).
+def _evict_group(group: pa.Table, size_threshold: int, content_threshold: int,
+                 max_group: int) -> pa.Table:
+    """Greedy eviction for one group (ref deduplicate.py:304-359): its
+    (url, n_bytes, raw_hash, text) rows -> (url, evicted, guard_skip_kind).
 
     Computed at BODY-CLASS granularity: members sharing ``raw_hash`` have
     identical text (and so identical size and offenses) — offenses are
@@ -82,24 +84,29 @@ def _evict_group(pdf: pd.DataFrame, size_threshold: int, content_threshold: int,
     eviction candidate; no two members of one class ever offend each other
     (same text, same size).
     """
-    urls = pdf["url"].tolist()
+    urls = group.column("url").to_pylist()
     n = len(urls)
-    out = pd.DataFrame({"url": urls, "evicted": False, "guard_skip_kind": None})
-    out["guard_skip_kind"] = out["guard_skip_kind"].astype(object)
+
+    def verdicts(evicted=frozenset(), kind=None) -> pa.Table:
+        return pa.table({
+            "url": group.column("url"),
+            "evicted": pa.array([u in evicted for u in urls], pa.bool_()),
+            "guard_skip_kind": pa.array([kind] * n, pa.string()),
+        })
 
     if n > max_group:
-        sizes = pdf["n_bytes"]
-        size_breach = size_threshold >= 0 and (sizes.max() - sizes.min()) > size_threshold
-        out["guard_skip_kind"] = "size" if size_breach else "content"
-        return out
+        lo, hi = pc.min_max(group.column("n_bytes")).values()
+        size_breach = (size_threshold >= 0
+                       and hi.as_py() - lo.as_py() > size_threshold)
+        return verdicts(kind="size" if size_breach else "content")
 
     # class decomposition: raw_hash -> (sorted member urls, size, text)
     members: dict[str, list[str]] = {}
     csize: dict[str, int] = {}
     ctext: dict[str, str] = {}
     for url, size, body, text in zip(
-            urls, pdf["n_bytes"].tolist(), pdf["raw_hash"].tolist(),
-            pdf["text"].tolist()):
+            urls, *(group.column(c).to_pylist()
+                    for c in ("n_bytes", "raw_hash", "text"))):
         members.setdefault(body, []).append(url)
         csize[body] = size
         ctext[body] = text
@@ -123,7 +130,7 @@ def _evict_group(pdf: pd.DataFrame, size_threshold: int, content_threshold: int,
                 adj[b].add(a)
 
     if not any(adj.values()):
-        return out  # no offending pair anywhere — common case, O(n + m^2)
+        return verdicts()  # no offending pair anywhere — common case
 
     counts = {c: len(members[c]) for c in classes}
     heads = {c: 0 for c in classes}  # next-eviction pointer into members[c]
@@ -147,62 +154,8 @@ def _evict_group(pdf: pd.DataFrame, size_threshold: int, content_threshold: int,
         counts[c] -= 1
 
     if evicted and n - len(evicted) < 2:
-        out["guard_skip_kind"] = "size" if size_offense else "content"
-        return out
-
-    out.loc[out["url"].isin(evicted), "evicted"] = True
-    return out
-
-
-_DIFF_SCHEMA = T.StructType([
-    T.StructField("a", T.StringType(), False),
-    T.StructField("b", T.StringType(), False),
-    T.StructField("size_diff", T.LongType(), False),
-    T.StructField("content_diff", T.LongType(), True),
-])
-
-
-def pair_diff_lengths(df: DataFrame, cfg: DedupConfig,
-                      key: str = "cluster_key") -> DataFrame:
-    """Debug surface for the content guard — the ``--show-diff`` analog
-    (ref cli.py --show-diff / check_differences logging): per suspicious
-    group, every pair's size delta and exact content-diff length (the same
-    metric the eviction decision uses, memoized per body pair).
-    content_diff is null when the size offense already decided the pair."""
-    st, ct = cfg.size_threshold, cfg.content_threshold
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        urls = pdf["url"].tolist()
-        sizes = dict(zip(urls, pdf["n_bytes"].tolist()))
-        bodies = dict(zip(urls, pdf["raw_hash"].tolist()))
-        texts = dict(zip(urls, pdf["text"].tolist()))
-        diffs: dict[frozenset, int] = {}
-        rows = {"a": [], "b": [], "size_diff": [], "content_diff": []}
-        for a, b in combinations(urls, 2):
-            sd = abs(sizes[a] - sizes[b])
-            cd = None
-            if not (st >= 0 and sd > st):
-                pair = frozenset((bodies[a], bodies[b]))
-                if pair not in diffs:
-                    diffs[pair] = (
-                        0 if len(pair) == 1
-                        else _diff_len(texts[a].split("\n"),
-                                       texts[b].split("\n"))
-                    )
-                cd = diffs[pair]
-            rows["a"].append(a)
-            rows["b"].append(b)
-            rows["size_diff"].append(sd)
-            rows["content_diff"].append(cd)
-        out = pd.DataFrame(rows)
-        out["content_diff"] = out["content_diff"].astype(object)
-        return out
-
-    return (
-        df.select("url", "n_bytes", "raw_hash", "text", key)
-        .groupBy(key)
-        .applyInPandas(run, schema=_DIFF_SCHEMA)
-    )
+        return verdicts(kind="size" if size_offense else "content")
+    return verdicts(evicted=set(evicted))
 
 
 def guard_group_aggs(cfg: DedupConfig) -> list:
@@ -231,7 +184,7 @@ def apply_guards(df: DataFrame, cfg: DedupConfig, key: str = "cluster_key",
     silently truncated), bounding the pairwise diff at O(bound^2).
 
     Expects columns: url, text, n_bytes, raw_hash, ``key``.
-    Only groups failing the linear short-circuit enter the Arrow UDF; the
+    Only groups failing the linear short-circuit enter the Arrow kernel; the
     filter-gate is sharded column algebra (``with_group_stats``: partial
     groupBy + join-back, never a single-task WindowExec — a boilerplate
     mega-cluster's extremes are map-side combined), so the common case never
@@ -270,8 +223,8 @@ def apply_guards(df: DataFrame, cfg: DedupConfig, key: str = "cluster_key",
         F.col("_gd_min_h") == F.col("_gd_max_h"), F.lit(False))
     passes = (F.col("_gd_n") == 1) | (spread_ok & (F.lit(ct < 0) | one_body))
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _evict_group(pdf, st, ct, cap)
+    def run(group: pa.Table) -> pa.Table:
+        return _evict_group(group, st, ct, cap)
 
     # Verdicts exist only for rows of suspicious groups; everyone else gets
     # the defaults through the left join — no branch-and-union, so the
@@ -280,7 +233,7 @@ def apply_guards(df: DataFrame, cfg: DedupConfig, key: str = "cluster_key",
     # aggregations re-derive their input subtree (no DAG-level CSE) — e.g.
     # the cascade's group-stats branch joins the guarded frame twice, and
     # without the persist each re-derivation re-runs the Python eviction
-    # kernel (two FlatMapGroupsInPandas nodes in the exact-pipeline plan).
+    # kernel (two FlatMapGroupsInArrow nodes in the exact-pipeline plan).
     from pyspark import StorageLevel
 
     from .cache import track
@@ -289,7 +242,7 @@ def apply_guards(df: DataFrame, cfg: DedupConfig, key: str = "cluster_key",
         flagged.filter(~passes)
         .select("url", "n_bytes", "raw_hash", "text", key)
         .groupBy(key)
-        .applyInPandas(run, schema=_EVICT_SCHEMA)
+        .applyInArrow(run, schema=_EVICT_SCHEMA)
         .select("url", "evicted", "guard_skip_kind")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )

@@ -5,6 +5,8 @@ reach them: ``exact_binary_dedup`` groups byte-identical payloads by
 sha2, and the perceptual path (``image_dhash`` -> ``dhash_blocks`` ->
 ``image_dedup_ledger``) finds re-encoded and resized copies through a
 64-bit difference hash, clustering distinct hash values rather than ids.
+``image_dhash`` decodes and hashes each payload of a ``mapInArrow`` batch,
+read straight off the Arrow binary column.
 
 Decode is plug-in gated: when Pillow is importable (``_pil_image()``) any
 codec it knows decodes; without it PNG still decodes for real through the
@@ -21,9 +23,7 @@ from __future__ import annotations
 import hashlib
 import io
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -262,6 +262,7 @@ def image_dhash(df: DataFrame, payload_col: str = "html",
     bytes-digest fake for codec-less plumbing tests (non-PNG payloads
     without Pillow). Null payloads hash to null."""
     import numpy as np
+    import pyarrow as pa
 
     tw, th = DHASH_GRID
     schema = T.StructType([
@@ -293,16 +294,15 @@ def image_dhash(df: DataFrame, payload_col: str = "html",
         packed = np.packbits(bits.reshape(-1), bitorder="little")
         return _twos(int.from_bytes(packed.tobytes(), "little"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            vals = pd.array(
-                [None if payload is None else _hash_one(bytes(payload))
-                 for payload in pdf[payload_col].tolist()],
-                dtype="Int64")
-            yield pd.DataFrame({id_col: pdf[id_col], "dhash": vals})
+    def run(batches):
+        for batch in batches:
+            vals = [None if payload is None else _hash_one(payload)
+                    for payload in batch.column(payload_col).to_pylist()]
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(id_col), pa.array(vals, pa.int64())],
+                names=[id_col, "dhash"])
 
-    return df.select(id_col, payload_col).mapInPandas(
-        run, schema=schema)
+    return df.select(id_col, payload_col).mapInArrow(run, schema=schema)
 
 
 def dhash_blocks(sig_df: DataFrame, hamming_threshold: int,

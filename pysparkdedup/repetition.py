@@ -29,10 +29,11 @@ exploded frame before ``line_drops``) and its ``drop_empty`` test.
 Scale notes (100 TB):
 - ``repetition_stats`` / ``repetition_profile`` are SHUFFLE-FREE
   (plan-gated: zero Exchange nodes): per-document signals computed by an
-  Arrow-batched numpy kernel inside ``mapInPandas`` — embarrassingly
+  numpy kernel over each ``mapInArrow`` batch — embarrassingly
   parallel, a mega-document costs only its own gram count within its
-  task, and the whole batch is one factorize + one lexsort per n (no
-  per-row Python). The line ops are pure JVM column algebra.
+  task, and the whole batch is one dictionary encode + one lexsort per n
+  (per-row Python only to tokenize and round). The line ops are pure JVM
+  column algebra.
 - The line ops dehydrate: only the light (id, pos, line) projection rides
   the verdict aggregations (count-only / min-struct state, so partial agg
   absorbs hot lines); both drop sets leave through one per-document
@@ -44,12 +45,12 @@ Scale notes (100 TB):
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 from decimal import ROUND_HALF_UP, Decimal
 from functools import reduce
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -123,17 +124,18 @@ def _round4_half_up(x: float) -> float:
     return float(Decimal(repr(float(x))).quantize(_Q4, rounding=ROUND_HALF_UP))
 
 
-def _profile_batch(pdf: pd.DataFrame, ns: tuple[int, ...],
-                   id_col: str, text_col: str) -> pd.DataFrame:
+def _profile_batch(batch: pa.RecordBatch, ns: tuple[int, ...],
+                   id_col: str, text_col: str) -> pa.RecordBatch:
     """One Arrow batch -> per-doc repetition stats for every n in ``ns``.
 
-    Fully batch-vectorized: one tokenize + factorize over the whole batch
-    (exact string identity — no hash collisions), then per n one
+    Fully batch-vectorized: one tokenize + dictionary encode over the whole
+    batch (exact string identity — no hash collisions), then per n one
     sliding-window view, one lexsort by (doc, gram) and a run-length /
-    reduceat pass. The only per-row Python is the final HALF_UP rounding
-    of two ratios per (doc, n)."""
+    reduceat pass. The only per-row Python is the tokenizer (``str.lower``
+    and ``_WS_RE``) and the final HALF_UP rounding of two ratios per
+    (doc, n)."""
     toks: list[list[str]] = []
-    for t in pdf[text_col]:
+    for t in batch.column(text_col).to_pylist():
         if isinstance(t, str) and t:
             toks.append([w for w in _WS_RE.split(t.lower()) if w])
         else:
@@ -144,13 +146,13 @@ def _profile_batch(pdf: pd.DataFrame, ns: tuple[int, ...],
     flat = [w for ts in toks for w in ts]
     total = len(flat)
     if total:
-        codes = pd.factorize(np.asarray(flat, dtype=object))[0].astype(
-            np.int64)
+        codes = pc.dictionary_encode(pa.array(flat, pa.large_string())
+                                     ).indices.to_numpy().astype(np.int64)
         tlen = np.fromiter(map(len, flat), dtype=np.int64, count=total)
         doc_of = np.repeat(np.arange(ndocs, dtype=np.int64), doc_lens)
         cs = np.concatenate((np.zeros(1, np.int64), np.cumsum(tlen)))
 
-    out: dict = {id_col: pdf[id_col]}
+    out: dict = {id_col: batch.column(id_col)}
     for n in ns:
         ng = np.zeros(ndocs, np.int64)
         dg = np.zeros(ndocs, np.int64)
@@ -207,13 +209,13 @@ def _profile_batch(pdf: pd.DataFrame, ns: tuple[int, ...],
                 safe = np.maximum(tot_c, 1).astype(np.float64)
                 top[present] = prod / safe
                 dup[present] = dup_c.astype(np.float64) / safe
-        out[f"n_grams_{n}"] = ng
-        out[f"distinct_grams_{n}"] = dg
-        out[f"top_gram_frac_{n}"] = np.fromiter(
-            (_round4_half_up(x) for x in top), np.float64, ndocs)
-        out[f"dup_gram_frac_{n}"] = np.fromiter(
-            (_round4_half_up(x) for x in dup), np.float64, ndocs)
-    return pd.DataFrame(out)
+        out[f"n_grams_{n}"] = pa.array(ng)
+        out[f"distinct_grams_{n}"] = pa.array(dg)
+        out[f"top_gram_frac_{n}"] = pa.array(
+            [_round4_half_up(x) for x in top], pa.float64())
+        out[f"dup_gram_frac_{n}"] = pa.array(
+            [_round4_half_up(x) for x in dup], pa.float64())
+    return pa.RecordBatch.from_pydict(out)
 
 
 def repetition_profile(
@@ -231,8 +233,8 @@ def repetition_profile(
     ``dup_gram_frac_{n}`` (same definitions as repetition_stats; ratios
     HALF_UP-rounded to 4 decimals, 0.0 for gram-less docs).
 
-    SHUFFLE-FREE: one ``mapInPandas`` pass — tokenization and the exact
-    token->code factorization are shared across all n, so asking for
+    SHUFFLE-FREE: one ``mapInArrow`` pass — tokenization and the exact
+    token->code dictionary encoding are shared across all n, so asking for
     (2, 3, 4) costs one tokenize plus three windowed sorts, not three
     full passes. Replaces the earlier per-doc JVM ``aggregate`` run-length
     scan: higher-order functions are CodegenFallback (interpreted, no
@@ -257,12 +259,10 @@ def repetition_profile(
             T.StructField(f"dup_gram_frac_{n}", T.DoubleType(), True),
         ]
 
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _profile_batch(pdf, ns, id_col, text_col)
-
-    return df.select(id_col, text_col).mapInPandas(
-        compute, schema=T.StructType(fields))
+    return df.select(id_col, text_col).mapInArrow(
+        lambda batches: (_profile_batch(b, ns, id_col, text_col)
+                         for b in batches),
+        schema=T.StructType(fields))
 
 
 def repetition_stats(

@@ -4,7 +4,8 @@ Single place that pins the configs the engine relies on:
 - UTC session timezone (oracle comparability; Spark timestamps are session-TZ),
 - AQE on (runtime shuffle coalescing + skew-join splitting — the built-in half
   of the skew story; the explicit half is salting in minhash.py),
-- Arrow enabled for every pandas UDF hot path,
+- Arrow batches capped in rows for every Python kernel (``mapInArrow``;
+  the Arrow flag also speeds ``toPandas`` / ``createDataFrame``),
 - shuffle partitions sized to cores for local mode (caller overrides for
   cluster runs via spark-submit --conf).
 """
@@ -69,7 +70,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
-        # Preloaded-fork daemon: workers inherit numpy/pandas/our kernels as
+        # Preloaded-fork daemon: workers inherit numpy/pyarrow/our kernels as
         # COW pages instead of re-importing per forked worker, and skip the
         # per-task re-read of pyspark.zip that CPython < 3.12 does on
         # importlib.invalidate_caches() (~250 ms of executor CPU per task;

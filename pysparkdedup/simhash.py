@@ -27,34 +27,42 @@ from .pairs import scored_edges
 from .tokenhash import Family, token_signatures
 
 
+# Token occurrences unpacked per step: bounds the family's working set to
+# O(slice x 64) bytes, however many tokens one Arrow batch carries. A
+# longer document is one step of its own.
+_SIMHASH_SLICE = 1 << 18
+
+
 def _simhash_arrays(doc_lens: np.ndarray, occ_hashes: np.ndarray) -> list:
     """The SimHash family: one ``simhash`` array, null for an empty doc.
 
     Each token occurrence votes once (which IS the count-weighted vote), so
-    the per-doc vote vector is one ``np.add.reduceat`` over the batch's
-    +-1 bit matrix — no per-doc loops."""
+    the per-doc vote vector is one ``np.add.reduceat`` over the +-1 bit
+    matrix of a slice of whole documents — no per-doc loops."""
     empty = doc_lens == 0
     out = np.zeros(len(doc_lens), dtype=np.int64)
-    if len(occ_hashes):
+    lens_nz = doc_lens[~empty]
+    ends = np.cumsum(lens_nz)
+    starts = ends - lens_nz
+    packed = np.empty(len(lens_nz), dtype=np.uint64)
+    lo = 0
+    while lo < len(lens_nz):
+        hi = max(lo + 1, int(np.searchsorted(
+            ends, starts[lo] + _SIMHASH_SLICE, side="right")))
         # "<u8" pins the bit numbering to the little-endian byte layout on
         # any host (no copy on a little-endian one).
         bits = np.unpackbits(
-            occ_hashes.astype("<u8", copy=False).view(np.uint8)
-            .reshape(-1, 8), axis=1, bitorder="little")
-        # Segment sums via add.reduceat with an int32 accumulator: 3x the
-        # int64 full-batch cumsum (which materializes a (total, 64) int64
-        # intermediate — pure DRAM traffic) and bit-identical, since per-doc
-        # bit counts are exact integers in any width >= log2(doc_len).
-        # votes = 2*bitsum - n.
-        lens_nz = doc_lens[~empty]
-        offs = np.cumsum(lens_nz) - lens_nz
-        bitsum = np.add.reduceat(
-            bits.astype(np.int32), offs, axis=0).astype(np.int64)
-        votes = 2 * bitsum - lens_nz[:, None]  # (nd, 64)
-        out_bits = (votes > 0).astype(np.uint8)
-        packed = np.packbits(out_bits, axis=1, bitorder="little").view(
-            "<u8")[:, 0]
-        out[~empty] = packed.astype(np.int64)
+            occ_hashes[starts[lo]:ends[hi - 1]].astype("<u8", copy=False)
+            .view(np.uint8).reshape(-1, 8), axis=1, bitorder="little")
+        # Segment sums accumulate in int32: per-doc bit counts are exact
+        # integers in any width >= log2(doc_len). votes = 2*bitsum - n.
+        bitsum = np.add.reduceat(bits, starts[lo:hi] - starts[lo], axis=0,
+                                 dtype=np.int32)
+        votes = 2 * bitsum.astype(np.int64) - lens_nz[lo:hi, None]
+        packed[lo:hi] = np.packbits(
+            votes > 0, axis=1, bitorder="little").view("<u8")[:, 0]
+        lo = hi
+    out[~empty] = packed.astype(np.int64)
     return [pa.array(out, mask=empty)]
 
 

@@ -18,19 +18,23 @@ Every exact cosine here — the ANN re-rank, ``embedding_dup_edges`` and
 ``cosine_pairs_exact`` (explicit id pairs) — is ``_fold_mats`` run by the
 shared scoring kernels of pairs.py: a deterministic per-dimension left fold
 in double precision, bit-identical to the DuckDB oracle replay.
+
+The per-vector kernels (top-k partials, sign-LSH buckets, IVF assignment)
+are ``mapInArrow`` maps that decode embeddings, like the scorers and the
+driver-side query and centroid matrices, with ``pairs._payload``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from functools import partial
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .pairs import score_pairs, scored_edges
+from .pairs import _payload, score_pairs, scored_edges
 
 
 def _fold_mats(ea: np.ndarray, eb: np.ndarray) -> np.ndarray:
@@ -74,41 +78,46 @@ _TOPK_SCHEMA = T.StructType([
 ])
 
 
-def cosine_topk(corpus: DataFrame, queries_pdf: pd.DataFrame, k: int = 10,
+def _unit_rows(mat: np.ndarray) -> np.ndarray:
+    return mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
+
+
+def _topk_partial(batches, bc, k: int, label: str):
+    """mapInArrow kernel: each batch's k best corpus vectors per query."""
+    q_ids, q_mat = bc.value
+    for batch in batches:
+        if not batch.num_rows:
+            continue
+        vids = batch.column(0)
+        c = _payload(vids, batch.column(1), label).astype(np.float64)
+        sims = _unit_rows(c) @ q_mat.T  # (batch, nq)
+        kk = min(k, len(vids))
+        top = np.argpartition(-sims, kk - 1, axis=0)[:kk].T  # (nq, kk)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(np.repeat(q_ids, kk)),
+             pa.array(vids.to_numpy()[top.ravel()]),
+             pa.array(np.take_along_axis(sims.T, top, axis=1).ravel())],
+            names=["query_id", "vec_id", "cosine"])
+
+
+def cosine_topk(corpus: DataFrame, queries_pdf, k: int = 10,
                 id_col: str = "vec_id", emb_col: str = "embedding") -> DataFrame:
     """Exact top-k: (query_id, vec_id, cosine), k rows per query.
 
-    ``queries_pdf`` is a pandas frame (query_id, embedding list) — broadcast
+    ``queries_pdf`` is a small local frame (query_id, embedding list) — a
+    pandas frame, a ``pyarrow.Table`` or a dict of columns — broadcast
     once; each Arrow batch does one (batch x dim) @ (dim x nq) matmul.
     """
     spark = corpus.sparkSession
-    q_ids = queries_pdf["query_id"].to_numpy()
-    q_mat = np.vstack(queries_pdf["embedding"].to_numpy()).astype(np.float64)
+    q = pa.table(queries_pdf)
+    q_ids = q.column("query_id").combine_chunks()
+    q_mat = _payload(q_ids, q.column("embedding").combine_chunks(),
+                     "embedding").astype(np.float64)
     q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
-    bc = spark.sparkContext.broadcast((q_ids, q_mat))
-
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, mat = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            vids = pdf[id_col].to_numpy()
-            c = np.vstack(pdf[emb_col].to_numpy()).astype(np.float64)
-            c /= np.maximum(np.linalg.norm(c, axis=1, keepdims=True), 1e-12)
-            sims = c @ mat.T  # (batch, nq)
-            kk = min(k, len(vids))
-            top = np.argpartition(-sims, kk - 1, axis=0)[:kk]  # (kk, nq)
-            out_q, out_v, out_s = [], [], []
-            for qi in range(len(ids)):
-                rows = top[:, qi]
-                out_q.extend([ids[qi]] * len(rows))
-                out_v.extend(vids[rows].tolist())
-                out_s.extend(sims[rows, qi].tolist())
-            yield pd.DataFrame(
-                {"query_id": out_q, "vec_id": out_v, "cosine": out_s})
-
-    partials = corpus.select(id_col, emb_col).mapInPandas(
-        partial, schema=_TOPK_SCHEMA)
+    bc = spark.sparkContext.broadcast((q_ids.to_numpy(), q_mat))
+    partials = corpus.select(id_col, emb_col).mapInArrow(
+        partial(_topk_partial, bc=bc, k=k, label=emb_col),
+        schema=_TOPK_SCHEMA)
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.asc("vec_id"))
     return (
@@ -151,6 +160,40 @@ def plane_signs(n_tables: int, n_bits: int, dim: int,
     return np.where((h & 1) == 0, 1.0, -1.0)
 
 
+def _bucket_batches(batches, n_tables: int, n_bits: int, seed: int,
+                    label: str):
+    """mapInArrow kernel: (id, embedding) -> (id, table_id, bucket), one
+    row per (vector, table)."""
+    weights = (1 << np.arange(n_bits)).astype(np.int64)
+    for batch in batches:
+        if not batch.num_rows:
+            continue
+        ids = batch.column(0)
+        mat = _payload(ids, batch.column(1), label).astype(np.float64)
+        n, dim = mat.shape
+        # Ordered LEFT-FOLD over dims (d = 0..dim-1), vectorized across
+        # the batch AND all tables at once (each (table, bit)
+        # accumulator is independent, so folding them side by side in
+        # one (batch, n_tables*n_bits) array keeps the per-accumulator
+        # addition order identical): bit-identical to the oracle's
+        # list_reduce((acc, v) -> acc + v) replay, unlike a BLAS matmul
+        # whose pairwise-summation order is unspecified and could flip
+        # the sign of a projection within ~1e-12 of zero. O(dim) fused
+        # numpy ops per batch instead of O(dim * n_tables).
+        pflat = plane_signs(n_tables, n_bits, dim, seed).transpose(
+            1, 0, 2).reshape(dim, n_tables * n_bits)  # (dim, tables*bits)
+        proj = np.zeros((n, n_tables * n_bits), np.float64)
+        for dmi in range(dim):
+            proj += mat[:, dmi, None] * pflat[dmi]
+        signs = (proj > 0).reshape(n, n_tables, n_bits)
+        buckets = (signs.astype(np.int64) * weights).sum(axis=2)
+        yield pa.RecordBatch.from_arrays(
+            [ids.take(np.tile(np.arange(n), n_tables)),
+             pa.array(np.repeat(np.arange(n_tables, dtype=np.int32), n)),
+             pa.array(buckets.T.reshape(-1))],
+            names=["_id", "table_id", "bucket"])
+
+
 def hyperplane_buckets(df: DataFrame, n_tables: int = 8, n_bits: int = 12,
                        dim: int | None = None, seed: int = 42,
                        id_col: str = "vec_id",
@@ -158,9 +201,10 @@ def hyperplane_buckets(df: DataFrame, n_tables: int = 8, n_bits: int = 12,
     """(id, table_id, bucket): sign-LSH bucket per table — numpy batched.
 
     Planes are hash-deterministic Rademacher projections (``plane_signs``):
-    regenerated locally inside each Arrow batch worker from (seed, shape)
-    alone — nothing is broadcast, and the DuckDB oracle replays the exact
-    bucket values from the same (a, b) literals.
+    regenerated inside each Arrow batch from (seed, shape) alone — nothing
+    is broadcast, and the DuckDB oracle replays the exact bucket values
+    from the same (a, b) literals. A null, empty or ragged vector raises
+    naming its id.
 
     The id column rides through untouched, so it may be integral (the
     embeddings table's vec_id) or string (e.g. page urls) — the Arrow
@@ -171,46 +215,12 @@ def hyperplane_buckets(df: DataFrame, n_tables: int = 8, n_bits: int = 12,
         T.StructField("table_id", T.IntegerType(), False),
         T.StructField("bucket", T.LongType(), False),
     ])
-
-    state: dict = {}
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            mat = np.vstack(pdf[emb_col].to_numpy()).astype(np.float64)
-            if "planes" not in state:
-                state["planes"] = plane_signs(
-                    n_tables, n_bits, mat.shape[1], seed)
-            planes = state["planes"]
-            ids = pdf[id_col].to_numpy()
-            weights = (1 << np.arange(n_bits)).astype(np.int64)
-            # Ordered LEFT-FOLD over dims (d = 0..dim-1), vectorized across
-            # the batch AND all tables at once (each (table, bit)
-            # accumulator is independent, so folding them side by side in
-            # one (batch, n_tables*n_bits) array keeps the per-accumulator
-            # addition order identical): bit-identical to the oracle's
-            # list_reduce((acc, v) -> acc + v) replay, unlike a BLAS matmul
-            # whose pairwise-summation order is unspecified and could flip
-            # the sign of a projection within ~1e-12 of zero. O(dim) fused
-            # numpy ops per batch instead of O(dim * n_tables).
-            pflat = planes.transpose(1, 0, 2).reshape(
-                mat.shape[1], n_tables * n_bits)  # (dim, tables*bits)
-            proj = np.zeros((mat.shape[0], n_tables * n_bits), np.float64)
-            for dmi in range(mat.shape[1]):
-                proj += mat[:, dmi, None] * pflat[dmi]
-            signs = (proj > 0).reshape(len(ids), n_tables, n_bits)
-            buckets = (signs.astype(np.int64) * weights).sum(axis=2)
-            yield pd.DataFrame({
-                "_id": np.tile(ids, n_tables),
-                "table_id": np.repeat(
-                    np.arange(n_tables, dtype=np.int32), len(ids)),
-                "bucket": buckets.T.reshape(-1),
-            })
-
     return df.select(
         F.col(id_col).alias(id_col), emb_col
-    ).mapInPandas(compute, schema=schema).withColumnRenamed("_id", id_col)
+    ).mapInArrow(
+        partial(_bucket_batches, n_tables=n_tables, n_bits=n_bits,
+                seed=seed, label=emb_col),
+        schema=schema).withColumnRenamed("_id", id_col)
 
 
 # Auto-banding target: mean vectors per sign-LSH bucket. Candidate volume
@@ -318,16 +328,17 @@ def ivf_centroids(corpus: DataFrame, n_list: int = 16, seed: int = 42,
     )
 
 
-def lloyd_refine(corpus: DataFrame, cent_pdf: pd.DataFrame, iters: int = 1,
-                 id_col: str = "vec_id",
-                 emb_col: str = "embedding") -> pd.DataFrame:
+def lloyd_refine(corpus: DataFrame, c_ids: np.ndarray, c_mat: np.ndarray,
+                 iters: int = 1, id_col: str = "vec_id",
+                 emb_col: str = "embedding") -> np.ndarray:
     """``iters`` pinned Lloyd iterations over the sampled centroids
     (k-means refinement of the IVF coarse quantizer, Jegou TPAMI'11 §II):
     assign every corpus vector to its nearest centroid (cosine DESC,
     list_id ASC — the same rule the search path uses), move each centroid
     to the per-dimension MEAN of its list, keep the old centroid for an
-    empty list. list_ids stay the original sampled ids, so the search path
-    and the oracle reference stable lists.
+    empty list. list_ids stay the original sampled ids (``c_ids``,
+    ascending), so the search path and the oracle reference stable lists;
+    returns the refined (n_list, dim) centroid matrix.
 
     Scale shape: assignment is the Arrow-batched map ``_ivf_assign`` (no
     shuffle); the mean is a posexplode -> groupBy(list_id, dim) hash
@@ -342,7 +353,8 @@ def lloyd_refine(corpus: DataFrame, cent_pdf: pd.DataFrame, iters: int = 1,
     always re-scores with EXACT embeddings, so integer outputs are stable
     in practice (same acceptance as the sign-LSH bucket oracle)."""
     for _ in range(iters):
-        assign = _ivf_assign(corpus, cent_pdf, 1, id_col, emb_col, id_col)
+        assign = _ivf_assign(corpus, c_ids, c_mat, 1, id_col, emb_col,
+                             id_col)
         refined = (
             corpus.join(assign, id_col)
             .select("list_id", F.posexplode(F.col(emb_col)).alias("d", "v"))
@@ -351,52 +363,49 @@ def lloyd_refine(corpus: DataFrame, cent_pdf: pd.DataFrame, iters: int = 1,
             .groupBy("list_id")
             .agg(F.array_sort(F.collect_list(F.struct("d", "m"))).alias("dm"))
             .select("list_id", F.expr("transform(dm, x -> x.m)").alias("_rc"))
-            .toPandas()
+            .toArrow()
         )
-        merged = cent_pdf.merge(refined, on="list_id", how="left")
-        merged["centroid"] = [
-            rc if isinstance(rc, (list, np.ndarray)) else c
-            for c, rc in zip(merged["centroid"], merged["_rc"])
-        ]
-        cent_pdf = merged[["list_id", "centroid"]]
-    return cent_pdf
+        r_ids = refined.column("list_id").combine_chunks()
+        c_mat = c_mat.copy()
+        c_mat[np.searchsorted(c_ids, r_ids.to_numpy())] = _payload(
+            r_ids, refined.column("_rc").combine_chunks(), "centroid")
+    return c_mat
 
 
-def _ivf_assign(df: DataFrame, cent_pdf: pd.DataFrame, nprobe: int,
-                id_col: str, emb_col: str, out_id: str) -> DataFrame:
+def _ivf_batches(batches, bc, nprobe: int, out_id: str, label: str):
+    """mapInArrow kernel: (id, embedding) -> (out_id, list_id), the
+    ``nprobe`` nearest of the broadcast (ascending ids, unit centroids)."""
+    ids, mat = bc.value
+    np_ = min(nprobe, len(ids))
+    for batch in batches:
+        if not batch.num_rows:
+            continue
+        vids = batch.column(0)
+        v = _payload(vids, batch.column(1), label).astype(np.float64)
+        sims = _unit_rows(v) @ mat.T  # (batch, n_list); ids ascending
+        # stable argsort keeps list_id-ASC order among exact cosine ties
+        top = np.argsort(-sims, axis=1, kind="stable")[:, :np_]
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(np.repeat(vids.to_numpy(), np_)),
+             pa.array(ids[top].ravel())],
+            names=[out_id, "list_id"])
+
+
+def _ivf_assign(df: DataFrame, c_ids: np.ndarray, c_mat: np.ndarray,
+                nprobe: int, id_col: str, emb_col: str,
+                out_id: str) -> DataFrame:
     """(out_id, list_id): the ``nprobe`` nearest centroids by
-    (cosine DESC, list_id ASC) — numpy batched, centroids broadcast."""
-    spark = df.sparkSession
-    c_ids = cent_pdf["list_id"].to_numpy()
-    c_mat = np.vstack(cent_pdf["centroid"].to_numpy()).astype(np.float64)
-    c_mat /= np.maximum(np.linalg.norm(c_mat, axis=1, keepdims=True), 1e-12)
-    order = np.argsort(c_ids)  # tie-break on list_id: pre-sort, stable sort
-    c_ids, c_mat = c_ids[order], c_mat[order]
-    bc = spark.sparkContext.broadcast((c_ids, c_mat))
-
+    (cosine DESC, list_id ASC) — numpy batched, centroids (ids ascending)
+    broadcast."""
+    bc = df.sparkSession.sparkContext.broadcast((c_ids, _unit_rows(c_mat)))
     schema = T.StructType([
         T.StructField(out_id, T.LongType(), False),
         T.StructField("list_id", T.LongType(), False),
     ])
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, mat = bc.value
-        np_ = min(nprobe, len(ids))
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            vids = pdf[id_col].to_numpy()
-            v = np.vstack(pdf[emb_col].to_numpy()).astype(np.float64)
-            v /= np.maximum(np.linalg.norm(v, axis=1, keepdims=True), 1e-12)
-            sims = v @ mat.T  # (batch, n_list); ids ascending -> stable
-            # argsort keeps list_id-ASC order among exact cosine ties
-            top = np.argsort(-sims, axis=1, kind="stable")[:, :np_]
-            yield pd.DataFrame({
-                out_id: np.repeat(vids, np_),
-                "list_id": ids[top].ravel(),
-            })
-
-    return df.select(id_col, emb_col).mapInPandas(assign, schema=schema)
+    return df.select(id_col, emb_col).mapInArrow(
+        partial(_ivf_batches, bc=bc, nprobe=nprobe, out_id=out_id,
+                label=emb_col),
+        schema=schema)
 
 
 def _rerank(cand: DataFrame, corpus: DataFrame, queries: DataFrame, k: int,
@@ -435,19 +444,24 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     whose fan-in is bounded by the list sizes — a hash-sampled quantizer
     keeps expected list size n/n_list, and a skewed corpus degrades to at
     worst nprobe lists per query, never a cross join."""
-    cent_pdf = ivf_centroids(corpus, n_list, seed,
-                             id_col=id_col, emb_col=emb_col).toPandas()
-    if lloyd_iters and not cent_pdf.empty:
-        cent_pdf = lloyd_refine(corpus, cent_pdf, lloyd_iters,
-                                id_col=id_col, emb_col=emb_col)
-    if cent_pdf.empty:
-        # An empty corpus would otherwise surface as an opaque np.vstack
-        # ValueError inside the assignment UDF (advice r3); an empty result
-        # frame is the honest answer — there is nothing to rank.
+    cent = ivf_centroids(corpus, n_list, seed, id_col=id_col,
+                         emb_col=emb_col).toArrow().sort_by("list_id")
+    if not cent.num_rows:
+        # An empty corpus has no centroids to assign to (advice r3); an
+        # empty result frame is the honest answer — there is nothing to
+        # rank.
         return corpus.sparkSession.createDataFrame(
             [], schema=f"query_id long, {id_col} long, cosine double, rank int")
-    corpus_lists = _ivf_assign(corpus, cent_pdf, 1, id_col, emb_col, id_col)
-    query_lists = _ivf_assign(queries, cent_pdf, nprobe,
+    c_ids = cent.column("list_id").combine_chunks()
+    c_mat = _payload(c_ids, cent.column("centroid").combine_chunks(),
+                     "centroid").astype(np.float64)
+    c_ids = c_ids.to_numpy()
+    if lloyd_iters:
+        c_mat = lloyd_refine(corpus, c_ids, c_mat, lloyd_iters,
+                             id_col=id_col, emb_col=emb_col)
+    corpus_lists = _ivf_assign(corpus, c_ids, c_mat, 1, id_col, emb_col,
+                               id_col)
+    query_lists = _ivf_assign(queries, c_ids, c_mat, nprobe,
                               "query_id", emb_col, "query_id")
     return _rerank(query_lists.join(corpus_lists, "list_id"), corpus,
                    queries, k, id_col, emb_col)
@@ -472,6 +486,11 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     an unbounded join. The degradation is observable, never silent: pass
     ``hot_obs`` (a pyspark.sql.Observation) to collect ``hot_buckets`` /
     ``hot_rows`` metrics during the action that materializes the result.
+
+    The gate is not ``pairs.split_buckets``: a query can match a ONE-member
+    corpus bucket, which ``split_buckets`` drops (it keeps buckets of >= 2
+    members), and hot buckets drop here instead of starring. Sharing it
+    would make the gate branch on its caller.
     """
     cb = hyperplane_buckets(corpus, n_tables, n_bits, seed=seed,
                             id_col=id_col, emb_col=emb_col)

@@ -1,5 +1,5 @@
 """Text-analysis operators for training-data pipelines — all JVM-side column
-algebra except winnowing (vectorized pandas UDF).
+algebra except winnowing (a numpy kernel over ``mapInArrow`` batches).
 
 - token counts       : whitespace ``tokens_col`` + BPE-ish ``subword_count``
 - language-ID        : n-gram/stopword-marker heuristic, argmax over langs
@@ -12,10 +12,10 @@ normalized forms — ref mail.py:309-439) to web-text curation signals.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from functools import partial
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -127,36 +127,41 @@ _WINNOW_SCHEMA = T.StructType([
 ])
 
 
+def _winnow(batches, k: int, window: int, text_col: str):
+    """mapInArrow kernel: (url, text) -> (url, winnowing fingerprints)."""
+    base = np.uint64(1000003)
+    for batch in batches:
+        fps = []
+        for text in batch.column(text_col).to_pylist():
+            s = (text or "").lower()
+            if len(s) < k:
+                fps.append(None)
+                continue
+            codes = np.frombuffer(s.encode("utf-32-le"), dtype="<u4"
+                                  ).astype(np.uint64)
+            n = len(codes) - k + 1
+            acc = np.zeros(n, dtype=np.uint64)
+            for j in range(k):
+                acc = acc * base + codes[j : j + n]
+            if n >= window:
+                m = np.lib.stride_tricks.sliding_window_view(acc, window)
+                mins = m.min(axis=1)
+            else:
+                mins = np.array([acc.min()], dtype=np.uint64)
+            fps.append(np.unique(mins).astype(np.int64))
+        yield pa.RecordBatch.from_arrays(
+            [batch.column("url"), pa.array(fps, pa.list_(pa.int64()))],
+            names=["url", "fingerprints"])
+
+
 def winnowing_fingerprints(df: DataFrame, k: int = 8, window: int = 4,
                            text_col: str = "text") -> DataFrame:
     """Winnowing document fingerprints (Schleimer et al., SIGMOD'03 — public
     algorithm): rolling char k-gram hashes, keep the minimum of each sliding
-    window, dedup. Vectorized numpy inside mapInPandas."""
-    base = np.uint64(1000003)
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            fps = []
-            for text in pdf[text_col].tolist():
-                s = (text or "").lower()
-                if len(s) < k:
-                    fps.append(None)
-                    continue
-                codes = np.frombuffer(s.encode("utf-32-le"), dtype="<u4"
-                                      ).astype(np.uint64)
-                n = len(codes) - k + 1
-                acc = np.zeros(n, dtype=np.uint64)
-                for j in range(k):
-                    acc = acc * base + codes[j : j + n]
-                if n >= window:
-                    m = np.lib.stride_tricks.sliding_window_view(acc, window)
-                    mins = m.min(axis=1)
-                else:
-                    mins = np.array([acc.min()], dtype=np.uint64)
-                fps.append(np.unique(mins).astype(np.int64).tolist())
-            yield pd.DataFrame({"url": pdf["url"], "fingerprints": fps})
-
-    return df.select("url", text_col).mapInPandas(compute, schema=_WINNOW_SCHEMA)
+    window, dedup. Vectorized numpy per document inside mapInArrow."""
+    return df.select("url", text_col).mapInArrow(
+        partial(_winnow, k=k, window=window, text_col=text_col),
+        schema=_WINNOW_SCHEMA)
 
 
 def vocab_topk(

@@ -3,10 +3,16 @@ stop each task from re-reading the PySpark zip archives.
 
 Python workers are forked from the daemon per task (reuse is best-effort;
 early-terminated Arrow streams and stage turnover churn workers). Every fresh
-worker that has to import numpy + pandas + this package pays ~1s of CPU and a
+worker that has to import numpy + pyarrow + this package pays ~1s of CPU and a
 storm of page faults — at thousands of tasks that becomes the dominant kernel
 time. Preloading in the daemon makes each fork inherit the imports as
 copy-on-write pages.
+
+Every package kernel runs on Arrow batches, but pandas stays preloaded: the
+seeded test-data generator (``corpus.pages_and_truth``, the benchmark's
+setup) and the driver entry's synthetic image generator still run
+``mapInPandas``, and without the preload each of their workers would import
+pandas itself.
 
 The second fixed cost is per task, not per worker: PySpark's worker calls
 ``importlib.invalidate_caches()`` at the start of every task

@@ -193,27 +193,6 @@ def test_one_body_gate_is_constant_memory(pages_factory):
     assert all(not r["evicted"] for r in out)
 
 
-def test_pair_diff_lengths_debug_surface(pages_factory):
-    """--show-diff analog: per-pair size deltas + the exact content-diff
-    metric the eviction uses (null when size already decided)."""
-    from pysparkdedup.guards import pair_diff_lengths
-    from pysparkdedup.exact import annotate, with_cluster_key
-
-    rows = [
-        ("u/a", ts(0), "line one\nline two", "en"),
-        ("u/b", ts(1), "line one\nline two", "en"),
-        ("u/c", ts(2), "line one\nTOTALLY DIFFERENT", "en"),
-    ]
-    df = with_cluster_key(annotate(pages_factory(rows), DedupConfig())) \
-        .withColumn("cluster_key", F.lit("g"))
-    out = {(r["a"], r["b"]): r for r in
-           pair_diff_lengths(df, DedupConfig()).collect()}
-    assert len(out) == 3
-    assert out[("u/a", "u/b")]["content_diff"] == 0  # identical bodies
-    assert out[("u/a", "u/c")]["content_diff"] > 0
-    assert out[("u/a", "u/b")]["size_diff"] == 0
-
-
 def test_fused_set_stats_match_standalone_passes(pages_factory):
     """The r8 shared-aggregation plumbing (apply_guards(group_stats=...) +
     label_outcomes(rep_stats=...)) must produce byte-identical final

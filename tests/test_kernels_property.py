@@ -144,29 +144,28 @@ def _naive_evict(rows, st, ct):
     st.sampled_from([-1, 0, 10, 768]),
 )
 def test_class_level_eviction_matches_node_level(texts_pool, st_thr, ct_thr):
-    import pandas as pd
-
     from pysparkdedup.guards import _evict_group
 
     rows = [(f"u{i:02d}", len(t), t) for i, t in enumerate(texts_pool)]
-    pdf = pd.DataFrame({
+    group = pa.table({
         "url": [r[0] for r in rows],
-        "n_bytes": [r[1] for r in rows],
+        "n_bytes": pa.array([r[1] for r in rows], pa.int64()),
         # raw_hash stands in for the body-identity key; equal text == equal hash
         "raw_hash": [r[2] for r in rows],
         "text": [r[2] for r in rows],
     })
-    got = _evict_group(pdf, st_thr, ct_thr, max_group=5000)
+    got = _evict_group(group, st_thr, ct_thr, max_group=5000).to_pydict()
     exp_evicted, exp_skip = _naive_evict(rows, st_thr, ct_thr)
     if exp_skip is not None:
         assert set(got["guard_skip_kind"]) == {exp_skip}
-        assert not got["evicted"].any()
+        assert not any(got["evicted"])
     else:
-        assert set(got.loc[got["evicted"], "url"]) == exp_evicted
-        assert got["guard_skip_kind"].isna().all()
+        assert {u for u, e in zip(got["url"], got["evicted"]) if e} \
+            == exp_evicted
+        assert all(k is None for k in got["guard_skip_kind"])
 
 
-# --- repetition profile kernel (round 6: numpy mapInPandas batch) --------
+# --- repetition profile kernel (round 6: numpy batch over Arrow) --------
 
 def _ref_rep_stats(text, n):
     """Direct Counter reference for one doc at one n, with the JVM
@@ -207,19 +206,18 @@ _rep_texts = st.lists(
 @given(st.lists(_rep_texts, min_size=1, max_size=8),
        st.sampled_from([(1,), (2,), (2, 3, 4)]))
 def test_repetition_profile_batch_matches_reference(batch, ns):
-    import pandas as pd
-
     from pysparkdedup.repetition import _profile_batch
 
-    pdf = pd.DataFrame({"doc_id": list(range(len(batch))), "text": batch})
-    out = _profile_batch(pdf, ns, "doc_id", "text")
+    rb = pa.RecordBatch.from_pydict(
+        {"doc_id": list(range(len(batch))), "text": batch})
+    out = _profile_batch(rb, ns, "doc_id", "text").to_pydict()
     for i, text in enumerate(batch):
         for n in ns:
             exp = _ref_rep_stats(text, n)
-            got = (int(out["n_grams_%d" % n][i]),
-                   int(out["distinct_grams_%d" % n][i]),
-                   float(out["top_gram_frac_%d" % n][i]),
-                   float(out["dup_gram_frac_%d" % n][i]))
+            got = (out["n_grams_%d" % n][i],
+                   out["distinct_grams_%d" % n][i],
+                   out["top_gram_frac_%d" % n][i],
+                   out["dup_gram_frac_%d" % n][i])
             assert got == exp, (i, n, text)
 
 

@@ -449,3 +449,43 @@ def test_bucket_kernel_pair_indices_bounded_per_slice():
     # multiple of 7 (every bucket starts at a multiple of 40).
     assert same == nb * sum(m - d for d in range(7, m, 7))
     assert peak < 12 * 2**20, peak
+
+
+def test_simhash_family_memory_bounded_per_slice():
+    """One batch of 1M token occurrences must be unpacked a slice of whole
+    documents at a time: the family's Python-side allocations stay far
+    below the ~810 MiB that unpacking the whole batch (64 bits per token,
+    then an int32 copy) takes, a document longer than a slice still gets
+    one slice of its own, and every signature matches the per-document
+    vote."""
+    import tracemalloc
+
+    import numpy as np
+
+    from pysparkdedup.simhash import _SIMHASH_SLICE, _simhash_arrays
+
+    rng = np.random.default_rng(7)
+    lens = rng.integers(0, 1500, 1000)
+    lens[::97] = 0                          # empty docs sign to null
+    lens[500] = _SIMHASH_SLICE + 11         # longer than one slice
+    hashes = rng.integers(0, 2**63, int(lens.sum()), dtype=np.int64
+                          ).astype(np.uint64) * np.uint64(3)
+    tracemalloc.start()
+    try:
+        (got,) = _simhash_arrays(lens, hashes)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+
+    want, offs = [], np.concatenate(([0], np.cumsum(lens)))
+    for i, n in enumerate(lens):
+        if not n:
+            want.append(None)
+            continue
+        bits = np.unpackbits(hashes[offs[i]:offs[i + 1]].view(np.uint8)
+                             .reshape(-1, 8), axis=1, bitorder="little")
+        sig = np.packbits(2 * bits.sum(0, dtype=np.int64) > n,
+                          bitorder="little").view("<u8")[0]
+        want.append(int(sig.astype(np.int64)))
+    assert got.to_pylist() == want
+    assert peak < 128 * 2**20, peak

@@ -263,8 +263,11 @@ def test_ivf_lloyd_improves_recall_on_clustered_corpus(spark):
 def test_cosine_pairs_exact_rejects_dirty_embeddings(spark, emb):
     """A null or ragged embedding must fail the pair scorer loudly, naming
     its id, as the fused bucket kernel does: dropping the pair would hide
-    bad input behind the threshold filter."""
+    bad input behind the threshold filter. The bucketing kernel shares the
+    decode, so it names the null vector too."""
     from pyspark.errors import PythonException
+
+    from pysparkdedup.similarity import hyperplane_buckets
 
     slim = emb.select("vec_id", "embedding").limit(2)
     c0, c1 = (int(v) for v in slim.toPandas()["vec_id"])
@@ -282,6 +285,8 @@ def test_cosine_pairs_exact_rejects_dirty_embeddings(spark, emb):
         with pytest.raises(PythonException,
                            match=f"embedding of id {bad_id}"):
             cosine_pairs_exact(pairs, mixed).collect()
+    with pytest.raises(PythonException, match="embedding of id 9001"):
+        hyperplane_buckets(mixed.coalesce(1), n_tables=2, n_bits=4).collect()
 
 
 def test_fused_bucket_scoring_matches_join_path(spark, emb):
@@ -399,7 +404,7 @@ def test_bucket_kernel_scores_in_bounded_slices():
 
 def test_embedding_dup_edges_rejects_short_vector(spark, emb):
     """A vector shorter than the rest, alone in its hyperplane_buckets batch
-    (so that kernel's vstack cannot catch it), must fail the fused scorer
+    (so that kernel's decode cannot catch it), must fail the fused scorer
     loudly: zero-padding it would fold to NaN cosines that the threshold
     filter drops without a trace."""
     from pyspark.errors import PythonException

@@ -1,6 +1,10 @@
-"""Library surface gate: every top-level function or class in the package
-must be reached from the package itself, the driver entry point, the bench
-or the tooling — not only from tests. Pure AST scan, no Spark session."""
+"""Library surface gates, pure AST scans with no Spark session:
+
+- every top-level function or class in the package must be reached from the
+  package itself, the driver entry point, the bench or the tooling — not
+  only from tests;
+- every Python kernel runs on Arrow batches: no pandas UDF outside the
+  test-data generator."""
 
 import ast
 from collections import Counter
@@ -13,7 +17,6 @@ REACHERS = PACKAGE + [ROOT / "__spark_entry__.py", ROOT / "bench.py"] + sorted(
 
 # Reached only from tests, each with the reason it stays.
 TEST_ONLY = {
-    "pair_diff_lengths": "content-guard debug table (reference --show-diff)",
     "exact_binary_dedup": "byte-identical media dedup beside the dHash path",
     "run_and_check": "one-call run plus invariant check, the verify recipe",
     "union_sources": "multi-source registration, no CLI flag yet",
@@ -70,3 +73,20 @@ def test_test_only_names_are_still_unreached():
     counts = _counts()
     reached = sorted(name for name in TEST_ONLY if counts[name] > 1)
     assert not reached, f"reached now, drop from TEST_ONLY: {reached}"
+
+
+# The seeded test-data generator keeps its row-wise pandas UDF.
+PANDAS_UDF_OK = {"corpus.py"}
+PANDAS_UDFS = {"mapInPandas", "applyInPandas", "pandas_udf"}
+
+
+def test_no_pandas_udf_in_package():
+    """Kernels read their columns straight off the Arrow batch
+    (``mapInArrow`` / ``applyInArrow``); a pandas UDF would bring back the
+    per-batch Arrow -> pandas -> Arrow conversion."""
+    found = sorted(
+        f"{path.name}: {name}"
+        for path in PACKAGE if path.name not in PANDAS_UDF_OK
+        for name in _names(ast.parse(path.read_text(), str(path)))
+        if name in PANDAS_UDFS)
+    assert not found, f"pandas UDFs outside the test-data generator: {found}"

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .config import DedupConfig
+from .crosscorpus import old_side_dims
 from .minhash import minhash_family
 from .normalize import content_hash_expr
 from .simhash import SIMHASH
@@ -44,6 +45,9 @@ MANIFEST = "_manifest.json"
 DATA_DIR = "data"
 LOCK = "_commit.lock"
 LOCK_STALE_S = 3600.0  # a lock older than this is a crashed writer's corpse
+# The persisted cross dims: crosscorpus.old_side_dims name -> dir prefix.
+CROSS_DIMS = {"exact_dim": "exactdim", "bands": "bands",
+              "band_stats": "bandstats"}
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -243,7 +247,7 @@ class SignatureCheckpoint:
     def _gc_orphans(self, keep_dirs: set[str]) -> None:
         """Remove data/dim dirs not referenced by the manifest — a crashed
         or lost-race writer's leftovers. Only ever called under the lock."""
-        prefixes = (f"{DATA_DIR}-", "exactdim-", "bands-", "bandstats-")
+        prefixes = tuple(f"{p}-" for p in (DATA_DIR, *CROSS_DIMS.values()))
         for name in os.listdir(self.path):
             if (name.startswith(prefixes) and name not in keep_dirs
                     and os.path.isdir(os.path.join(self.path, name))):
@@ -272,20 +276,16 @@ class SignatureCheckpoint:
         ResumeMetrics. That makes a resume auditable offline: which inputs
         produced which partitions, and how much the checkpoint saved.
 
-        ``cross_dims=True`` additionally persists the derivations
-        crosscorpus.dedup_against needs from the OLD side of an incremental
-        run, so warm runs do ZERO old-side aggregations (the reference's
-        cache stores exactly what makes re-runs cheap, ref cache.py:175-184,
-        docs/performance.md:111):
-        - ``exactdim-*``  : content_hash -> min(url) exact-match dim;
-        - ``bands-*``     : (band_id, band_hash, url) LSH band projection;
-        - ``bandstats-*`` : per-bucket (count, min-url representative) —
-          the hot-bucket gate + degrade dim, so even bucket sizing costs
-          no old-side shuffle at dedup time.
-        The one-time cost rides the commit (aggregations over the
-        just-written signature table, metadata-scale vs the corpus); a
-        monthly incremental against a 100-TB old corpus then never
-        re-shuffles the old side."""
+        ``cross_dims=True`` additionally persists
+        ``crosscorpus.old_side_dims`` of the committed table — the exact,
+        band and band-stats dims dedup_against reads from the OLD side of
+        an incremental run — one ``<prefix>-<tag>`` dir each (``CROSS_DIMS``),
+        so warm runs do ZERO old-side aggregations (the reference's cache
+        stores exactly what makes re-runs cheap, ref cache.py:175-184,
+        docs/performance.md:111). The one-time cost rides the commit
+        (aggregations over the just-written signature table, metadata-scale
+        vs the corpus); a monthly incremental against a 100-TB old corpus
+        then never re-shuffles the old side."""
         os.makedirs(self.path, exist_ok=True)
         token = self._acquire_lock()
         try:
@@ -323,30 +323,12 @@ class SignatureCheckpoint:
             }
             keep = {new_dir}
             if cross_dims:
-                from .minhash import lsh_bands
-
                 tag = uuid.uuid4().hex[:12]
-                exact_dir = f"exactdim-{tag}"
-                bands_dir = f"bands-{tag}"
-                stats_dir = f"bandstats-{tag}"
-                committed.groupBy("content_hash").agg(
-                    F.min("url").alias("url")
-                ).write.mode("overwrite").parquet(
-                    os.path.join(self.path, exact_dir))
-                bands = lsh_bands(
-                    committed.select("url", "minhash"), cfg)
-                bands.write.mode("overwrite").parquet(
-                    os.path.join(self.path, bands_dir))
-                committed.sparkSession.read.parquet(
-                    os.path.join(self.path, bands_dir)
-                ).groupBy("band_id", "band_hash").agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.min("url").alias("rep_url"),
-                ).write.mode("overwrite").parquet(
-                    os.path.join(self.path, stats_dir))
-                manifest["exact_dim"] = exact_dir
-                manifest["bands"] = bands_dir
-                manifest["band_stats"] = stats_dir
+                for name, dim in old_side_dims(committed, cfg).items():
+                    manifest[name] = f"{CROSS_DIMS[name]}-{tag}"
+                    dim.write.mode("overwrite").parquet(
+                        os.path.join(self.path, manifest[name]))
+                    keep.add(manifest[name])
                 # The banding layout is NOT part of signature_fingerprint
                 # (signatures survive a re-banding), but the persisted
                 # bands-*/bandstats-* dims are sliced by it — record it so
@@ -354,7 +336,6 @@ class SignatureCheckpoint:
                 # (b, r) instead of silently joining mismatched slices.
                 manifest["banding"] = {
                     "lsh_bands": cfg.lsh_bands, "lsh_rows": cfg.lsh_rows}
-                keep |= {exact_dir, bands_dir, stats_dir}
             if metrics is not None:
                 manifest["metrics"] = metrics.to_dict()
             if input_files:
@@ -370,8 +351,8 @@ class SignatureCheckpoint:
     def load_cross_dims(
         self, spark: SparkSession, cfg: DedupConfig,
     ) -> dict[str, DataFrame] | None:
-        """The persisted old-side dims for crosscorpus.dedup_against
-        (``exact_dim`` / ``bands`` / ``band_stats`` frames), or None when
+        """The persisted ``crosscorpus.old_side_dims`` frames, keyed as
+        ``CROSS_DIMS``, for crosscorpus.dedup_against, or None when
         the checkpoint is absent, fingerprint-mismatched, was committed
         without ``cross_dims=True``, or was banded under a different
         (lsh_bands, lsh_rows) layout. The banding guard is separate from
@@ -386,8 +367,7 @@ class SignatureCheckpoint:
             return None
         if manifest.get("fingerprint") != cfg.signature_fingerprint():
             return None
-        if not all(k in manifest for k in ("exact_dim", "bands",
-                                           "band_stats")):
+        if not all(name in manifest for name in CROSS_DIMS):
             return None
         banding = manifest.get("banding")
         if banding is None:
@@ -404,14 +384,9 @@ class SignatureCheckpoint:
         if banding != {"lsh_bands": cfg.lsh_bands,
                        "lsh_rows": cfg.lsh_rows}:
             return None
-        return {
-            "exact_dim": spark.read.parquet(
-                os.path.join(self.path, manifest["exact_dim"])),
-            "bands": spark.read.parquet(
-                os.path.join(self.path, manifest["bands"])),
-            "band_stats": spark.read.parquet(
-                os.path.join(self.path, manifest["band_stats"])),
-        }
+        return {name: spark.read.parquet(
+                    os.path.join(self.path, manifest[name]))
+                for name in CROSS_DIMS}
 
     def lineage(self) -> list[dict]:
         """Per-partition lineage of the committed snapshot: one entry per

@@ -8,6 +8,9 @@ This generalizes the reference's one-box incremental run (new mails vs the
 SQLite hash cache, ref deduplicate.py:869-886 + cache.py) to two corpora of
 independent scale.
 
+The old side is read only through its three cross dims (``old_side_dims``,
+the one definition; a ``cross_dims=True`` checkpoint commit persists them).
+
 Pipeline (all JVM joins, skew-aware):
 1. exact:  new content_hash equi-join against the old corpus's
    hash->min(url) representative map — one shuffle of (hash, url) pairs.
@@ -19,8 +22,8 @@ Pipeline (all JVM joins, skew-aware):
    completeness is unnecessary and the degrade is exact for the
    is-duplicate verdict whenever the representative verifies; the loss
    (rep fails verify, another hot-bucket member would have passed) is the
-   same observable trade pairs.py makes, surfaced via
-   ``hot_old_bucket_count``.
+   same observable trade pairs.py makes: the degraded buckets are the
+   ``band_stats`` rows with ``n > cap``.
 3. verify: candidate (new, old) pairs score signature-jaccard in the
    shared pair-row kernel (pairs.score_pairs, new side's signature against
    the old side's); best match per new doc picked deterministically
@@ -42,11 +45,32 @@ from .pairs import score_pairs
 DEFAULT_CROSS_CAP = 2000
 
 
+def old_side_dims(old_sigs: DataFrame,
+                  cfg: DedupConfig) -> dict[str, DataFrame]:
+    """The old corpus's cross dims, as lazy frames — the one definition
+    both ``dedup_against`` (cold) and ``SignatureCheckpoint.commit``
+    (``cross_dims=True``, persisted for the warm path) use:
+
+    - ``exact_dim``  : (content_hash, url) — hash -> min(url);
+    - ``bands``      : (url, band_id, band_hash) — the LSH band projection;
+    - ``band_stats`` : (band_id, band_hash, n, rep_url) — per band bucket,
+      its member count and min-url representative (the hot-bucket gate
+      and degrade dim)."""
+    bands = lsh_bands(old_sigs, cfg)
+    return {
+        "exact_dim": old_sigs.groupBy("content_hash").agg(
+            F.min("url").alias("url")),
+        "bands": bands,
+        "band_stats": bands.groupBy("band_id", "band_hash").agg(
+            F.count(F.lit(1)).alias("n"), F.min("url").alias("rep_url")),
+    }
+
+
 def cross_candidate_pairs(
     new_bands: DataFrame,
     old_bands: DataFrame,
+    old_stats: DataFrame,
     cap: int = DEFAULT_CROSS_CAP,
-    old_stats: DataFrame | None = None,
 ) -> DataFrame:
     """Distinct (url, old_url) pairs sharing >= 1 LSH band bucket.
 
@@ -56,17 +80,12 @@ def cross_candidate_pairs(
     bucket blowup, exactly the skew posture of pairs.bucket_pairs but
     asymmetric (the new side is never collected or capped).
 
-    ``old_stats`` — an optional precomputed per-bucket (band_id, band_hash,
-    n, rep_url) frame, e.g. SignatureCheckpoint.load_cross_dims()'s
-    ``band_stats``. When provided, BOTH the bucket sizing and the
-    hot-bucket representative pick come from it, so this function runs
-    zero aggregations over the old side — the warm incremental path.
+    ``old_stats`` is the ``band_stats`` dim of ``old_side_dims``: BOTH the
+    bucket sizing and the hot-bucket representative pick come from it, so
+    with persisted dims this function runs zero aggregations over the old
+    side — the warm incremental path.
     """
     keys = ["band_id", "band_hash"]
-    if old_stats is None:
-        old_stats = old_bands.groupBy(*keys).agg(
-            F.count(F.lit(1)).alias("n"), F.min("url").alias("rep_url"))
-
     cold_old = old_bands.join(
         old_stats.filter(F.col("n") <= cap).select(*keys), keys)
     cold = new_bands.join(
@@ -83,28 +102,10 @@ def cross_candidate_pairs(
     )
 
 
-def hot_old_bucket_count(old_bands: DataFrame,
-                         cap: int = DEFAULT_CROSS_CAP,
-                         old_stats: DataFrame | None = None) -> int:
-    """How many old-side band buckets degraded to a representative —
-    the observability hook for the recall trade documented above. With
-    ``old_stats`` (persisted band_stats dim) this is a filter-count over
-    the tiny stats table, no old-side aggregation."""
-    if old_stats is not None:
-        return old_stats.filter(F.col("n") > cap).count()
-    return (
-        old_bands.groupBy("band_id", "band_hash")
-        .agg(F.count(F.lit(1)).alias("_bn"))
-        .filter(F.col("_bn") > cap)
-        .count()
-    )
-
-
 def dedup_against(
     new_pages: DataFrame,
     old_sigs: DataFrame,
     cfg: DedupConfig | None = None,
-    new_sigs: DataFrame | None = None,
     cap: int = DEFAULT_CROSS_CAP,
     old_dims: dict[str, DataFrame] | None = None,
 ) -> DataFrame:
@@ -122,16 +123,15 @@ def dedup_against(
     - ``jaccard`` : 1.0 for exact, the best match's estimate for near,
       null for unique.
 
-    ``old_dims`` — the dict SignatureCheckpoint.load_cross_dims() returns
-    (``exact_dim`` / ``bands`` / ``band_stats``). When provided, the old
-    side is never aggregated OR banded here: the exact hash->min(url) dim,
-    the band projection, and the per-bucket stats all come precomputed from
-    the previous commit, so a warm incremental run does zero old-side
-    shuffles (the only old-side touches are equi-join probes). Without it,
-    this function re-derives all three per run — correct, but a monthly
-    full aggregation of the old corpus at scale (the reference's cache
-    stores exactly what makes warm runs cheap, ref cache.py:175-184).
-    Prefer dedup_against_checkpoint for the warm path.
+    The old side is read only through ``old_side_dims``. ``old_dims`` —
+    the dict SignatureCheckpoint.load_cross_dims() returns — supplies them
+    persisted from the previous commit, so a warm incremental run does
+    zero old-side shuffles (the only old-side touches are equi-join
+    probes). Without it, this function derives them per run from
+    ``old_sigs`` — correct, but a monthly full aggregation of the old
+    corpus at scale (the reference's cache stores exactly what makes warm
+    runs cheap, ref cache.py:175-184). Prefer dedup_against_checkpoint for
+    the warm path.
     """
     from pyspark import StorageLevel
 
@@ -139,19 +139,14 @@ def dedup_against(
     from .normalize import content_hash_expr
 
     cfg = cfg or DedupConfig()
+    dims = old_dims if old_dims is not None else old_side_dims(old_sigs, cfg)
 
     keyed = new_pages.withColumn("_ch", content_hash_expr(cfg))
-    if old_dims is not None:
-        old_rep = old_dims["exact_dim"].select(
-            "content_hash", F.col("url").alias("_old_exact"))
-    else:
-        # one old-corpus pass builds the exact-match dim: hash -> min(url)
-        old_rep = old_sigs.groupBy("content_hash").agg(
-            F.min("url").alias("_old_exact"))
+    old_rep = dims["exact_dim"].select(
+        F.col("content_hash").alias("_ch"), F.col("url").alias("_old_exact"))
     exact = track(
         keyed.select("url", "_ch")
-        .join(old_rep.withColumnRenamed("content_hash", "_ch"),
-              "_ch", "left")
+        .join(old_rep, "_ch", "left")
         .select("url", "_old_exact")
         .persist(StorageLevel.MEMORY_AND_DISK))
 
@@ -159,19 +154,12 @@ def dedup_against(
     remaining = new_pages.join(
         exact.filter(F.col("_old_exact").isNotNull()).select("url"),
         "url", "left_anti")
-    if new_sigs is None:
-        new_sigs = minhash_signatures(remaining, cfg)
-    else:
-        new_sigs = new_sigs.join(remaining.select("url"), "url", "left_semi")
     new_sigs = track(
-        new_sigs.select("url", "minhash")
+        minhash_signatures(remaining, cfg).select("url", "minhash")
         .persist(StorageLevel.MEMORY_AND_DISK))
 
-    old_bands = (old_dims["bands"] if old_dims is not None
-                 else lsh_bands(old_sigs, cfg))
-    old_stats = old_dims["band_stats"] if old_dims is not None else None
     pairs = cross_candidate_pairs(
-        lsh_bands(new_sigs, cfg), old_bands, cap=cap, old_stats=old_stats)
+        lsh_bands(new_sigs, cfg), dims["bands"], dims["band_stats"], cap)
     scored = score_pairs(
         pairs.select(F.col("url").alias("a"), F.col("old_url").alias("b")),
         new_sigs, old_sigs.select("url", "minhash"), _equal_fraction,
@@ -181,12 +169,9 @@ def dedup_against(
         F.min(F.struct((-F.col("jaccard")).alias("nj"),
                        F.col("b").alias("u"))).alias("_b"))
 
-    out = (
-        new_pages.select("url")
-        .join(exact, "url", "left")
-        .join(best, "url", "left")
-    )
-    return out.select(
+    # ``exact`` already holds every new page once: the exact dim is unique
+    # per content_hash, so the left join neither drops nor repeats a url.
+    return exact.join(best, "url", "left").select(
         "url",
         F.when(F.col("_old_exact").isNotNull(), F.lit("exact_dup"))
         .when(F.col("_b").isNotNull(), F.lit("near_dup"))
@@ -201,12 +186,11 @@ def dedup_against_checkpoint(
     new_pages: DataFrame,
     checkpoint_path: str,
     cfg: DedupConfig | None = None,
-    cap: int = DEFAULT_CROSS_CAP,
 ) -> DataFrame:
     """The warm incremental path: dedup ``new_pages`` against the old
     corpus's committed signature checkpoint, loading BOTH the signature
     table and (when the commit carried ``cross_dims=True``) the persisted
-    exact/band/band-stats dims — zero old-side recompute AND zero old-side
+    ``old_side_dims`` — zero old-side recompute AND zero old-side
     shuffles. Falls back to per-run derivation when the dims are absent.
 
     Raises FileNotFoundError when no fingerprint-matching checkpoint
@@ -223,5 +207,4 @@ def dedup_against_checkpoint(
             f"{checkpoint_path!r} — commit one with "
             f"signatures_with_checkpoint(..., cross_dims=True) first")
     old_dims = ckpt.load_cross_dims(new_pages.sparkSession, cfg)
-    return dedup_against(new_pages, old_sigs, cfg, cap=cap,
-                         old_dims=old_dims)
+    return dedup_against(new_pages, old_sigs, cfg, old_dims=old_dims)

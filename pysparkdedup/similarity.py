@@ -195,16 +195,16 @@ def _bucket_batches(batches, n_tables: int, n_bits: int, seed: int,
 
 
 def hyperplane_buckets(df: DataFrame, n_tables: int = 8, n_bits: int = 12,
-                       dim: int | None = None, seed: int = 42,
+                       seed: int = 42,
                        id_col: str = "vec_id",
                        emb_col: str = "embedding") -> DataFrame:
     """(id, table_id, bucket): sign-LSH bucket per table — numpy batched.
 
     Planes are hash-deterministic Rademacher projections (``plane_signs``):
-    regenerated inside each Arrow batch from (seed, shape) alone — nothing
-    is broadcast, and the DuckDB oracle replays the exact bucket values
-    from the same (a, b) literals. A null, empty or ragged vector raises
-    naming its id.
+    regenerated inside each Arrow batch from the seed and the width of the
+    batch's decoded embedding matrix alone — nothing is broadcast, and the
+    DuckDB oracle replays the exact bucket values from the same (a, b)
+    literals. A null, empty or ragged vector raises naming its id.
 
     The id column rides through untouched, so it may be integral (the
     embeddings table's vec_id) or string (e.g. page urls) — the Arrow

@@ -187,12 +187,7 @@ def vocab_topk(
     partition warning refers to a k-row frame here).
     """
     counts = (
-        df.select(F.explode(
-            F.filter(
-                F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                        r"\s+"),
-                lambda t: t != "",
-            )).alias("token"))
+        df.select(F.explode(tokens_col(text_col)).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") >= min_count)

@@ -10,7 +10,7 @@ from pysparkdedup.config import DedupConfig
 from pysparkdedup.crosscorpus import (
     cross_candidate_pairs,
     dedup_against,
-    hot_old_bucket_count,
+    old_side_dims,
 )
 from pysparkdedup.minhash import lsh_bands, minhash_signatures
 from tests.conftest import ts
@@ -41,7 +41,11 @@ def test_dedup_against_statuses(old_new):
     old, new = old_new
     cfg = DedupConfig()
     old_sigs = compute_signatures(old, cfg)
-    got = {r["url"]: r.asDict() for r in dedup_against(new, old_sigs, cfg).collect()}
+    rows = dedup_against(new, old_sigs, cfg).collect()
+    # one row per new page, even though two old pages share new/exact's hash
+    assert len(rows) == new.count()
+    got = {r["url"]: r.asDict() for r in rows}
+    assert len(got) == len(rows)
 
     assert got["new/exact"]["status"] == "exact_dup"
     assert got["new/exact"]["dup_of"] == "old/a"  # min of {old/a, old/c}
@@ -77,19 +81,20 @@ def test_hot_bucket_degrades_to_representative(pages_factory):
     old = pages_factory([
         (f"old/{i:03d}", ts(i), text, "en") for i in range(8)])
     new = pages_factory([("new/0", ts(99), text, "en")])
-    old_bands = lsh_bands(minhash_signatures(old, cfg), cfg)
+    old_sigs = compute_signatures(old, cfg)
+    dims = old_side_dims(old_sigs, cfg)
+    old_bands, old_stats = dims["bands"], dims["band_stats"]
     new_bands = lsh_bands(minhash_signatures(new, cfg), cfg)
 
-    full = cross_candidate_pairs(new_bands, old_bands, cap=2000)
+    full = cross_candidate_pairs(new_bands, old_bands, old_stats, cap=2000)
     assert full.count() == 8  # cold: every member is a candidate
 
-    degraded = cross_candidate_pairs(new_bands, old_bands, cap=4)
+    degraded = cross_candidate_pairs(new_bands, old_bands, old_stats, cap=4)
     rows = degraded.collect()
     assert len(rows) == 1 and rows[0]["old_url"] == "old/000"
-    assert hot_old_bucket_count(old_bands, cap=4) > 0
+    assert old_stats.filter(F.col("n") > 4).count() > 0
 
     # the verdict is unchanged either way: identical text verifies vs the rep
-    old_sigs = compute_signatures(old, cfg)
     got = {r["url"]: r.asDict()
            for r in dedup_against(new, old_sigs, cfg, cap=4).collect()}
     assert got["new/0"]["status"] == "exact_dup"  # identical text is exact
@@ -111,9 +116,8 @@ def test_warm_path_with_persisted_dims_matches_cold(old_new, tmp_path):
     dims = SignatureCheckpoint(path).load_cross_dims(old.sparkSession, cfg)
     assert dims is not None
     assert set(dims) == {"exact_dim", "bands", "band_stats"}
-    # the persisted stats dim also answers the degrade observability hook
-    assert hot_old_bucket_count(None, cap=2000,
-                                old_stats=dims["band_stats"]) == 0
+    # the persisted stats dim also tells how many buckets would degrade
+    assert dims["band_stats"].filter(F.col("n") > 2000).count() == 0
 
     cold = {r["url"]: r.asDict()
             for r in dedup_against(new, old_sigs, cfg).collect()}
@@ -122,6 +126,29 @@ def test_warm_path_with_persisted_dims_matches_cold(old_new, tmp_path):
     assert warm == cold
     assert warm["new/exact"]["status"] == "exact_dup"
     assert warm["new/near"]["status"] == "near_dup"
+
+
+def test_persisted_cross_dims_equal_old_side_dims(old_new, tmp_path):
+    """A cross_dims=True commit persists exactly old_side_dims of the
+    committed signature table, row for row, for each dim."""
+    from pysparkdedup.checkpoint import (
+        SignatureCheckpoint, signatures_with_checkpoint)
+
+    old, _ = old_new
+    cfg = DedupConfig()
+    path = str(tmp_path / "ckpt")
+    committed = signatures_with_checkpoint(old, cfg, path, cross_dims=True)
+
+    persisted = SignatureCheckpoint(path).load_cross_dims(
+        old.sparkSession, cfg)
+    derived = old_side_dims(committed, cfg)
+    assert persisted is not None and set(persisted) == set(derived)
+    for name, dim in derived.items():
+        cols = dim.columns
+        assert persisted[name].columns == cols, name
+        want = sorted(tuple(r) for r in dim.collect())
+        got = sorted(tuple(r) for r in persisted[name].select(*cols).collect())
+        assert got == want and got, name
 
 
 def test_load_cross_dims_absent_without_flag_or_on_mismatch(old_new,
@@ -229,18 +256,6 @@ def test_recommit_gcs_stale_dim_dirs(old_new, tmp_path):
     names = os.listdir(path)
     for prefix in ("data-", "exactdim-", "bands-", "bandstats-"):
         assert sum(n.startswith(prefix) for n in names) == 1, names
-
-
-def test_precomputed_new_sigs_reused(old_new):
-    old, new = old_new
-    cfg = DedupConfig()
-    old_sigs = compute_signatures(old, cfg)
-    new_sigs = minhash_signatures(new, cfg)
-    got = {r["url"]: r["status"]
-           for r in dedup_against(new, old_sigs, cfg,
-                                  new_sigs=new_sigs).collect()}
-    assert got == {"new/exact": "exact_dup", "new/near": "near_dup",
-                   "new/fresh": "unique"}
 
 
 @pytest.mark.slow

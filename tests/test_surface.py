@@ -20,7 +20,6 @@ TEST_ONLY = {
     "exact_binary_dedup": "byte-identical media dedup beside the dHash path",
     "run_and_check": "one-call run plus invariant check, the verify recipe",
     "union_sources": "multi-source registration, no CLI flag yet",
-    "hot_old_bucket_count": "cross-corpus skew probe, until the run report",
     "cosine_pairs_exact": "explicit-pair cosine, the embedding tests' "
                           "reference form",
 }

@@ -17,11 +17,11 @@ MAIL_COPIED/MOVED/DELETED identities (ref deduplicate.py:1369-1390).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .groupagg import with_group_stats
-from .pipeline import discarded, selection
+from .pipeline import in_selection
 
 PAGE_COLS = ["url", "warc_ts", "html", "text", "lang"]
 
@@ -33,10 +33,14 @@ ACTIONS = (
 )
 
 
-def _subset(final: DataFrame, action: str) -> DataFrame:
+def _in_subset(action: str) -> Column:
     if action.endswith("-discarded"):
-        return discarded(final)
-    return selection(final)
+        return F.col("status") == "discarded"
+    return in_selection()
+
+
+def _subset(final: DataFrame, action: str) -> DataFrame:
+    return final.filter(_in_subset(action))
 
 
 def perform(final: DataFrame, action: str, out_path: str | None = None,
@@ -62,22 +66,64 @@ def perform(final: DataFrame, action: str, out_path: str | None = None,
     at table scale the 'delete' half is the rewritten source (we never mutate
     the input path in place — snapshot semantics), written here as
     final-minus-moved. Required for move-*.
+
+    One execution per action: the pipeline hands back ``final`` lazily
+    cached (pipeline._group_and_select), so the write reads the tail the
+    verb's report already computed, and the acted-on count is observed on
+    the write job itself — a dry run counts in one job of its own.
     """
     if action not in ACTIONS:
         raise ValueError(f"unknown action: {action!r}")
-    # One execution per action: the count action and the write both read the
-    # pipeline tail, and Spark has no DAG-level CSE — persist `final` so the
-    # guard/cascade tail is computed once (the count materializes the cache,
-    # the write reads it). Released before returning.
-    already_cached = final.storageLevel.useMemory or final.storageLevel.useDisk
-    if not already_cached and not dry_run:
-        final = final.persist()
-    try:
-        return _perform(final, action, out_path, dry_run, pages, fmt, append,
-                        hardlink_differing, source_out_path)
-    finally:
-        if not already_cached and not dry_run:
-            final.unpersist()
+    verb = action.split("-")[0]
+    if verb == "move" and not source_out_path and not dry_run:
+        raise ValueError(
+            f"{action} requires source_out_path: move = copy + rewritten "
+            f"source in one verb (ref move_mails action.py:94-117)")
+    if dry_run:
+        return {"action": action, "count": _subset(final, action).count(),
+                "written": False}
+    if not out_path:
+        raise ValueError(f"{action} requires out_path")
+
+    if verb == "hardlink":
+        # pointer_dedup self-joins `final` (the kept-row lookup is joined
+        # back onto every row), so no one frame of its plan reads `final`
+        # once to carry an observation: count the cached `final` instead.
+        count = _subset(final, action).count()
+        _write(pointer_dedup(final, allow_differing=hardlink_differing),
+               out_path, fmt, append)
+        return {"action": action, "count": count, "written": True}
+
+    in_subset = _in_subset(action)
+
+    def export(rows: DataFrame, path: str, append: bool,
+               observation: Observation | None = None,
+               keep: Column | None = None) -> None:
+        if "html" not in rows.columns and pages is not None:
+            rows = rows.join(pages.select("url", "html"), "url", "left")
+        if observation is not None:
+            # Above every join: AQE drops a join side it finds empty, and an
+            # observation under it with it (Observation.get then fails).
+            rows = rows.observe(observation,
+                                F.count_if(in_subset).alias("count"))
+        if keep is not None:
+            rows = rows.filter(keep)
+        _write(rows.select(*[c for c in PAGE_COLS if c in rows.columns]),
+               path, fmt, append)
+
+    # copy/move write the subset; delete, and move's rewritten source (the
+    # delete half, ref move_mails = copy + delete, action.py:94-117), write
+    # the rest of `final`. A rewritten source is a full snapshot, never
+    # appended.
+    observed = Observation()
+    if verb == "delete":
+        export(final, out_path, append, observed, keep=~in_subset)
+    else:
+        export(_subset(final, action), out_path, append, observed)
+        if verb == "move":
+            export(final, source_out_path, False, keep=~in_subset)
+    return {"action": action, "count": observed.get["count"],
+            "written": True}
 
 
 EXPORT_FORMATS = ("parquet", "json", "csv", "table")
@@ -132,54 +178,6 @@ def _write(df: DataFrame, out_path: str, fmt: str, append: bool) -> None:
         df.write.mode(mode).option("header", True).csv(out_path)
     else:
         getattr(df.write.mode(mode), fmt)(out_path)
-
-
-def _perform(final: DataFrame, action: str, out_path: str | None,
-             dry_run: bool, pages: DataFrame | None,
-             fmt: str = "parquet", append: bool = False,
-             hardlink_differing: bool = False,
-             source_out_path: str | None = None) -> dict:
-    target = _subset(final, action)
-    count = target.count()
-    verb = action.split("-")[0]
-    if verb == "move" and not source_out_path and not dry_run:
-        raise ValueError(
-            f"{action} requires source_out_path: move = copy + rewritten "
-            f"source in one verb (ref move_mails action.py:94-117)")
-
-    if dry_run:
-        return {"action": action, "count": count, "written": False}
-
-    def hydrate(df: DataFrame) -> DataFrame:
-        if "html" not in df.columns and pages is not None:
-            df = df.join(pages.select("url", "html"), "url", "left")
-        cols = [c for c in PAGE_COLS if c in df.columns]
-        return df.select(*cols)
-
-    if verb in ("copy", "move"):
-        if not out_path:
-            raise ValueError(f"{action} requires out_path")
-        _write(hydrate(target), out_path, fmt, append)
-        written = True
-        if verb == "move":
-            # The delete half: the rewritten source without the moved rows
-            # (ref move_mails = copy + delete, action.py:94-117). Never
-            # appended — a rewritten source is a full snapshot.
-            keep = final.join(target.select("url"), "url", "left_anti")
-            _write(hydrate(keep), source_out_path, fmt, append=False)
-    elif verb == "delete":
-        if not out_path:
-            raise ValueError(f"{action} requires out_path (the rewritten table)")
-        keep = final.join(target.select("url"), "url", "left_anti")
-        _write(hydrate(keep), out_path, fmt, append)
-        written = True
-    elif verb == "hardlink":
-        if not out_path:
-            raise ValueError(f"{action} requires out_path")
-        _write(pointer_dedup(final, allow_differing=hardlink_differing),
-               out_path, fmt, append)
-        written = True
-    return {"action": action, "count": count, "written": written}
 
 
 def pointer_dedup(final: DataFrame,

@@ -20,8 +20,9 @@ Long-running callers (daemons, notebooks) can wrap any unit of work::
 
     from pysparkdedup.cache import cache_scope
     with cache_scope():
-        final = run_exact(pages, cfg)
-        perform(final, "copy-selected", out)   # materializes inside
+        final = run_exact(pages, cfg)          # lazily persisted, no job
+        stats = compute_stats(final)           # fills the cache
+        perform(final, "copy-selected", out)   # the write reads it
 
 Driver-side, single-threaded by design (a plain module-level stack — Spark
 driver orchestration code runs on one thread here).

@@ -8,14 +8,16 @@ components, SimHash components) feeds the same guards + cascade + stats tail.
 Produces one final annotated DataFrame with per-row ``status`` in
 {rejected, unique, selected, discarded, skipped}, per-set ``set_outcome``, and
 a ``set_rep`` flag marking one deterministic representative row per set (for
-set-level counting in one pass, no second shuffle).
+set-level counting in one pass, no second shuffle). The frame comes back
+lazily persisted, so a verb's report and its action share one execution of
+the tail.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .config import DedupConfig
@@ -119,9 +121,9 @@ def _group_and_select(ann: DataFrame, cfg: DedupConfig) -> DataFrame:
     ann = ann.drop("html")
     # Materialize once: guards' verdict branch and the main spine both read
     # this frame, and Spark recomputes shared subtrees. Scope-released only
-    # (cache.track): the RETURNED final frame still reads this cache, so it
-    # must outlive the caller's materialization — wrap the whole unit of
-    # work in cache.cache_scope() (as cli.main does) to reclaim it.
+    # (cache.track), like the returned final frame, which the caller
+    # materializes after this returns — wrap the whole unit of work in
+    # cache.cache_scope() (as cli.main does) to reclaim them.
     ann = track(ann.persist(StorageLevel.MEMORY_AND_DISK))
 
     # ONE per-set aggregation pass feeds both the guard short-circuit and
@@ -161,8 +163,14 @@ def _group_and_select(ann: DataFrame, cfg: DedupConfig) -> DataFrame:
     )
     cascaded = apply_cascade(guarded, cfg, ts_col=cfg.ts_col,
                              participates=participates)
-    return label_outcomes(
+    # The result is persisted here, lazily: a verb reads it once per report
+    # and once per action (compute_stats' agg, then perform's write), and
+    # without the cache each of them re-runs the guard + cascade + label
+    # tail. The verb's first action fills it; it is scope-released like
+    # `ann` and `set_stats`.
+    return track(label_outcomes(
         cascaded, rep_stats=set_stats.select("cluster_key", "_rep_url"))
+        .persist(StorageLevel.MEMORY_AND_DISK))
 
 
 def run_incremental(pages: DataFrame, cfg: DedupConfig, checkpoint_path: str,
@@ -208,11 +216,7 @@ def run_and_check(pages: DataFrame, cfg: DedupConfig,
     return RunResult(final=final, stats=stats)
 
 
-def selection(final: DataFrame) -> DataFrame:
+def in_selection() -> Column:
     """Rows the action targets for *-selected verbs: unique + selected
     (ref action.py:312-339, check_stats accounting deduplicate.py:1369-1380)."""
-    return final.filter(F.col("status").isin("unique", "selected"))
-
-
-def discarded(final: DataFrame) -> DataFrame:
-    return final.filter(F.col("status") == "discarded")
+    return F.col("status").isin("unique", "selected")

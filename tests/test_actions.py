@@ -2,9 +2,9 @@
 
 import pytest
 
-from pysparkdedup.actions import perform, pointer_dedup
+from pysparkdedup.actions import ACTIONS, _subset, perform, pointer_dedup
 from pysparkdedup.config import DedupConfig
-from pysparkdedup.pipeline import run_exact
+from pysparkdedup.pipeline import run_clustered, run_exact
 from tests.conftest import ts
 
 
@@ -56,9 +56,8 @@ def test_unknown_action(final):
 
 def test_perform_executes_tail_once(final):
     """act+report is ONE execution of the pipeline tail (ref VERDICT r1 #3):
-    perform persists `final`, so the count materializes the cache and the
-    write reads it — a per-row counter downstream of the pipeline must tick
-    exactly n times."""
+    perform's write is its one job and the count is observed on it — a
+    per-row counter downstream of the pipeline must tick exactly n times."""
     import pandas as pd
 
     spark = final.sparkSession
@@ -90,6 +89,7 @@ def test_export_formats(final, tmp_path, fmt):
     out = str(tmp_path / f"out-{fmt}")
     res = perform(final, "copy-selected", out, fmt=fmt)
     assert res["written"] is True
+    assert res["count"] == _subset(final, "copy-selected").count()
     reader = final.sparkSession.read.option("header", True)
     got = getattr(reader, fmt)(out)
     assert got.count() == 2
@@ -115,12 +115,15 @@ def test_export_table_roundtrip(final, spark):
 
     tbl = "pysparkdedup_export_rt"
     try:
+        want = _subset(final, "copy-selected").count()
         res = perform(final, "copy-selected", tbl, fmt="table")
         assert res["written"] is True
+        assert res["count"] == want
         got = read_pages(spark, tbl, fmt="table")
         assert got.count() == 2
         assert set(got.columns) == {"url", "warc_ts", "html", "text", "lang"}
-        perform(final, "copy-selected", tbl, fmt="table", append=True)
+        res = perform(final, "copy-selected", tbl, fmt="table", append=True)
+        assert res["count"] == want
         assert spark.read.table(tbl).count() == 4
         # non-append overwrites: back to one snapshot's worth of rows
         perform(final, "copy-selected", tbl, fmt="table")
@@ -191,3 +194,122 @@ def test_move_requires_source_out(final, tmp_path):
     # dry-run computes counts without requiring any paths
     res = perform(final, "move-selected", dry_run=True)
     assert res["written"] is False
+
+
+def test_every_verb_counts_its_subset(final, tmp_path):
+    """The count a verb reports is observed on its write job; it must
+    equal the subset the verb acts on, for every verb and for a dry run
+    (ref deduplicate.py:1369-1390 accounting identities)."""
+    for action in ACTIONS:
+        res = perform(final, action, str(tmp_path / action),
+                      source_out_path=str(tmp_path / f"{action}-source"))
+        assert res["count"] == _subset(final, action).count(), action
+    res = perform(final, "copy-discarded", dry_run=True)
+    assert res == {"action": "copy-discarded", "written": False,
+                   "count": _subset(final, "copy-discarded").count()}
+
+
+UNIQUE_ROWS = [("u/a", ts(0), "alpha text", "en"),
+               ("u/b", ts(1), "beta text", "en")]
+
+
+@pytest.mark.parametrize("fmt,rows", [
+    ("parquet", UNIQUE_ROWS), ("table", UNIQUE_ROWS), ("parquet", []),
+], ids=["unique-parquet", "unique-table", "empty-parquet"])
+def test_discarded_verbs_on_all_unique_corpus(spark, pages_factory,
+                                              tmp_path, fmt, rows):
+    """An empty subset — of an all-unique corpus, or of an empty one —
+    counts 0 and writes without error. Broadcast joins are off, so
+    re-hydration is the sort-merge join of a large corpus, and AQE drops a
+    join side it finds empty: a count observed under one would be lost
+    with it."""
+    pages = pages_factory(rows)
+    final = run_exact(pages, DedupConfig(strategies=("select-newest",)))
+    verbs = [a for a in ACTIONS if a.endswith("-discarded")]
+
+    def sink(action: str, role: str) -> str:
+        key = f"{action}_{role}".replace("-", "_")
+        return (f"pysparkdedup_{key}" if fmt == "table"
+                else str(tmp_path / key))
+
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        for action in verbs:
+            res = perform(final, action, sink(action, "out"), pages=pages,
+                          fmt=fmt, source_out_path=sink(action, "source"))
+            assert res == {"action": action, "count": 0, "written": True}
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+        if fmt == "table":
+            for action in verbs:
+                for role in ("out", "source"):
+                    spark.sql(f"DROP TABLE IF EXISTS {sink(action, role)}")
+
+
+def _plans_of_group(spark, group: str) -> list[str]:
+    """Physical plans of the SQL executions whose jobs ran in ``group``."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    ids = set(sc.statusTracker().getJobIdsForGroup(group))
+    plans = []
+    it = (spark._jsparkSession.sharedState().statusStore()
+          .executionsList().iterator())
+    while it.hasNext():
+        e = it.next()
+        jobs = {int(j) for j in e.jobs().keySet().mkString(",").split(",")
+                if j}
+        if jobs & ids:
+            plans.append(e.physicalPlanDescription())
+    return plans
+
+
+def test_pipeline_tail_runs_once_per_verb(spark, pages_factory, tmp_path,
+                                          monkeypatch):
+    """The pipelines hand back a lazily persisted `final`: building it
+    starts no job, the report fills the cache, the action's only job is its
+    write (the count is observed on it), and the cache is released when
+    its scope exits."""
+    import pysparkdedup.cache as cache
+    from pysparkdedup.stats import compute_stats
+
+    captured = []
+    real_track = cache.track
+
+    def spy(df):
+        captured.append(df)
+        return real_track(df)
+
+    monkeypatch.setattr(cache, "track", spy)
+    pages = pages_factory([
+        ("u/dup-old", ts(0), "pair text", "en"),
+        ("u/dup-new", ts(1), "pair text", "en"),
+        ("u/solo", ts(0), "solo text", "en"),
+    ])
+    clusters = spark.createDataFrame(
+        [("u/dup-old", "k"), ("u/dup-new", "k")],
+        "url string, cluster_key string")
+    cfg = DedupConfig(strategies=("select-newest",))
+    sc = spark.sparkContext
+    try:
+        with cache.cache_scope():
+            sc.setJobGroup("tail-build", "tail-build")
+            finals = [run_exact(pages, cfg),
+                      run_clustered(pages, cfg, clusters)]
+            assert sc.statusTracker().getJobIdsForGroup("tail-build") == []
+            for f in finals:
+                assert f.storageLevel.useMemory or f.storageLevel.useDisk
+                assert any(df is f for df in captured)
+            compute_stats(finals[0])
+            sc.setJobGroup("tail-act", "tail-act")
+            res = perform(finals[0], "copy-selected", str(tmp_path / "out"))
+            assert res["count"] == 2
+            plans = _plans_of_group(spark, "tail-act")
+            assert len(plans) == 1, plans
+            assert "InsertIntoHadoopFsRelationCommand" in plans[0], plans[0]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    for f in finals:
+        assert not (f.storageLevel.useMemory or f.storageLevel.useDisk), (
+            "the pipeline's final frame survived its cache_scope")

@@ -3,7 +3,7 @@
 from pyspark.sql import functions as F
 
 from pysparkdedup.config import DedupConfig
-from pysparkdedup.pipeline import run_exact, selection
+from pysparkdedup.pipeline import in_selection, run_exact
 from tests.conftest import ts
 
 
@@ -55,7 +55,8 @@ def test_thresholds_disabled_skips_guards(pages_factory):
         strategies=("select-smallest",), size_threshold=-1, content_threshold=-1
     )
     final = run_exact(pages_factory(rows), cfg)
-    assert {r["url"] for r in selection(final).collect()} == {"u/a"}
+    kept = final.filter(in_selection()).collect()
+    assert {r["url"] for r in kept} == {"u/a"}
 
 
 def test_content_threshold_eviction(pages_factory):

@@ -488,4 +488,4 @@ def test_simhash_family_memory_bounded_per_slice():
                           bitorder="little").view("<u8")[0]
         want.append(int(sig.astype(np.int64)))
     assert got.to_pylist() == want
-    assert peak < 128 * 2**20, peak
+    assert peak < 16 * 2**20, peak

@@ -5,13 +5,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from pysparkdedup.config import DedupConfig
-from pysparkdedup.pipeline import run_exact, selection
+from pysparkdedup.pipeline import in_selection, run_exact
 from pysparkdedup.strategy import resolve_strategies
 from tests.conftest import ts
 
 
 def surviving_urls(final):
-    return {r["url"] for r in selection(final).select("url").collect()}
+    kept = final.filter(in_selection()).select("url").collect()
+    return {r["url"] for r in kept}
 
 
 # --- time ladder: identical text, timestamps 0/-1m/-2m/-3m ------------------

@@ -33,12 +33,14 @@ import uuid
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .config import DedupConfig
 from .crosscorpus import old_side_dims
 from .minhash import minhash_family
 from .normalize import content_hash_expr
 from .simhash import SIMHASH
+from .sources import read_parquet
 from .tokenhash import token_signatures
 
 MANIFEST = "_manifest.json"
@@ -125,6 +127,38 @@ def stale_key_col(full: bool = False) -> F.Column:
     )
 
 
+def _footer_lineage(data_dir: str) -> list[dict]:
+    """One entry per non-empty parquet file under ``data_dir``, sorted by
+    file name: its row count and url range, read on the driver from the
+    file footers — no Spark job. Parquet leaves min/max out of a row
+    group's statistics when they are long (min plus max of 4 KiB or more);
+    such a file's range is taken from its own ``url`` column instead."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    out = []
+    for name in sorted(os.listdir(data_dir)):
+        if name.startswith(("_", ".")):  # _SUCCESS, .crc: not data files
+            continue
+        path = os.path.join(data_dir, name)
+        meta = pq.read_metadata(path)
+        if meta.num_rows == 0:
+            continue
+        col = next(j for j in range(meta.num_columns)
+                   if meta.schema.column(j).path == "url")
+        stats = [meta.row_group(i).column(col).statistics
+                 for i in range(meta.num_row_groups)
+                 if meta.row_group(i).num_rows]
+        if all(st is not None and st.has_min_max for st in stats):
+            lo, hi = min(st.min for st in stats), max(st.max for st in stats)
+        else:
+            mm = pc.min_max(pq.read_table(path, columns=["url"])["url"])
+            lo, hi = mm["min"].as_py(), mm["max"].as_py()
+        out.append({"file": name, "rows": meta.num_rows,
+                    "url_min": lo, "url_max": hi})
+    return out
+
+
 def compute_signatures(pages: DataFrame, cfg: DedupConfig) -> DataFrame:
     """(url, stale_key, content_hash, minhash, simhash) for every row: the
     JVM keys ride through one token kernel that signs both families."""
@@ -152,15 +186,25 @@ class SignatureCheckpoint:
         except (FileNotFoundError, json.JSONDecodeError):
             return None
 
+    def _read(self, spark: SparkSession, manifest: dict,
+              key: str) -> DataFrame:
+        """The table ``manifest[key]`` names, opened under the schema the
+        commit recorded for it (no Spark job). A manifest written before
+        schemas were recorded falls back to inference."""
+        schema = manifest.get("schemas", {}).get(key)
+        return read_parquet(spark, os.path.join(self.path, manifest[key]),
+                            StructType.fromJson(schema) if schema else None)
+
     def load(self, spark: SparkSession, cfg: DedupConfig) -> DataFrame | None:
         """Checkpoint rows, or None when absent/fingerprint-mismatched
-        (settings change wipes, ref cache.py:232-246)."""
+        (settings change wipes, ref cache.py:232-246). Starts no Spark
+        job."""
         manifest = self.read_manifest()
         if manifest is None:
             return None
         if manifest.get("fingerprint") != cfg.signature_fingerprint():
             return None
-        return spark.read.parquet(os.path.join(self.path, manifest["data"]))
+        return self._read(spark, manifest, "data")
 
     # -- writer lock ---------------------------------------------------------
     def _lock_path(self) -> str:
@@ -270,11 +314,15 @@ class SignatureCheckpoint:
 
         The manifest records per-partition lineage alongside the pointer:
         one row per committed parquet file with its row count and url range
-        (gathered by a column-pruned scan of the just-written files — the
-        signature table, not the corpus, so metadata-scale cost), plus the
-        distinct source files that fed the snapshot and the run's
-        ResumeMetrics. That makes a resume auditable offline: which inputs
-        produced which partitions, and how much the checkpoint saved.
+        (``_footer_lineage``: read from the just-written files' footers on
+        the driver, no Spark job), plus the distinct source files that fed
+        the snapshot and the run's ResumeMetrics. That makes a resume
+        auditable offline: which inputs produced which partitions, and how
+        much the checkpoint saved. It also records each written table's
+        schema under ``schemas``, so ``load``, ``load_cross_dims`` and the
+        commit's own re-read open the tables without an inference job:
+        apart from what ``metrics_fn`` runs, the commit's only Spark jobs
+        are its writes.
 
         ``cross_dims=True`` additionally persists
         ``crosscorpus.old_side_dims`` of the committed table — the exact,
@@ -292,23 +340,7 @@ class SignatureCheckpoint:
             new_dir = f"{DATA_DIR}-{uuid.uuid4().hex[:12]}"
             signatures.write.mode("overwrite").parquet(
                 os.path.join(self.path, new_dir))
-            committed = signatures.sparkSession.read.parquet(
-                os.path.join(self.path, new_dir))
-            partitions = [
-                {
-                    "file": os.path.basename(r["file"]),
-                    "rows": r["rows"],
-                    "url_min": r["url_min"],
-                    "url_max": r["url_max"],
-                }
-                for r in committed.groupBy(
-                    F.input_file_name().alias("file")).agg(
-                        F.count("*").alias("rows"),
-                        F.min("url").alias("url_min"),
-                        F.max("url").alias("url_max"),
-                ).collect()
-            ]
-            partitions.sort(key=lambda p: p["file"])
+            partitions = _footer_lineage(os.path.join(self.path, new_dir))
             # metrics_fn runs AFTER the write job (its Observations are
             # filled by that job) and BEFORE the manifest swap, so metrics
             # and data pointer land in one atomic rename.
@@ -320,12 +352,16 @@ class SignatureCheckpoint:
                 "committed_at": time.time(),
                 "partitions": partitions,
                 "total_rows": sum(p["rows"] for p in partitions),
+                "schemas": {"data": signatures.schema.jsonValue()},
             }
             keep = {new_dir}
             if cross_dims:
+                committed = self._read(
+                    signatures.sparkSession, manifest, "data")
                 tag = uuid.uuid4().hex[:12]
                 for name, dim in old_side_dims(committed, cfg).items():
                     manifest[name] = f"{CROSS_DIMS[name]}-{tag}"
+                    manifest["schemas"][name] = dim.schema.jsonValue()
                     dim.write.mode("overwrite").parquet(
                         os.path.join(self.path, manifest[name]))
                     keep.add(manifest[name])
@@ -361,7 +397,8 @@ class SignatureCheckpoint:
         lsh_bands 16 -> 8 with num_perm fixed) keeps the signatures valid
         while making the persisted band dims slice-incompatible — joining
         them would silently report near-dups as unique, so the dims (and
-        only the dims) are refused and the caller re-derives per run."""
+        only the dims) are refused and the caller re-derives per run.
+        Starts no Spark job."""
         manifest = self.read_manifest()
         if manifest is None:
             return None
@@ -384,8 +421,7 @@ class SignatureCheckpoint:
         if banding != {"lsh_bands": cfg.lsh_bands,
                        "lsh_rows": cfg.lsh_rows}:
             return None
-        return {name: spark.read.parquet(
-                    os.path.join(self.path, manifest[name]))
+        return {name: self._read(spark, manifest, name)
                 for name in CROSS_DIMS}
 
     def lineage(self) -> list[dict]:
@@ -424,12 +460,12 @@ def signatures_with_checkpoint(
     With ``commit=True`` the manifest also records ResumeMetrics (reused /
     recomputed / pruned counts) and per-partition lineage. The reused and
     recomputed counters ride the commit's own write job as Observations —
-    zero extra jobs for those two; the pruned count and the source-file
-    lineage DO each cost one extra job on the commit path (a url-only
-    anti-join count over the old snapshot's keys, and an
-    input_file_name-distinct over the snapshot input — both column-pruned,
-    but the latter does re-scan the corpus input's file metadata), which is
-    why neither runs when ``commit=False``. Read them back via
+    zero extra jobs for those two. The pruned count DOES cost one extra job
+    on a warm commit (a url-only anti-join count over the old snapshot's
+    keys), which is why it never runs when ``commit=False``. Lineage costs
+    no job: the source files come from the plan's file index
+    (``DataFrame.inputFiles``, a driver-side listing) and the per-file rows
+    and url ranges from the committed files' footers. Read them back via
     ``SignatureCheckpoint(path).last_metrics()`` / ``.lineage()``.
 
     ``cross_dims=True`` (commit path only) additionally persists the

@@ -243,7 +243,7 @@ def main(argv: list[str] | None = None) -> int:
     stack = ExitStack()
     stack.enter_context(cache_scope())
     try:
-        from .sources import read_pages
+        from .sources import read_pages, read_parquet
 
         pages = read_pages(spark, args.input, fmt=args.input_format)
 
@@ -266,7 +266,8 @@ def main(argv: list[str] | None = None) -> int:
             # recompute of the curation plan)
             print(json.dumps({
                 "DOCS_IN": pages.count(),
-                "DOCS_OUT": spark.read.parquet(args.output).count(),
+                "DOCS_OUT": read_parquet(
+                    spark, args.output, cur.schema).count(),
             }, indent=2))
             return 0
 
@@ -280,8 +281,8 @@ def main(argv: list[str] | None = None) -> int:
             ledger = tiered_dedup(pages, cfg, emb=emb,
                                   emb_threshold=args.emb_threshold)
             ledger.write.mode("overwrite").parquet(args.output)
-            row = tier_stats(
-                spark.read.parquet(args.output)).collect()[0].asDict()
+            row = tier_stats(read_parquet(
+                spark, args.output, ledger.schema)).collect()[0].asDict()
             print(json.dumps({k.upper(): v for k, v in row.items()},
                              indent=2))
             return 0
@@ -305,7 +306,7 @@ def main(argv: list[str] | None = None) -> int:
                     line_mode=args.line_mode),
                 staging_path=args.curated_output)
             ledger.write.mode("overwrite").parquet(args.output)
-            led = spark.read.parquet(args.output)
+            led = read_parquet(spark, args.output, ledger.schema)
             if args.corpus_output:
                 surviving_docs(curated, led).write.mode(
                     "overwrite").parquet(args.corpus_output)
@@ -327,7 +328,7 @@ def main(argv: list[str] | None = None) -> int:
             ledger = image_dedup_ledger(
                 pages, hamming_threshold=args.hamming_threshold)
             ledger.write.mode("overwrite").parquet(args.output)
-            led = spark.read.parquet(args.output)
+            led = read_parquet(spark, args.output, ledger.schema)
             sizes = led.groupBy("cluster_key").count()
             row = led.agg(
                 F.count(F.lit(1)).alias("images_in"),
@@ -361,7 +362,7 @@ def main(argv: list[str] | None = None) -> int:
             # Incremental-crawl verb: --input is the NEW batch; the old
             # corpus is the --checkpoint's committed signature snapshot
             # (plus its persisted cross dims when the commit carried
-            # --cross-dims — the zero-old-side-shuffle warm path).
+            # --cross-dims — the warm path, zero old-side aggregations).
             if not args.checkpoint:
                 parser.error("--mode dedup-against requires --checkpoint")
             if not args.output:
@@ -374,7 +375,7 @@ def main(argv: list[str] | None = None) -> int:
             flagged.write.mode("overwrite").parquet(args.output)
             counts = {
                 r["status"]: r["n"]
-                for r in spark.read.parquet(args.output)
+                for r in read_parquet(spark, args.output, flagged.schema)
                 .groupBy("status").agg(F.count(F.lit(1)).alias("n"))
                 .collect()
             }

@@ -126,8 +126,10 @@ def dedup_against(
     The old side is read only through ``old_side_dims``. ``old_dims`` —
     the dict SignatureCheckpoint.load_cross_dims() returns — supplies them
     persisted from the previous commit, so a warm incremental run does
-    zero old-side shuffles (the only old-side touches are equi-join
-    probes). Without it, this function derives them per run from
+    zero old-side aggregations (the old side is only joined: the band
+    join against ``band_stats`` and the signature lookup in
+    ``score_pairs``, each of which shuffles the old side when it does not
+    broadcast). Without it, this function derives them per run from
     ``old_sigs`` — correct, but a monthly full aggregation of the old
     corpus at scale (the reference's cache stores exactly what makes warm
     runs cheap, ref cache.py:175-184). Prefer dedup_against_checkpoint for
@@ -191,7 +193,9 @@ def dedup_against_checkpoint(
     corpus's committed signature checkpoint, loading BOTH the signature
     table and (when the commit carried ``cross_dims=True``) the persisted
     ``old_side_dims`` — zero old-side recompute AND zero old-side
-    shuffles. Falls back to per-run derivation when the dims are absent.
+    aggregations. Falls back to per-run derivation when the dims are
+    absent. Opening both starts no Spark job: the commit recorded every
+    table's schema in its manifest.
 
     Raises FileNotFoundError when no fingerprint-matching checkpoint
     exists — an incremental run against nothing is a config error, not a

@@ -14,6 +14,8 @@ The reference opens 6 mailbox formats with autodetection
                      (ref deduplicate.py:936-956) via dropDuplicates on url
 
 All readers emit: url, warc_ts, html, text, lang (input_hint schema).
+``read_parquet`` instead re-opens a table the package wrote, under the
+writer's schema, so no schema-inference job runs.
 """
 
 from __future__ import annotations
@@ -23,6 +25,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 FORMATS = ("parquet", "json", "csv", "files", "table")
 
@@ -196,6 +199,16 @@ def read_pages(spark: SparkSession, path: str, fmt: str | None = None) -> DataFr
             F.lit(None).cast("string").alias("lang"),
         )
     raise ValueError(f"unknown source format: {fmt!r}")
+
+
+def read_parquet(spark: SparkSession, path: str,
+                 schema: StructType | None) -> DataFrame:
+    """Re-open parquet this package wrote. Given the writer's ``schema``
+    (``df.schema``) the reader starts no Spark job; without one Spark
+    infers the schema with a one-task job that reads a footer."""
+    if schema is None:
+        return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
 
 
 def source_identity(path: str) -> str:

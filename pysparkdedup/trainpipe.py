@@ -78,6 +78,7 @@ def curate_and_dedup(
     """
     from .components import materialize
     from .curate import curate_pages
+    from .sources import read_parquet
     from .tiers import tiered_dedup
 
     cfg = cfg or DedupConfig()
@@ -85,7 +86,7 @@ def curate_and_dedup(
                        **(curate_kwargs or {}))
     if staging_path is not None:
         cur.write.mode("overwrite").parquet(staging_path)
-        cur = pages.sparkSession.read.parquet(staging_path)
+        cur = read_parquet(pages.sparkSession, staging_path, cur.schema)
     else:
         cur = materialize(cur, reliable)
     ledger = tiered_dedup(

@@ -2,6 +2,7 @@
 (ref tests/test_cache.py:52-414) translated to the signature checkpoint."""
 
 import dataclasses
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -403,3 +404,52 @@ def test_input_file_lineage_is_metadata_not_row_scan(spark, tmp_path,
     files = SignatureCheckpoint(path).read_manifest().get("input_files", [])
     assert any("crawl_a" in f for f in files)
     assert any("crawl_b" in f for f in files)  # metadata listing, not rows
+
+
+def test_footer_lineage_equals_input_file_name_scan(spark, pages_factory,
+                                                    tmp_path):
+    """The lineage read from the committed files' footers equals the row
+    scan it replaced, ``groupBy(input_file_name())``, on a multi-file
+    commit with a zero-row file (skipped, as the scan skips it) and a url
+    over 4 KiB, whose file carries no url min/max statistics."""
+    import pyarrow.parquet as pq
+
+    cfg = DedupConfig()
+    sigs = compute_signatures(pages_factory([
+        ("short/a", ts(0), "alpha " * 30, "en"),
+        ("short/b", ts(1), "beta " * 30, "en"),
+        ("long/" + "x" * 5000, ts(2), "gamma " * 30, "en"),
+    ]), cfg)
+    # One file per partition: the first is empty (the writer's first task
+    # writes its file even then), the short urls share the second.
+    rows = sigs.collect()
+    parts = [[], [r for r in rows if r["url"].startswith("short/")],
+             [r for r in rows if r["url"].startswith("long/")]]
+    sigs = spark.createDataFrame(
+        spark.sparkContext.parallelize(parts, len(parts)).flatMap(
+            lambda part: part), sigs.schema)
+    ckpt = SignatureCheckpoint(str(tmp_path / "ckpt"))
+    ckpt.commit(sigs, cfg)
+    data = os.path.join(ckpt.path, ckpt.read_manifest()["data"])
+
+    metas = {n: pq.read_metadata(os.path.join(data, n))
+             for n in os.listdir(data) if n.endswith(".parquet")}
+    assert sorted(m.num_rows for m in metas.values()) == [0, 1, 2]
+    (long_file,) = [m for m in metas.values() if m.num_rows == 1]
+    stats = long_file.row_group(0).column(0).statistics
+    assert long_file.schema.column(0).path == "url"
+    assert stats is None or not stats.has_min_max
+
+    scan = sorted(({
+        "file": os.path.basename(r["file"]),
+        "rows": r["rows"],
+        "url_min": r["url_min"],
+        "url_max": r["url_max"],
+    } for r in spark.read.parquet(data).groupBy(
+        F.input_file_name().alias("file")).agg(
+            F.count("*").alias("rows"),
+            F.min("url").alias("url_min"),
+            F.max("url").alias("url_max")).collect()),
+        key=lambda p: p["file"])
+    assert ckpt.lineage() == scan
+    assert ckpt.read_manifest()["total_rows"] == 3

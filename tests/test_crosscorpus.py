@@ -102,7 +102,7 @@ def test_hot_bucket_degrades_to_representative(pages_factory):
 
 def test_warm_path_with_persisted_dims_matches_cold(old_new, tmp_path):
     """cross_dims=True commit + dedup_against_checkpoint (the warm
-    incremental path, zero old-side shuffles) must produce exactly the
+    incremental path, zero old-side aggregations) must produce exactly the
     cold path's verdicts."""
     from pysparkdedup.checkpoint import (
         SignatureCheckpoint, signatures_with_checkpoint)
@@ -256,6 +256,82 @@ def test_recommit_gcs_stale_dim_dirs(old_new, tmp_path):
     names = os.listdir(path)
     for prefix in ("data-", "exactdim-", "bands-", "bandstats-"):
         assert sum(n.startswith(prefix) for n in names) == 1, names
+
+
+def _jobs_of(spark, fn):
+    """``fn()`` and the number of Spark jobs it started, counted through
+    a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_cross_dims_commit_and_loads_start_no_metadata_jobs(old_new,
+                                                            tmp_path):
+    """With schemas recorded in the manifest and lineage read from the
+    footers, a cold cross_dims=True commit starts only its writes' jobs:
+    the signature write (1), the exact dim (2), the band projection (1) and
+    the band stats (2). Opening the signatures and the dims starts none."""
+    from pysparkdedup.checkpoint import (
+        SignatureCheckpoint, signatures_with_checkpoint)
+
+    old, _ = old_new
+    spark, cfg = old.sparkSession, DedupConfig()
+    path = str(tmp_path / "ckpt")
+    _, commit_jobs = _jobs_of(spark, lambda: signatures_with_checkpoint(
+        old, cfg, path, cross_dims=True))
+    assert commit_jobs == 6
+
+    ckpt = SignatureCheckpoint(path)
+    (sigs, dims), load_jobs = _jobs_of(spark, lambda: (
+        ckpt.load(spark, cfg), ckpt.load_cross_dims(spark, cfg)))
+    assert sigs is not None and dims is not None
+    assert load_jobs == 0
+
+
+def test_recorded_schemas_equal_inferred_and_legacy_manifest_loads(
+        old_new, tmp_path):
+    """Each table a commit wrote opens under its recorded schema, which is
+    the schema Spark infers from the files; a manifest without ``schemas``
+    (written by an older version) loads the same rows and dims by
+    inference."""
+    import json
+    import os
+
+    from pysparkdedup.checkpoint import (
+        CROSS_DIMS, SignatureCheckpoint, signatures_with_checkpoint)
+
+    old, _ = old_new
+    spark, cfg = old.sparkSession, DedupConfig()
+    path = str(tmp_path / "ckpt")
+    signatures_with_checkpoint(old, cfg, path, cross_dims=True)
+    ckpt = SignatureCheckpoint(path)
+    manifest = ckpt.read_manifest()
+    assert set(manifest["schemas"]) == {"data", *CROSS_DIMS}
+    for key in manifest["schemas"]:
+        inferred = spark.read.parquet(os.path.join(path, manifest[key]))
+        assert ckpt._read(spark, manifest, key).schema == inferred.schema
+
+    def tables():
+        frames = {"data": ckpt.load(spark, cfg),
+                  **ckpt.load_cross_dims(spark, cfg)}
+        return {k: (df.schema, sorted(tuple(r) for r in df.collect()))
+                for k, df in frames.items()}
+
+    recorded = tables()
+    del manifest["schemas"]
+    with open(ckpt._manifest_path(), "w") as fh:
+        json.dump(manifest, fh)
+    assert tables() == recorded
 
 
 @pytest.mark.slow

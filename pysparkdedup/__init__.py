@@ -30,8 +30,8 @@ dedup (all first-class, DuckDB-oracled via the driver contract):
 - PII scrubbing      : regex detect/redact/audit, Java+RE2-portable (`pii`)
 - incremental crawls : new-vs-old corpus dedup off a signature checkpoint
                        (`crosscorpus`)
-- image dedup        : exact binary-payload dedup + perceptual dHash near-dup
-                       over a stdlib PNG decoder (`multimodal`)
+- image dedup        : perceptual dHash dedup (byte-identical, re-encoded and
+                       resized copies) over a stdlib PNG decoder (`multimodal`)
 - one-call pipeline  : `curate.curate_pages` / CLI `--mode curate`
 
 Everything is DataFrame-first: built-in ``pyspark.sql.functions`` expressions in

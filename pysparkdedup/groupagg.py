@@ -27,8 +27,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def with_group_stats(df: DataFrame, key: str, aggs: list[Column],
-                     how: str = "left") -> DataFrame:
+def with_group_stats(df: DataFrame, key: str,
+                     aggs: list[Column]) -> DataFrame:
     """Attach per-group aggregate columns to every row of ``df``.
 
     Equivalent to computing each aggregate ``.over(Window.partitionBy(key))``
@@ -38,6 +38,6 @@ def with_group_stats(df: DataFrame, key: str, aggs: list[Column],
     tmp = f"_gs_{key}"
     stats = df.groupBy(key).agg(*aggs).withColumnRenamed(key, tmp)
     return (
-        df.join(stats, on=F.col(key).eqNullSafe(F.col(tmp)), how=how)
+        df.join(stats, on=F.col(key).eqNullSafe(F.col(tmp)), how="left")
         .drop(tmp)
     )

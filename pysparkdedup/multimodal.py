@@ -1,10 +1,10 @@
 """Image near-duplicate detection over opaque binary payloads.
 
-Images travel as a ``binary`` column (``html`` by default). Two stages
-reach them: ``exact_binary_dedup`` groups byte-identical payloads by
-sha2, and the perceptual path (``image_dhash`` -> ``dhash_blocks`` ->
-``image_dedup_ledger``) finds re-encoded and resized copies through a
-64-bit difference hash, clustering distinct hash values rather than ids.
+Images travel as a ``binary`` column (``html`` by default). The
+perceptual path (``image_dhash`` -> ``dhash_blocks`` ->
+``image_dedup_ledger``) finds byte-identical, re-encoded and resized copies
+through a 64-bit difference hash, clustering distinct hash values rather
+than ids.
 ``image_dhash`` decodes and hashes each payload of a ``mapInArrow`` batch,
 read straight off the Arrow binary column.
 
@@ -13,14 +13,11 @@ codec it knows decodes; without it PNG still decodes for real through the
 pure-stdlib ``png_decode_gray`` (zlib inflate + unfilter + PIL-exact
 integer luma, bit-identical pixels to Pillow's convert("L")). Resampling is
 the shared area-average ``_resample_gray`` in both paths, so PNG dHashes are
-environment-independent. ``image_dhash`` nulls payloads it cannot decode;
-``fake_decode=True`` swaps in a deterministic bytes-digest hash for
-codec-less plumbing tests.
+environment-independent. ``image_dhash`` nulls payloads it cannot decode.
 """
 
 from __future__ import annotations
 
-import hashlib
 import io
 import struct
 
@@ -59,7 +56,7 @@ def png_decode_gray(payload: bytes) -> tuple[int, int, bytes]:
     if payload[:8] != b"\x89PNG\r\n\x1a\n":
         raise NotImplementedError(
             "stdlib fallback decodes PNG only; install Pillow for other "
-            "codecs or run with fake_decode=True")
+            "codecs")
     pos, idat, palette = 8, [], None
     w = h = bit_depth = color_type = interlace = None
     while pos + 8 <= len(payload):
@@ -207,19 +204,6 @@ def _resample_gray(gray: bytes, w: int, h: int, tw: int, th: int) -> bytes:
     return (sums // counts).astype(np.uint8).tobytes()
 
 
-def exact_binary_dedup(df: DataFrame, payload_col: str = "html") -> DataFrame:
-    """Exact media dedup: group by payload sha2 — the binary analog of the
-    text content-hash groupBy. Catches byte-identical copies only; for
-    re-encoded/resized copies (the dominant duplicate class in multimodal
-    training data) see ``image_dedup_ledger`` (perceptual dHash)."""
-    return (
-        df.withColumn("payload_sha", F.sha2(F.col(payload_col), 256))
-        .groupBy("payload_sha")
-        .agg(F.count(F.lit(1)).alias("n_copies"),
-             F.min("url").alias("kept_url"))
-    )
-
-
 def png_encode_gray(w: int, h: int, gray: bytes) -> bytes:
     """Pure-stdlib 8-bit grayscale PNG encode (color type 0, filter 0
     scanlines, one zlib IDAT, valid chunk CRCs). Round-trips bit-exactly
@@ -250,17 +234,15 @@ DHASH_GRID = (9, 8)
 
 
 def image_dhash(df: DataFrame, payload_col: str = "html",
-                id_col: str = "url", fake_decode: bool = False) -> DataFrame:
+                id_col: str = "url") -> DataFrame:
     """(id, dhash long): 64-bit perceptual difference-hash per image.
 
     Decode (Pillow any-codec, else stdlib PNG — bit-identical pixels) ->
     deterministic 9x8 box resample (``_resample_gray``, environment-
     independent) -> horizontal gradient sign bits. Robust to re-encoding
     and resizing (the gradient GRID is scale-free: an N-times upscaled
-    copy box-resamples to the identical 9x8 grid), which exact binary
-    dedup cannot see. ``fake_decode=True`` keeps a deterministic
-    bytes-digest fake for codec-less plumbing tests (non-PNG payloads
-    without Pillow). Null payloads hash to null."""
+    copy box-resamples to the identical 9x8 grid), which a byte-level
+    hash cannot see. Null payloads hash to null."""
     import numpy as np
     import pyarrow as pa
 
@@ -277,9 +259,6 @@ def image_dhash(df: DataFrame, payload_col: str = "html",
         return v - (1 << 64) if v >= (1 << 63) else v
 
     def _hash_one(payload: bytes) -> int | None:
-        if fake_decode:
-            digest = hashlib.blake2b(payload, digest_size=8).digest()
-            return _twos(int.from_bytes(digest, "little"))
         # Undecodable payloads (non-image bytes in the html column, truncated
         # files, codecs absent) null out per-row instead of failing the task:
         # one corrupt image must not kill a corpus-scale job, and the ledger
@@ -349,8 +328,7 @@ def dhash_blocks(sig_df: DataFrame, hamming_threshold: int,
 
 def image_dedup_ledger(df: DataFrame, payload_col: str = "html",
                        id_col: str = "url", hamming_threshold: int = 4,
-                       max_bucket_size: int = 256,
-                       fake_decode: bool = False) -> DataFrame:
+                       max_bucket_size: int = 256) -> DataFrame:
     """(id, dhash, cluster_key) for EVERY input row: duplicate components
     carry 'cc:' + the component's min id, singletons (and undecodable/null
     payloads) their own id.
@@ -372,11 +350,10 @@ def image_dedup_ledger(df: DataFrame, payload_col: str = "html",
     from .components import materialize, value_component_labels
     from .pairs import bucket_pairs
 
-    sigs = track(
-        image_dhash(df, payload_col=payload_col, id_col=id_col,
-                    fake_decode=fake_decode)
-        .persist(StorageLevel.MEMORY_AND_DISK))
     with cache_scope():
+        sigs = track(
+            image_dhash(df, payload_col=payload_col, id_col=id_col)
+            .persist(StorageLevel.MEMORY_AND_DISK))
         # one skinny row per distinct value: feeds blocking AND the
         # component expansion (count + min id ride the same aggregation)
         vals = track(

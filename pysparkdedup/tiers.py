@@ -137,7 +137,6 @@ def tiered_dedup(
     id_col: str = "url",
     text_col: str = "text",
     emb_id_col: str = "vec_id",
-    reliable: bool = False,
     on_stage=None,
 ) -> DataFrame:
     """Run the tier cascade over ``pages``; returns the dedup ledger
@@ -151,19 +150,20 @@ def tiered_dedup(
       directly); ``emb_threshold``/``emb_kwargs`` feed
       embedding_dup_clusters.
 
-    Each tier's slim (url, kept_by) loser map is eagerly materialized
-    (Spark has no DAG-level CSE, and every map feeds three consumers:
-    the next tier's anti-join, the chain resolution, and the ledger —
-    without the checkpoint the exact tier's corpus-wide hash groupBy
-    would re-execute per consumer). ``reliable=True`` uses cluster-durable
-    ``checkpoint()`` instead of executor-local blocks — same tradeoff as
-    components.connected_components. The corpus frame itself is NEVER
-    cached: survivors are re-derived by column-pruned anti-joins against
-    the materialized maps, the right call when the input is 100 TB and
-    the maps are two string columns.
+    Every tier's slim (url, kept_by) loser map feeds three consumers (the
+    next tier's anti-join, the chain resolution and the ledger), and Spark
+    has no DAG-level CSE, so each map is a projection of a frame that is
+    already materialized. The exact tier's map is eagerly
+    ``localCheckpoint``ed: its lineage is a corpus-wide hash groupBy. The
+    near and semantic maps slice the clusterer's result, which is itself
+    materialized (a checkpointed fixpoint or a driver-built frame). The
+    corpus frame itself is NEVER cached: survivors are re-derived by
+    column-pruned anti-joins against the maps, the right call when the
+    input is 100 TB and the maps are two string columns.
 
     ``on_stage`` (optional) is called with the tier name ('exact', 'near',
-    'semantic') right after that tier's loser map is eagerly materialized —
+    'semantic') once that tier has run: after the exact loser map is
+    materialized, and after the near and semantic clusterers have solved —
     a timing hook so instrumentation (bench.py's per-tier breakdown) runs
     THIS implementation instead of a parallel copy of the wiring.
     """
@@ -180,14 +180,14 @@ def tiered_dedup(
                           if c not in (id_col, text_col)])
 
     # Tier 1: exact. Losers leave the pool before any shingle is hashed.
-    l_exact = materialize(
-        _exact_losers(pages, cfg, id_col, text_col), reliable)
+    # An eager checkpoint, not a persist: a persist outside any cache
+    # scope would live for the session and serve the next identical plan.
+    l_exact = materialize(_exact_losers(pages, cfg, id_col, text_col))
     stage(TIER_EXACT)
     surv1 = base.join(l_exact.select("url"), "url", "left_anti")
 
     # Tier 2: near-dup over exact survivors only.
-    near_clusters = minhash_clusters(surv1, cfg)
-    l_near = materialize(_cluster_losers(near_clusters), reliable)
+    l_near = _cluster_losers(minhash_clusters(surv1, cfg))
     stage(TIER_NEAR)
     surv2 = surv1.join(l_near.select("url"), "url", "left_anti")
 
@@ -195,6 +195,7 @@ def tiered_dedup(
     if emb is not None:
         from pyspark import StorageLevel
 
+        from .cache import cache_scope, track
         from .similarity import embedding_dup_clusters
 
         # Cache the survivor-embedding frame: embedding_dup_clusters
@@ -202,21 +203,17 @@ def tiered_dedup(
         # attach, auto-banding count when n_bits is unset), and its
         # lineage is two corpus-wide anti-joins over the embedding scan —
         # without the cache each consumer re-derives the survivor pool.
-        # A LAZY persist (materialized by the clusterer's first job)
-        # replaces the former eager localCheckpoint barrier — one fewer
-        # scheduling round per cascade; reliable mode keeps the durable
-        # eager checkpoint. Unlike the text corpus (never cached), this
-        # frame is slim: id + vector, ~1-2% of corpus bytes at web scale.
-        sub = emb.withColumn("url", F.col(emb_id_col).cast("string")).join(
-            surv2.select("url"), "url").drop("url")
-        sub = (materialize(sub, reliable=True) if reliable
-               else sub.persist(StorageLevel.MEMORY_AND_DISK))
-        sem_clusters = embedding_dup_clusters(
-            sub, emb_threshold, id_col=emb_id_col, **(emb_kwargs or {}))
-        l_sem = materialize(_cluster_losers(sem_clusters), reliable)
-        if not reliable:
-            # l_sem is materialized; nothing lazy reads sub any more.
-            sub.unpersist(blocking=False)
+        # The persist is lazy (the clusterer's first job fills it) and is
+        # released when the scope closes: the clusters are materialized by
+        # then. Unlike the text corpus (never cached), this frame is slim:
+        # id + vector, ~1-2% of corpus bytes at web scale.
+        with cache_scope():
+            sub = track(
+                emb.withColumn("url", F.col(emb_id_col).cast("string"))
+                .join(surv2.select("url"), "url").drop("url")
+                .persist(StorageLevel.MEMORY_AND_DISK))
+            l_sem = _cluster_losers(embedding_dup_clusters(
+                sub, emb_threshold, id_col=emb_id_col, **(emb_kwargs or {})))
     else:
         l_sem = pages.sparkSession.createDataFrame(
             [], "url string, kept_by string")
@@ -235,7 +232,7 @@ def tiered_dedup(
             "url", F.lit(TIER_SEMANTIC).alias("tier"), "kept_by"))
     )
     # The kept rows only need the LOSER URL SET, which resolution does not
-    # change — anti-join against the raw checkpointed maps, not the
+    # change — anti-join against the raw loser maps, not the
     # resolved ledger, so the resolve-join subtree is not re-derived a
     # second time inside the anti-join branch (no DAG-level CSE).
     losers = (

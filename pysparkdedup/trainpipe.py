@@ -26,8 +26,7 @@ Scale notes (100 TB):
   cascade's repeated consumption becomes column-pruned parquet scans
   that never hold the corpus in executor storage), else
   ``localCheckpoint`` (executor-local blocks; fine at benchmark scale,
-  lost on executor death) or ``checkpoint`` under ``reliable=True`` —
-  the same tradeoff knob as tiers.tiered_dedup / components.
+  lost on executor death).
 - Docs dropped by the curation filter never enter the cascade (they are
   not in the ledger at all); docs dropped by a tier appear with their
   tier and final representative. ``surviving_docs`` joins the two
@@ -59,7 +58,6 @@ def curate_and_dedup(
     id_col: str = "url",
     text_col: str = "text",
     staging_path: str | None = None,
-    reliable: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Run the curation pass, materialize its output once, then the tiered
     dedup cascade over the CURATED text. Returns ``(curated, ledger)``:
@@ -73,8 +71,8 @@ def curate_and_dedup(
 
     ``curate_kwargs`` feed curate_pages (all stages default OFF there);
     ``emb``/``emb_threshold``/``emb_kwargs`` feed the semantic tier.
-    ``staging_path`` (durable parquet) vs localCheckpoint vs
-    ``reliable=True`` cluster checkpoint — see module docstring.
+    ``staging_path`` (durable parquet) vs localCheckpoint — see module
+    docstring.
     """
     from .components import materialize
     from .curate import curate_pages
@@ -88,11 +86,10 @@ def curate_and_dedup(
         cur.write.mode("overwrite").parquet(staging_path)
         cur = read_parquet(pages.sparkSession, staging_path, cur.schema)
     else:
-        cur = materialize(cur, reliable)
+        cur = materialize(cur)
     ledger = tiered_dedup(
         cur, cfg, emb=emb, emb_threshold=emb_threshold,
-        emb_kwargs=emb_kwargs, id_col=id_col, text_col=text_col,
-        reliable=reliable)
+        emb_kwargs=emb_kwargs, id_col=id_col, text_col=text_col)
     return cur, ledger
 
 

@@ -59,6 +59,23 @@ def spark():
     s.stop()
 
 
+def jobs_of(spark, fn):
+    """``fn()`` and the number of Spark jobs it started, counted through
+    a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def make_pages(spark, rows):
     """rows: list of (url, warc_ts|None, text, lang). html derived."""
     data = [

@@ -5,7 +5,7 @@ import pytest
 from pysparkdedup.actions import ACTIONS, _subset, perform, pointer_dedup
 from pysparkdedup.config import DedupConfig
 from pysparkdedup.pipeline import run_clustered, run_exact
-from tests.conftest import ts
+from tests.conftest import jobs_of, ts
 
 
 @pytest.fixture()
@@ -293,10 +293,9 @@ def test_pipeline_tail_runs_once_per_verb(spark, pages_factory, tmp_path,
     sc = spark.sparkContext
     try:
         with cache.cache_scope():
-            sc.setJobGroup("tail-build", "tail-build")
-            finals = [run_exact(pages, cfg),
-                      run_clustered(pages, cfg, clusters)]
-            assert sc.statusTracker().getJobIdsForGroup("tail-build") == []
+            finals, build_jobs = jobs_of(spark, lambda: [
+                run_exact(pages, cfg), run_clustered(pages, cfg, clusters)])
+            assert build_jobs == 0
             for f in finals:
                 assert f.storageLevel.useMemory or f.storageLevel.useDisk
                 assert any(df is f for df in captured)

@@ -13,7 +13,7 @@ from pysparkdedup.crosscorpus import (
     old_side_dims,
 )
 from pysparkdedup.minhash import lsh_bands, minhash_signatures
-from tests.conftest import ts
+from tests.conftest import jobs_of, ts
 
 
 def long_text(seed: str, n: int = 60) -> str:
@@ -258,23 +258,6 @@ def test_recommit_gcs_stale_dim_dirs(old_new, tmp_path):
         assert sum(n.startswith(prefix) for n in names) == 1, names
 
 
-def _jobs_of(spark, fn):
-    """``fn()`` and the number of Spark jobs it started, counted through
-    a job group of its own."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"count-{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_cross_dims_commit_and_loads_start_no_metadata_jobs(old_new,
                                                             tmp_path):
     """With schemas recorded in the manifest and lineage read from the
@@ -287,12 +270,12 @@ def test_cross_dims_commit_and_loads_start_no_metadata_jobs(old_new,
     old, _ = old_new
     spark, cfg = old.sparkSession, DedupConfig()
     path = str(tmp_path / "ckpt")
-    _, commit_jobs = _jobs_of(spark, lambda: signatures_with_checkpoint(
+    _, commit_jobs = jobs_of(spark, lambda: signatures_with_checkpoint(
         old, cfg, path, cross_dims=True))
     assert commit_jobs == 6
 
     ckpt = SignatureCheckpoint(path)
-    (sigs, dims), load_jobs = _jobs_of(spark, lambda: (
+    (sigs, dims), load_jobs = jobs_of(spark, lambda: (
         ckpt.load(spark, cfg), ckpt.load_cross_dims(spark, cfg)))
     assert sigs is not None and dims is not None
     assert load_jobs == 0

@@ -1,25 +1,11 @@
-"""Image dedup tests: exact binary dedup, the stdlib PNG codec, dHash
-signatures, pigeonhole blocking, perceptual clustering and the CLI mode."""
+"""Image dedup tests: the stdlib PNG codec, dHash signatures, pigeonhole
+blocking, perceptual clustering and the CLI mode."""
 
 from collections import Counter
 
 import pytest
 
-from pysparkdedup.multimodal import exact_binary_dedup
 from tests.conftest import ts
-
-
-def test_exact_binary_dedup(pages_factory):
-    df = pages_factory([
-        ("u/a", ts(0), "same", "en"),
-        ("u/b", ts(0), "same", "en"),
-        ("u/c", ts(0), "diff", "en"),
-    ])
-    rows = exact_binary_dedup(df).collect()
-    by_copies = sorted(r["n_copies"] for r in rows)
-    assert by_copies == [1, 2]
-    dup = [r for r in rows if r["n_copies"] == 2][0]
-    assert dup["kept_url"] == "u/a"
 
 
 def _have_pil():
@@ -179,7 +165,7 @@ def test_png_encode_gray_roundtrip():
 def test_image_dhash_upscale_invariant(spark):
     """A 2x- or 3x-upscaled copy box-resamples to the identical 9x8 grid, so
     its dhash is bit-identical to the base image — the re-encoded/resized
-    duplicate class exact_binary_dedup cannot see."""
+    duplicate class a byte-level hash cannot see."""
     from pysparkdedup.multimodal import image_dhash, png_encode_gray
 
     rows = []
@@ -339,21 +325,43 @@ def test_image_dup_clusters_planted_recall(spark):
     assert sum(n > 1 for n in sizes.values()) == len({*want.values()})
 
 
-def test_image_dhash_fake_decode_plumbing(pages_factory):
-    """fake_decode keeps the codec-less plumbing path testable on opaque
-    payloads: deterministic per-bytes, distinct across payloads."""
-    from pysparkdedup.multimodal import image_dhash
-    from tests.conftest import ts
+def test_image_dedup_ledger_releases_its_caches(spark, monkeypatch):
+    """The ledger comes back materialized, so every frame the call persists
+    (the dHash signatures included) is released on return, with or without
+    a caller's cache scope. Spied via cache.track (the library imports it
+    per call), as in test_neardup."""
+    import pysparkdedup.cache as cache
+    from pysparkdedup.multimodal import image_dedup_ledger, png_encode_gray
 
-    df = pages_factory([
-        ("u/a", ts(0), "same-bytes", "en"),
-        ("u/b", ts(1), "same-bytes", "en"),
-        ("u/c", ts(2), "other-bytes", "en"),
-    ])
-    sigs = {r["url"]: r["dhash"]
-            for r in image_dhash(df, fake_decode=True).collect()}
-    assert sigs["u/a"] == sigs["u/b"]
-    assert sigs["u/a"] != sigs["u/c"]
+    captured = []
+    real_track = cache.track
+
+    def spy(df):
+        captured.append(df)
+        return real_track(df)
+
+    monkeypatch.setattr(cache, "track", spy)
+    g = _grid_bytes(0)
+    df = spark.createDataFrame([
+        ("u/base", png_encode_gray(9, 8, g)),
+        ("u/up2", png_encode_gray(18, 16, _upscale(g, 9, 8, 2))),
+        ("u/solo", png_encode_gray(9, 8, _grid_bytes(1))),
+    ], ["url", "html"])
+
+    def persisted():
+        return [df for df in captured
+                if df.storageLevel.useMemory or df.storageLevel.useDisk]
+
+    ledger = image_dedup_ledger(df, hamming_threshold=2)
+    assert len(captured) >= 2  # the signatures and the value frame
+    assert not persisted(), "a ledger cache outlived the call"
+    captured.clear()
+    with cache.cache_scope():
+        ledger = image_dedup_ledger(df, hamming_threshold=2)
+        assert not persisted(), "a ledger cache outlived the call"
+    got = {r["url"]: r["cluster_key"] for r in ledger.collect()}
+    assert got == {"u/base": "cc:u/base", "u/up2": "cc:u/base",
+                   "u/solo": "cc:u/solo"}
 
 
 def test_cli_image_dedup_mode(spark, tmp_path, capsys):

@@ -11,7 +11,7 @@ import pytest
 
 from pysparkdedup.config import DedupConfig
 from pysparkdedup.tiers import tier_stats, tiered_dedup
-from tests.conftest import ts
+from tests.conftest import jobs_of, ts
 
 
 def long_text(last: str = "end") -> str:
@@ -247,3 +247,17 @@ def test_on_stage_hook_fires_in_tier_order(spark, tier_pages):
     assert seen == ["exact", "near", "semantic"]
     without = ledger_map(tiered_dedup(tier_pages, DedupConfig(), **kwargs))
     assert with_hook == without
+
+
+def test_cascade_job_count(spark, tier_pages):
+    """Building the ledger runs the exact tier's checkpoint and the two
+    clusterers, nothing else: the near and semantic loser maps are
+    projections of already-materialized cluster frames, not copies."""
+    emb = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0]), (5, [1.0, 0.0, 0.0])],
+        "vec_id long, embedding array<float>")
+    ledger, jobs = jobs_of(spark, lambda: tiered_dedup(
+        tier_pages, DedupConfig(), emb=emb, emb_threshold=0.99,
+        emb_kwargs={"n_tables": 4, "n_bits": 2}))
+    assert jobs == 34
+    assert ledger_map(ledger)["5"] == ("semantic", "0")

@@ -11,14 +11,21 @@ keep-first paragraph dedup, then PII redaction on the surviving text.
 Scale notes (100 TB): every stage reuses the shuffle-discipline of its
 module — repetition_stats is shuffle-free and the line ops dehydrate (only
 (id, line/pos) projections shuffle) — but the COMPOSITION is flattened
-rather than chained: one persisted exploded frame feeds the shared
-``repetition.line_drops`` primitive for both line stages, whose one
+rather than chained: one persisted per-document lines frame feeds the
+shared ``repetition.line_drops`` primitive for both line stages, whose one
 per-document drop set is applied by one order-preserving
-``repetition.kept_lines`` filter, so tokenization,
-the repetition gram sort, and the text rebuild each run exactly once per
-pass (chaining the standalone ops re-executes the corpus lineage per
-stage — Spark has no DAG-level CSE; measured 4-6x re-compute). The full
-text column rides exactly one id-keyed rebuild join, never an aggregation.
+``repetition.kept_lines`` filter, so line splitting or chunking, the
+repetition gram sort, and the text rebuild each run exactly once per pass
+(chaining the standalone ops re-executes the corpus lineage per stage —
+Spark has no DAG-level CSE; measured 4-6x re-compute). The full text
+column rides exactly one id-keyed rebuild join, never an aggregation.
+
+The costliest per-row steps are codegen'd JVM expressions, not lambdas:
+pseudo-lines are two linear regexes (``repetition.chunk_lines_expr``),
+each PII regex runs only on rows holding the literal it needs
+(``pii.PII_GATES``), and the boilerplate document frequency counts each
+document's distinct lines, exploded from its own row, so its only shuffle
+is the one on the line.
 
 Line units are selectable (``line_mode``): ``"newline"`` splits on real
 ``'\\n'`` — the right choice for web text, and LOSSLESS for documents that
@@ -39,8 +46,8 @@ empty/trivial lines). Without the exemption, every blank line in a
 newline-split web corpus is one shared "value" that keep-first dedup
 would collapse corpus-wide, flattening the paragraph structure of
 essentially every multi-paragraph document. The exemption lives here,
-not in the shared primitive: curate filters blank lines out of the
-exploded frame before calling ``line_drops``, and the standalone
+not in the shared primitive: curate filters blank lines out of both
+exploded frames before calling ``line_drops``, and the standalone
 ``drop_boilerplate_lines`` / ``dedup_lines_keep_first`` treat them as
 ordinary lines. Chunk pseudo-lines are never blank, so the exemption is a
 no-op in chunk mode.
@@ -57,7 +64,6 @@ from .pii import redact_pii
 from .repetition import (
     chunk_lines_expr, kept_lines, line_drops, repetition_stats,
     with_chunk_lines)
-from .textstats import tokens_col
 
 
 def curate_pages(
@@ -89,7 +95,8 @@ def curate_pages(
       ``"chunk"`` (normalized ``tokens_per_line``-token pseudo-lines for
       newline-free corpora; rewrites text in pseudo-line space), or
       ``"auto"`` (per document: real lines when the doc contains ``'\\n'``,
-      pseudo-lines otherwise — mixed-crawl safe).
+      pseudo-lines otherwise — mixed-crawl safe). A ``tokens_per_line``
+      below 1 raises ``ValueError`` when a line stage chunks.
 
     - ``drop_empty``         : drop documents whose FINAL text has no
       non-whitespace content — docs fully consumed by the line stages
@@ -130,7 +137,7 @@ def curate_pages(
     if boilerplate_min_df > 0 or dedup_paragraphs:
         # Fused line section. Chaining drop_boilerplate_lines and
         # dedup_lines_keep_first re-tokenizes and re-rebuilds the corpus
-        # once per stage; here ONE persisted exploded frame feeds
+        # once per stage; here ONE persisted lines frame feeds
         # line_drops for both stages and ONE order-preserving filter
         # applies the merged drop set. The fusion is order-safe: the filter
         # keeps relative order within each doc, so argmin(id, original_pos)
@@ -145,37 +152,36 @@ def curate_pages(
         if line_mode == "newline":
             lines_src = cur.select(F.col(id_col), raw_lines.alias("lines"))
         elif line_mode == "auto":
-            # Per-doc unit pick. The token array is materialized into a
-            # column first (with_chunk_lines' O(len^2) guard); CaseWhen
-            # evaluates only the taken branch per row, so newline docs
-            # never pay the chunking transform.
-            lines_src = cur.withColumn(
-                "_toks", tokens_col(text_col)
-            ).select(
+            # Per-doc unit pick: CaseWhen evaluates only the taken branch
+            # per row, so newline docs never pay the chunking regexes.
+            lines_src = cur.select(
                 F.col(id_col),
                 F.when(
                     F.coalesce(F.col(text_col), F.lit("")).contains("\n"),
                     raw_lines,
                 ).otherwise(
-                    chunk_lines_expr(F.col("_toks"), tokens_per_line)
+                    chunk_lines_expr(F.col(text_col), tokens_per_line)
                 ).alias("lines"))
         else:
             lines_src = with_chunk_lines(
                 cur, tokens_per_line, text_col=text_col).select(
                     id_col, "lines")
-        # Tokenization/chunking runs exactly once into this cache; the
-        # rebuild reads the arrays back instead of recomputing them.
+        # Splitting or chunking runs exactly once into this cache; both
+        # exploded frames and the rebuild read the arrays back.
         lines_src = track(lines_src.persist(StorageLevel.MEMORY_AND_DISK))
         # Blank-line exemption: whitespace-only lines never reach
         # line_drops, so their positions never enter the drop set and the
         # rebuild keeps them unconditionally.
-        light = track(
-            lines_src.select(
-                F.col(id_col), F.posexplode("lines").alias("pos", "line"))
-            .filter(F.col("line").rlike(r"\S"))
-            .persist(StorageLevel.MEMORY_AND_DISK))
+        nonblank = F.col("line").rlike(r"\S")
+        light = lines_src.select(
+            F.col(id_col), F.posexplode("lines").alias("pos", "line")
+        ).filter(nonblank)
+        uniq = lines_src.select(
+            F.col(id_col), F.explode(F.array_distinct("lines")).alias("line")
+        ).filter(nonblank)
         rebuilt = lines_src.join(
-            line_drops(light, id_col, boilerplate_min_df, dedup_paragraphs),
+            line_drops(light, uniq, id_col, boilerplate_min_df,
+                       dedup_paragraphs),
             id_col, "left")
         kept = kept_lines(F.col("lines"), F.col("_drop"))
         if drop_empty:

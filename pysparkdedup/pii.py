@@ -9,9 +9,11 @@ is the structural template: PII signals are one more set of derived columns
 over the same row.
 
 Everything here is JVM-side ``regexp_count`` / ``regexp_replace`` column
-algebra — no Python UDFs, fully inside whole-stage codegen. The patterns
-deliberately use only the regex subset on which Java's engine (Spark) and
-RE2 (DuckDB, the oracle) produce identical matches: character classes,
+algebra — no Python UDFs, fully inside whole-stage codegen. Each pattern
+is gated on a literal it cannot match without (``PII_GATES``): a string
+that lacks it skips that regex. The patterns deliberately use only the
+regex subset on which Java's engine (Spark) and RE2 (DuckDB, the oracle)
+produce identical matches: character classes,
 bounded repetition, non-capturing groups and ``\b`` — no lookaround, no
 backreferences (RE2 has neither).
 
@@ -22,7 +24,7 @@ redaction add zero shuffles; ``pii_summary`` is a single partial-aggregated
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Ordered: redaction applies patterns in THIS order (an oracle replaying the
@@ -43,6 +45,34 @@ PII_PATTERNS: dict[str, str] = {
 }
 
 
+# The literal each pattern cannot match without. A string that lacks it
+# skips that pattern's regex: its count is 0 and its replacement is the
+# identity, so the gate changes no output. card has no such literal (its
+# separator may be a space or a hyphen). Most text has no '@' or '+', so
+# the email and phone regexes run only where they can match.
+PII_GATES: dict[str, str | None] = {
+    "email": "@",
+    "ipv4": ".",
+    "phone": "+",
+    "card": None,
+}
+
+
+def _gated(kind: str, cur: Column, found: Column, skipped: Column) -> Column:
+    """``found`` where ``cur`` holds ``kind``'s gate literal, else
+    ``skipped``."""
+    gate = PII_GATES[kind]
+    if gate is None:
+        return found
+    return F.when(cur.contains(gate), found).otherwise(skipped)
+
+
+def _redacted(kind: str, cur: Column) -> Column:
+    """``cur`` with ``kind``'s matches replaced by its placeholder."""
+    return _gated(kind, cur, F.regexp_replace(
+        cur, PII_PATTERNS[kind], f"<{kind.upper()}>"), cur)
+
+
 def with_pii_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Adds one ``n_<kind>`` int column per pattern plus ``n_pii`` (total).
 
@@ -50,18 +80,23 @@ def with_pii_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     by their placeholders — the same intermediate string redact_pii sees —
     so ``n_<kind>`` equals the ``<KIND>`` placeholders redaction emits and
     ``n_pii`` equals total placeholders (see PII_PATTERNS ordering note).
-    Still pure JVM regexp column algebra, zero shuffles.
+    Each kind's regexes run only on strings that hold its ``PII_GATES``
+    literal. Still pure JVM regexp column algebra, zero shuffles.
     """
-    cur = F.coalesce(F.col(text_col), F.lit(""))
-    for kind in PII_PATTERNS:
+    cur = F.col("_pii_cur")
+    df = df.withColumn("_pii_cur", F.coalesce(F.col(text_col), F.lit("")))
+    for kind, pattern in PII_PATTERNS.items():
+        # One projection per kind: the next kind reads _pii_cur as a
+        # column, so the gate does not copy this kind's regex into it.
         df = df.withColumn(
-            f"n_{kind}", F.regexp_count(cur, F.lit(PII_PATTERNS[kind])))
-        cur = F.regexp_replace(cur, PII_PATTERNS[kind], f"<{kind.upper()}>")
+            f"n_{kind}",
+            _gated(kind, cur, F.regexp_count(cur, F.lit(pattern)), F.lit(0)),
+        ).withColumn("_pii_cur", _redacted(kind, cur))
     total = None
     for kind in PII_PATTERNS:
         c = F.col(f"n_{kind}")
         total = c if total is None else total + c
-    return df.withColumn("n_pii", total)
+    return df.withColumn("n_pii", total).drop("_pii_cur")
 
 
 def redact_pii(
@@ -72,13 +107,15 @@ def redact_pii(
 ) -> DataFrame:
     """Adds ``out_col``: the text with each PII match replaced by a typed
     placeholder (``<EMAIL>``, ``<IPV4>``, ...). Patterns apply in
-    PII_PATTERNS order; pass ``kinds`` to scrub a subset.
+    PII_PATTERNS order; pass ``kinds`` to scrub a subset. Each kind's regex
+    runs only on strings that hold its ``PII_GATES`` literal, one
+    projection per kind, so the optimized plan names each regex once.
     """
-    col = F.coalesce(F.col(text_col), F.lit(""))
+    df = df.withColumn(out_col, F.coalesce(F.col(text_col), F.lit("")))
+    cur = F.col(out_col)
     for kind in kinds if kinds is not None else tuple(PII_PATTERNS):
-        col = F.regexp_replace(
-            col, PII_PATTERNS[kind], f"<{kind.upper()}>")
-    return df.withColumn(out_col, col)
+        df = df.withColumn(out_col, _redacted(kind, cur))
+    return df
 
 
 def pii_summary(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -23,8 +23,8 @@ and share one primitive: ``line_drops`` computes the per-document drop
 positions of either stage or both, and ``kept_lines`` is the
 order-preserving positional filter that applies them. Each caller keeps
 only its own part: the standalone ops their accounting columns, curate its
-line unit, its blank-line exemption (blank lines are filtered out of the
-exploded frame before ``line_drops``) and its ``drop_empty`` test.
+line unit, its blank-line exemption (blank lines are filtered out of both
+exploded frames before ``line_drops``) and its ``drop_empty`` test.
 
 Scale notes (100 TB):
 - ``repetition_stats`` / ``repetition_profile`` are SHUFFLE-FREE
@@ -33,13 +33,15 @@ Scale notes (100 TB):
   parallel, a mega-document costs only its own gram count within its
   task, and the whole batch is one dictionary encode + one lexsort per n
   (per-row Python only to tokenize and round). The line ops are pure JVM
-  column algebra.
-- The line ops dehydrate: only the light (id, pos, line) projection rides
-  the verdict aggregations (count-only / min-struct state, so partial agg
-  absorbs hot lines); both drop sets leave through one per-document
-  ``collect_set`` of positions, and the rebuild filters each document's
-  OWN lines array against that one per-doc frame, so the corpus text
-  never shuffles.
+  column algebra, and so is ``chunk_lines_expr``'s pseudo-line unit (two
+  linear regexes, no lambdas).
+- The line ops dehydrate: only the light (id, pos, line) projection and
+  the per-document distinct (id, line) rows ride the verdict aggregations
+  (count-only / min-struct state, so partial agg absorbs hot lines); the
+  document frequency shuffles once, on the line; both drop sets leave
+  through one per-document ``collect_set`` of positions, and the rebuild
+  filters each document's OWN lines array against that one per-doc
+  frame, so the corpus text never shuffles.
 """
 
 from __future__ import annotations
@@ -57,7 +59,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .cache import track
-from .textstats import tokens_col
 
 
 def with_chunk_lines(
@@ -66,38 +67,32 @@ def with_chunk_lines(
     text_col: str = "text",
     out_col: str = "lines",
 ) -> DataFrame:
-    """``df`` plus an ``out_col`` array of deterministic pseudo-lines.
-
-    Materializes the token array into a column FIRST: passing the raw
-    split() expression into the chunk lambda would re-evaluate tokenization
-    once per chunk slice (no CSE inside lambda bodies) — O(len^2) per doc.
-    """
-    return (
-        df.withColumn("_toks", tokens_col(text_col))
-        .withColumn(out_col,
-                    chunk_lines_expr(F.col("_toks"), tokens_per_line))
-        .drop("_toks")
-    )
+    """``df`` plus an ``out_col`` array of deterministic pseudo-lines
+    (``chunk_lines_expr`` of ``text_col``)."""
+    return df.withColumn(
+        out_col, chunk_lines_expr(F.col(text_col), tokens_per_line))
 
 
-def chunk_lines_expr(tokens: Column, tokens_per_line: int) -> Column:
-    """Deterministic pseudo-lines: consecutive ``tokens_per_line``-token
-    chunks, space-joined. Gives newline-free corpora (like the synthetic
-    documents table) a well-defined line unit; real web text uses
-    ``split(text, '\\n')`` instead.
+def chunk_lines_expr(text: Column, tokens_per_line: int) -> Column:
+    """Deterministic pseudo-lines of ``text``: consecutive
+    ``tokens_per_line``-token chunks of its lowercased whitespace tokens
+    (the ``textstats.tokens_col`` tokenizer), space-joined. Gives
+    newline-free corpora (like the synthetic documents table) a
+    well-defined line unit; real web text uses ``split(text, '\\n')``
+    instead.
 
-    ``tokens`` should be a MATERIALIZED column (see with_chunk_lines), not a
-    raw split() expression — lambdas re-evaluate their captured expressions
-    per element."""
-    w = tokens_per_line
-    n_chunks = F.ceil(F.size(tokens) / F.lit(w)).cast("int")
-    return F.when(
-        n_chunks > 0,
-        F.transform(
-            F.sequence(F.lit(0), n_chunks - F.lit(1)),
-            lambda i: F.concat_ws(" ", F.slice(tokens, i * w + 1, w)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    Two linear JVM regex passes, no lambdas: every whitespace run becomes
+    one space, then each match of ``\\S+(?: \\S+){0,w-1}`` is one chunk.
+    The greedy match takes a whole token and up to ``w - 1`` more, and the
+    next match starts at the next token, so the chunks are exactly the
+    token array cut every ``w`` tokens. A null or blank text has none."""
+    if tokens_per_line < 1:
+        raise ValueError(
+            f"tokens_per_line must be >= 1, got {tokens_per_line!r}")
+    spaced = F.regexp_replace(
+        F.lower(F.coalesce(text, F.lit(""))), r"\s+", " ")
+    return F.regexp_extract_all(
+        spaced, F.lit(rf"\S+(?: \S+){{0,{tokens_per_line - 1}}}"), 0)
 
 
 # Java's default \s (no UNICODE_CHARACTER_CLASS): [ \t\n\x0B\f\r] — the
@@ -296,15 +291,18 @@ def repetition_stats(
 
 def line_drops(
     light: DataFrame,
+    uniq: DataFrame,
     id_col: str,
     min_df: int = 0,
     keep_first: bool = False,
 ) -> DataFrame:
     """Per-document drop positions of the two corpus line stages.
 
-    ``light`` is an exploded ``(id_col, pos, line)`` frame. Returns one
-    ``(id_col, _drop)`` row per document that loses a line, ``_drop`` the
-    set of its dropped positions:
+    ``light`` is an exploded ``(id_col, pos, line)`` frame and ``uniq`` the
+    ``(id_col, line)`` frame of each document's DISTINCT lines
+    (``explode(array_distinct(lines))``), with the same lines left out as
+    in ``light``. Returns one ``(id_col, _drop)`` row per document that
+    loses a line, ``_drop`` the set of its dropped positions:
     - ``min_df > 0`` (CCNet boilerplate): every occurrence of a line held
       by at least ``min_df`` DISTINCT documents;
     - ``keep_first`` (Dolma paragraph dedup): among the lines that survive
@@ -314,18 +312,20 @@ def line_drops(
 
     A null line joins neither dim (null keys match nothing), so it is never
     dropped. Lines a caller wants exempt (curate's blank lines) are
-    filtered out of ``light`` before the call. Both sets leave through ONE
-    ``collect_set`` over their union, so a caller rebuilds against one
-    per-doc frame bounded by the docs that lose lines.
+    filtered out of ``light`` and ``uniq`` before the call. Both sets leave
+    through ONE ``collect_set`` over their union, so a caller rebuilds
+    against one per-doc frame bounded by the docs that lose lines.
 
-    Scale notes: the boilerplate dim is distinct-then-count (count-only
-    shuffle state; partial agg absorbs hot footers) and is deliberately
-    NOT hint-broadcast — every line with df >= min_df qualifies, an
-    unbounded set at web scale, so AQE decides from its runtime size. It
-    is persisted only when both stages run, the one case with two
-    consumers (its hit positions and the survivors' anti-join). The winner
-    dim carries O(1) min-struct state and keeps only lines with >= 2
-    occurrences (a unique line can never be dropped).
+    Scale notes: the boilerplate dim counts ``uniq`` rows per line, so its
+    one shuffle is on the line with count-only state (partial agg absorbs
+    hot footers); a document's repeats were collapsed in its own row, not
+    by a distinct over (id, line). It is deliberately NOT hint-broadcast —
+    every line with df >= min_df qualifies, an unbounded set at web scale,
+    so AQE decides from its runtime size. It is persisted only when both
+    stages run, the one case with two consumers (its hit positions and the
+    survivors' anti-join). ``uniq`` is read only when ``min_df > 0``. The
+    winner dim carries O(1) min-struct state and keeps only lines with
+    >= 2 occurrences (a unique line can never be dropped).
     """
     if min_df <= 0 and not keep_first:
         raise ValueError("line_drops needs min_df > 0 or keep_first")
@@ -333,8 +333,7 @@ def line_drops(
     surv = light
     if min_df > 0:
         boiler = (
-            light.select(id_col, "line").distinct()
-            .groupBy("line").agg(F.count(F.lit(1)).alias("df"))
+            uniq.groupBy("line").agg(F.count(F.lit(1)).alias("df"))
             .filter(F.col("df") >= min_df).select("line"))
         if keep_first:
             boiler = track(boiler.persist(StorageLevel.MEMORY_AND_DISK))
@@ -369,19 +368,23 @@ def _drop_lines(df: DataFrame, lines_col: str, id_col: str,
                 min_df: int = 0, keep_first: bool = False) -> DataFrame:
     """The standalone line ops' shared body: explode, ``line_drops``, and
     the ``(n_lines, kept_lines, clean_text, n_dropped)`` rebuild."""
-    # The light projection feeds the verdict dim AND the drop join; persist
-    # it so the caller's lines expression (often a chunking transform)
-    # evaluates once, not per consumer.
-    light = track(
-        df.select(F.col(id_col),
-                  F.posexplode(lines_col).alias("pos", "line"))
+    # The lines projection feeds both exploded frames AND the rebuild;
+    # persist it so the caller's lines expression (often the chunking
+    # regexes) evaluates once, not per consumer.
+    src = track(
+        df.select(F.col(id_col), F.col(lines_col).alias("lines"))
         .persist(StorageLevel.MEMORY_AND_DISK))
-    drops = line_drops(light, id_col, min_df=min_df, keep_first=keep_first)
-    return df.select(
+    light = src.select(
+        F.col(id_col), F.posexplode("lines").alias("pos", "line"))
+    uniq = src.select(
+        F.col(id_col), F.explode(F.array_distinct("lines")).alias("line"))
+    drops = line_drops(light, uniq, id_col, min_df=min_df,
+                       keep_first=keep_first)
+    return src.select(
         F.col(id_col),
-        F.greatest(F.size(lines_col), F.lit(0)).alias("n_lines"),
+        F.greatest(F.size("lines"), F.lit(0)).alias("n_lines"),
         F.coalesce(
-            F.col(lines_col), F.array().cast("array<string>")
+            F.col("lines"), F.array().cast("array<string>")
         ).alias("_lines"),
     ).join(drops, id_col, "left").select(
         id_col,

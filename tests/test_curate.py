@@ -8,7 +8,7 @@ import json
 import pytest
 
 from pysparkdedup.curate import curate_pages
-from tests.conftest import ts
+from tests.conftest import jobs_of, ts
 
 BOILER = "cookie banner accept all tracking policy terms privacy contact us"
 
@@ -288,3 +288,24 @@ def test_fused_composition_equals_sequential_stages(spark):
 
     assert set(got) == set(want)
     assert got == want
+
+
+def test_perfbench_curation_job_count(spark):
+    """curate_pages with the perfbench train_pipeline setting runs 13 Spark
+    jobs on a 1000-doc corpus. The boilerplate document frequency is
+    counted from each document's distinct lines, so no exchange on
+    (id, line) precedes the one on the line (the earlier distinct-then-count
+    dim ran 15 jobs here)."""
+    from pysparkdedup.cache import cache_scope
+    from pysparkdedup.corpus import pages_and_truth
+    from perfbench.workloads import CURATE
+
+    pages, _ = pages_and_truth(spark, 1000)
+
+    def run():
+        with cache_scope():
+            curate_pages(pages, **CURATE).write.format("noop").mode(
+                "overwrite").save()
+
+    _, jobs = jobs_of(spark, run)
+    assert jobs == 13

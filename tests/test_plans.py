@@ -460,3 +460,55 @@ def test_curate_redacts_once_under_drop_empty(spark, pages_factory,
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     for kind, pattern in PII_PATTERNS.items():
         assert plan.count(pattern) == 1, (kind, plan.count(pattern))
+
+
+def _chunk_pages(pages_factory):
+    from tests.conftest import ts
+
+    return pages_factory([
+        ("u/a", ts(0), "alpha beta gamma delta", "en"),
+        ("u/b", ts(1), "alpha beta\ngamma delta", "en"),
+    ])
+
+
+@pytest.mark.parametrize("line_mode", ["chunk", "auto"])
+def test_chunk_mode_plan_has_no_lambda_chunker(spark, pages_factory,
+                                               line_mode):
+    """Pseudo-lines come from two JVM regexes (regexp_replace, then
+    regexp_extract_all), not from a transform over sequence() slices."""
+    from pysparkdedup.curate import curate_pages
+
+    out = curate_pages(_chunk_pages(pages_factory), boilerplate_min_df=2,
+                       line_mode=line_mode)
+    plan = plan_of(out)
+    assert "regexp_extract_all(" in plan
+    for lam in ("sequence(", "slice(", "transform("):
+        assert lam not in plan, lam
+
+
+def _hash_keys(plan: str) -> list[list[str]]:
+    """The key columns of every hash-partitioned Exchange, ids stripped."""
+    return [[re.sub(r"#\d+", "", k).strip() for k in m.split(",")[:-1]]
+            for m in re.findall(r"Arguments: hashpartitioning\(([^)]*)\)",
+                                plan)]
+
+
+def test_boilerplate_df_dim_shuffles_only_on_the_line(spark, pages_factory):
+    """The boilerplate document frequency counts each document's distinct
+    lines, exploded from its own row, with one partially aggregated
+    group-by: no Exchange on (id, line) ahead of the line exchange. The
+    two line exchanges are the dim's and the hit join's probe side."""
+    from pysparkdedup.curate import curate_pages
+    from pysparkdedup.repetition import drop_boilerplate_lines, with_chunk_lines
+
+    pages = _chunk_pages(pages_factory)
+    lined = with_chunk_lines(
+        pages.select(F.col("url").alias("doc_id"), "text"), 2
+    ).select("doc_id", "lines")
+    for id_col, out in (
+            ("doc_id", drop_boilerplate_lines(lined, min_df=2)),
+            ("url", curate_pages(pages, boilerplate_min_df=2,
+                                 tokens_per_line=2))):
+        keys = _hash_keys(plan_of(out))
+        assert [id_col, "line"] not in keys, keys
+        assert keys.count(["line"]) == 2, keys

@@ -5,6 +5,7 @@ import re
 from collections import defaultdict
 
 import pytest
+from pyspark.sql import functions as F
 
 from pysparkdedup.decontam import contamination
 from pysparkdedup.repetition import (
@@ -52,11 +53,89 @@ def test_repetition_stats_short_doc_no_gram(spark):
 def test_chunk_lines(spark):
     text = " ".join(f"t{i}" for i in range(25))
     row = docs(spark, [(1, text)]).select(
-        chunk_lines_expr(tokens_col(), 10).alias("lines")).head()
+        chunk_lines_expr(F.col("text"), 10).alias("lines")).head()
     lines = row["lines"]
     assert len(lines) == 3
     assert lines[0].split() == [f"t{i}" for i in range(10)]
     assert lines[2].split() == [f"t{i}" for i in range(20, 25)]
+
+
+def reference_chunk_lines(tokens, w):
+    """The earlier lambda chunker, kept as the reference form: slice the
+    materialized token array every ``w`` tokens and space-join."""
+    n_chunks = F.ceil(F.size(tokens) / F.lit(w)).cast("int")
+    return F.when(
+        n_chunks > 0,
+        F.transform(
+            F.sequence(F.lit(0), n_chunks - F.lit(1)),
+            lambda i: F.concat_ws(" ", F.slice(tokens, i * w + 1, w)),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
+
+def assert_chunkers_agree(df, ws):
+    # A projection, not a filter: a filter would inline the token array
+    # into the reference lambdas, which re-tokenize once per chunk.
+    rows = df.withColumn("_toks", tokens_col()).select(
+        "doc_id",
+        *[chunk_lines_expr(F.col("text"), w).alias(f"regex{w}") for w in ws],
+        *[reference_chunk_lines(F.col("_toks"), w).alias(f"ref{w}")
+          for w in ws],
+    ).collect()
+    for r in rows:
+        for w in ws:
+            assert r[f"regex{w}"] is not None, (w, r["doc_id"])
+            assert r[f"regex{w}"] == r[f"ref{w}"], (w, r["doc_id"])
+
+
+def test_chunk_lines_equal_reference_form_on_edge_cases(spark):
+    words = " ".join(f"w{i}" for i in range(30))
+    rows = [
+        # null and blank; leading, trailing and \x0B whitespace
+        None, "", " ", " \t\n\x0B\f\r ",
+        "  lead and trail  ", "\x0Bvt\x0Bsplit\x0B",
+        # spaces outside Java's \s stay inside a token
+        "nbsp\u00a0glued em\u2003space\u3000ideo \u200b",
+        # Unicode upper case, some of it lowering to two chars
+        "ÀÉÎ ΣΑΣ İSTANBUL ǅ ẞ Ωmega",
+        # 30 tokens, a multiple of every w below; then 31
+        words, words + " extra",
+        "one",
+    ]
+    d = docs(spark, list(enumerate(rows)))
+    assert_chunkers_agree(d, (1, 2, 3, 10, 30))
+    got = {r["doc_id"]: r["lines"] for r in d.select(
+        "doc_id", chunk_lines_expr(F.col("text"), 3).alias("lines")
+    ).collect()}
+    assert got[0] == got[1] == got[2] == got[3] == []
+    assert got[4] == ["lead and trail"]
+    assert got[5] == ["vt split"]
+    assert len(got[8]) == 10
+
+
+def test_chunk_lines_equal_reference_form_on_perfbench_corpus(spark):
+    from pysparkdedup.corpus import pages_and_truth
+
+    pages, _ = pages_and_truth(spark, 4000, 42)
+    d = pages.select(F.col("url").alias("doc_id"), "text")
+    assert_chunkers_agree(d, (1, 10))
+
+
+@pytest.mark.parametrize("bad", [0, -3])
+def test_chunk_lines_reject_tokens_per_line_below_one(spark, bad):
+    from pysparkdedup.curate import curate_pages
+    from pysparkdedup.repetition import with_chunk_lines
+
+    d = docs(spark, [(1, "a b c")])
+    with pytest.raises(ValueError, match="tokens_per_line"):
+        chunk_lines_expr(F.col("text"), bad)
+    with pytest.raises(ValueError, match="tokens_per_line"):
+        with_chunk_lines(d, bad)
+    pages = d.withColumnRenamed("doc_id", "url")
+    for mode in ("chunk", "auto"):
+        with pytest.raises(ValueError, match="tokens_per_line"):
+            curate_pages(pages, boilerplate_min_df=2, line_mode=mode,
+                         tokens_per_line=bad)
 
 
 def with_lines(spark, rows):

@@ -22,10 +22,10 @@ column rides exactly one id-keyed rebuild join, never an aggregation.
 
 The costliest per-row steps are codegen'd JVM expressions, not lambdas:
 pseudo-lines are two linear regexes (``repetition.chunk_lines_expr``),
-each PII regex runs only on rows holding the literal it needs
-(``pii.PII_GATES``), and the boilerplate document frequency counts each
-document's distinct lines, exploded from its own row, so its only shuffle
-is the one on the line.
+the email and phone regexes run only on rows holding the literal they
+need (``pii.PII_GATES``), and the boilerplate document frequency counts
+each document's distinct lines, exploded from its own row, so its only
+shuffle is the one on the line.
 
 Line units are selectable (``line_mode``): ``"newline"`` splits on real
 ``'\\n'`` — the right choice for web text, and LOSSLESS for documents that
@@ -47,10 +47,10 @@ newline-split web corpus is one shared "value" that keep-first dedup
 would collapse corpus-wide, flattening the paragraph structure of
 essentially every multi-paragraph document. The exemption lives here,
 not in the shared primitive: curate filters blank lines out of both
-exploded frames before calling ``line_drops``, and the standalone
-``drop_boilerplate_lines`` / ``dedup_lines_keep_first`` treat them as
-ordinary lines. Chunk pseudo-lines are never blank, so the exemption is a
-no-op in chunk mode.
+``repetition.exploded_lines`` frames before calling ``line_drops``, and
+the standalone ``drop_boilerplate_lines`` / ``dedup_lines_keep_first``
+treat them as ordinary lines. Chunk pseudo-lines are never blank, so the
+exemption is a no-op in chunk mode.
 """
 
 from __future__ import annotations
@@ -62,8 +62,8 @@ from pyspark.sql import functions as F
 from .cache import track
 from .pii import redact_pii
 from .repetition import (
-    chunk_lines_expr, kept_lines, line_drops, repetition_stats,
-    with_chunk_lines)
+    chunk_lines_expr, exploded_lines, kept_lines, line_drops,
+    repetition_stats, with_chunk_lines)
 
 
 def curate_pages(
@@ -173,12 +173,8 @@ def curate_pages(
         # line_drops, so their positions never enter the drop set and the
         # rebuild keeps them unconditionally.
         nonblank = F.col("line").rlike(r"\S")
-        light = lines_src.select(
-            F.col(id_col), F.posexplode("lines").alias("pos", "line")
-        ).filter(nonblank)
-        uniq = lines_src.select(
-            F.col(id_col), F.explode(F.array_distinct("lines")).alias("line")
-        ).filter(nonblank)
+        light, uniq = (
+            f.filter(nonblank) for f in exploded_lines(lines_src, id_col))
         rebuilt = lines_src.join(
             line_drops(light, uniq, id_col, boilerplate_min_df,
                        dedup_paragraphs),

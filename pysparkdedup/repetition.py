@@ -19,7 +19,8 @@ no analog for, but a web-scale corpus pipeline needs alongside dedup:
 
 Both line ops, and the fused line section of ``curate.curate_pages``, are
 one shape — group the exploded lines, decide per line, drop per position —
-and share one primitive: ``line_drops`` computes the per-document drop
+and share one primitive: ``exploded_lines`` builds its two inputs from a
+per-document lines array, ``line_drops`` computes the per-document drop
 positions of either stage or both, and ``kept_lines`` is the
 order-preserving positional filter that applies them. Each caller keeps
 only its own part: the standalone ops their accounting columns, curate its
@@ -289,6 +290,20 @@ def repetition_stats(
         *[F.col(f"{c}_{n}").alias(c) for c in REP_COLS])
 
 
+def exploded_lines(src: DataFrame,
+                   id_col: str) -> tuple[DataFrame, DataFrame]:
+    """``line_drops``' two inputs from an ``(id_col, lines)`` frame:
+    ``light`` = ``(id_col, pos, line)``, one row per line occurrence, and
+    ``uniq`` = ``(id_col, line)``, one row per DISTINCT line of a document
+    (its repeats collapse inside its own row). A caller that exempts lines
+    applies the same filter to both."""
+    light = src.select(
+        F.col(id_col), F.posexplode("lines").alias("pos", "line"))
+    uniq = src.select(
+        F.col(id_col), F.explode(F.array_distinct("lines")).alias("line"))
+    return light, uniq
+
+
 def line_drops(
     light: DataFrame,
     uniq: DataFrame,
@@ -298,11 +313,10 @@ def line_drops(
 ) -> DataFrame:
     """Per-document drop positions of the two corpus line stages.
 
-    ``light`` is an exploded ``(id_col, pos, line)`` frame and ``uniq`` the
-    ``(id_col, line)`` frame of each document's DISTINCT lines
-    (``explode(array_distinct(lines))``), with the same lines left out as
-    in ``light``. Returns one ``(id_col, _drop)`` row per document that
-    loses a line, ``_drop`` the set of its dropped positions:
+    ``light`` and ``uniq`` are the two frames of ``exploded_lines``, with
+    the same lines left out of both. Returns one ``(id_col, _drop)`` row
+    per document that loses a line, ``_drop`` the set of its dropped
+    positions:
     - ``min_df > 0`` (CCNet boilerplate): every occurrence of a line held
       by at least ``min_df`` DISTINCT documents;
     - ``keep_first`` (Dolma paragraph dedup): among the lines that survive
@@ -374,10 +388,7 @@ def _drop_lines(df: DataFrame, lines_col: str, id_col: str,
     src = track(
         df.select(F.col(id_col), F.col(lines_col).alias("lines"))
         .persist(StorageLevel.MEMORY_AND_DISK))
-    light = src.select(
-        F.col(id_col), F.posexplode("lines").alias("pos", "line"))
-    uniq = src.select(
-        F.col(id_col), F.explode(F.array_distinct("lines")).alias("line"))
+    light, uniq = exploded_lines(src, id_col)
     drops = line_drops(light, uniq, id_col, min_df=min_df,
                        keep_first=keep_first)
     return src.select(
